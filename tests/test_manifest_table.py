@@ -2354,12 +2354,15 @@ _cdc_changes = st.lists(
     ],
 )
 @given(changes=_cdc_changes)
-def test_apply_cdc_batch_fold_property(spark, tmp_path_factory, changes):
+@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
+def test_apply_cdc_batch_fold_property(
+    spark, tmp_path_factory, mode, changes
+):
     """Model-based CDC invariant: for ANY changelog batch over a small
     key space (arbitrary interleavings of insert/update/delete per
     key), applying it with apply_cdc_batch equals the pure-Python
     fold 'last change per key wins; D removes, I/U upserts' over the
-    base state — in exactly one commit."""
+    base state — in exactly one commit, in either merge mode."""
     from yc_yq_airflow_etl_spark.streaming.manifest_sink import apply_cdc_batch
 
     tmp_path = tmp_path_factory.mktemp("cdcprop")
@@ -2374,7 +2377,9 @@ def test_apply_cdc_batch_fold_property(spark, tmp_path_factory, changes):
     batch = spark.createDataFrame(
         rows, "id long, v long, seq long, op string"
     )
-    assert apply_cdc_batch(mt, batch, 1, key="id", order_col="seq") is True
+    assert apply_cdc_batch(
+        mt, batch, 1, key="id", order_col="seq", mode=mode
+    ) is True
     assert mt.current_version(spark) == v0 + 1
 
     model = {i: 2 * i for i in range(base_n)}
@@ -2388,6 +2393,181 @@ def test_apply_cdc_batch_fold_property(spark, tmp_path_factory, changes):
             model[k] = v
     got = {r.id: r.v for r in mt.read(spark).collect()}
     assert got == model, (changes, got, model)
+
+
+def _persisted_rdd_ids(spark) -> set[int]:
+    return {
+        int(i)
+        for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
+    }
+
+
+@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
+def test_cdc_sinks_leave_no_persisted_rdds(spark, tmp_path, mode):
+    """Every materialization a CDC micro-batch makes (the collapsed
+    batch, merge's cached upserts, merge-on-read's dead-position set)
+    is freed before the call returns — on success, on the tie and
+    NULL-op rejections, and when merge itself raises. A leak here
+    grows executor storage by one batch per trigger until JVM GC."""
+    from yc_yq_airflow_etl_spark.streaming.manifest_sink import (
+        apply_cdc_batch,
+        upsert_batch,
+    )
+
+    t = ManifestTable(str(tmp_path / "cdc"), stat_cols=("id",))
+    t.overwrite(_df(spark, 0, 5).coalesce(1))
+    u = ManifestTable(str(tmp_path / "ups"), stat_cols=("id",))
+    u.overwrite(
+        spark.createDataFrame(
+            [(i, 0, 0) for i in range(5)], "id long, v long, seq long"
+        )
+    )
+    schema = "id long, v long, seq long, op string"
+    before = _persisted_rdd_ids(spark)
+
+    def leaked() -> set[int]:
+        return _persisted_rdd_ids(spark) - before
+
+    batch = spark.createDataFrame(
+        [(1, 111, 1, "U"), (2, 0, 1, "D"), (9, 900, 1, "I")], schema
+    )
+    assert apply_cdc_batch(t, batch, 1, "id", "seq", mode=mode)
+    assert leaked() == set()
+    assert upsert_batch(u, batch.drop("op"), 1, "id", "seq", mode=mode)
+    assert leaked() == set()
+
+    tied = spark.createDataFrame([(3, 1, 4, "U"), (3, 2, 4, "U")], schema)
+    with pytest.raises(ValueError, match="tied"):
+        apply_cdc_batch(t, tied, 2, "id", "seq", mode=mode)
+    assert leaked() == set()
+    null_op = spark.createDataFrame([(3, 1, 4, "U"), (4, 2, 4, None)], schema)
+    with pytest.raises(ValueError, match="NULL 'op'"):
+        apply_cdc_batch(t, null_op, 2, "id", "seq", mode=mode)
+    assert leaked() == set()
+    # the collapse passed; merge rejects the batch (seq is not a table
+    # column) — the collapsed batch must still be freed
+    with pytest.raises(ValueError, match="unknown columns"):
+        upsert_batch(t, batch.drop("op"), 2, "id", "seq", mode=mode)
+    assert leaked() == set()
+    assert t.last_batch_id(spark) == 1
+
+
+def _tie_rejected(spark, rows) -> bool:
+    """Whether the last-change collapse rejects ``rows`` of
+    ``(id, seq)`` as tied."""
+    from yc_yq_airflow_etl_spark.streaming.manifest_sink import (
+        _collapse_last_change,
+    )
+
+    batch = spark.createDataFrame(rows, "id long, seq long")
+    try:
+        with _collapse_last_change(batch, 1, "id", "seq"):
+            return False
+    except ValueError as e:
+        assert "tied" in str(e)
+        return True
+
+
+@pytest.mark.parametrize(
+    "rows, rejected",
+    [
+        ([(1, 3), (1, 1), (1, 1)], True),  # tie below the last change
+        ([(1, None), (1, None), (1, 2)], True),  # groupBy groups NULLs
+        ([(1, None), (1, 2), (2, None)], False),  # one NULL seq per key
+        ([(None, 1), (None, 1)], True),  # NULL keys group together
+        ([(None, 1), (None, 2), (1, 1)], False),
+    ],
+    ids=["below-top", "two-null-seqs", "one-null-seq", "null-key-tie",
+         "null-key-distinct"],
+)
+def test_cdc_tie_rule_cases(spark, rows, rejected):
+    """The collapse's tie flag (a row past its key's first, with the
+    same order value as its predecessor in the window's sort) rejects
+    exactly the batches where some ``(key, order_col)`` pair occurs
+    more than once — NULLs in either column included, as a groupBy
+    counts them."""
+    assert _tie_rejected(spark, rows) is rejected
+
+
+_tie_rows = st.lists(
+    st.tuples(
+        st.one_of(st.none(), st.integers(min_value=0, max_value=2)),
+        st.one_of(st.none(), st.integers(min_value=0, max_value=3)),
+    ),
+    min_size=0,
+    max_size=8,
+)
+
+
+@settings(
+    max_examples=20,
+    deadline=None,
+    suppress_health_check=[
+        HealthCheck.too_slow,
+        HealthCheck.function_scoped_fixture,
+    ],
+)
+@given(rows=_tie_rows)
+def test_cdc_tie_rule_matches_groupby_model(spark, rows):
+    """Model-based parity: the window tie flag rejects a batch iff
+    ``groupBy(key, order_col).count() > 1`` for some group (the rule
+    it replaced), over random batches with NULL keys and seqs."""
+    model = any(n > 1 for n in Counter(rows).values())
+    assert _tie_rejected(spark, rows) is model, rows
+
+
+def test_cdc_merge_on_read_batch_appends_one_file(spark, tmp_path):
+    """A ~1,000-change merge-on-read micro-batch under the package's
+    default shuffle partitions lands as ONE data file (the collapsed
+    batch keeps AQE's coalesced partitioning, not one file per shuffle
+    partition), so two batches on a 20,000-row table stay far below
+    maybe_compact's small-file threshold."""
+    from yc_yq_airflow_etl_spark.session import DEFAULT_SHUFFLE_PARTITIONS
+    from yc_yq_airflow_etl_spark.streaming.manifest_sink import apply_cdc_batch
+
+    t = ManifestTable(str(tmp_path / "fan"), stat_cols=("id",))
+    t.overwrite(_df(spark, 0, 20_000).repartition(8))
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS)
+    )
+    try:
+        for b in (1, 2):
+            # 400 keys updated twice (last change wins), 100 deleted,
+            # 100 inserted: 1,000 change rows, 500 upserted keys
+            batch = (
+                spark.range(400)
+                .select((F.col("id") * 37 + b).alias("id"))
+                .crossJoin(spark.range(1, 3).withColumnRenamed("id", "seq"))
+                .select("id", (F.col("id") * b).alias("v"), "seq",
+                        F.lit("U").alias("op"))
+                .unionByName(
+                    spark.range(100).select(
+                        (F.col("id") * 29 + 15_000 + b).alias("id"),
+                        F.lit(0).cast("long").alias("v"),
+                        F.lit(1).cast("long").alias("seq"),
+                        F.lit("D").alias("op"),
+                    )
+                )
+                .unionByName(
+                    spark.range(100).select(
+                        (F.col("id") + 20_000 + 100 * b).alias("id"),
+                        F.col("id").alias("v"),
+                        F.lit(1).cast("long").alias("seq"),
+                        F.lit("I").alias("op"),
+                    )
+                )
+            )
+            files0 = set(t._manifest(spark, t.current_version(spark))["files"])
+            assert apply_cdc_batch(
+                t, batch, b, "id", "seq", mode="merge-on-read"
+            )
+            m = t._manifest(spark, t.current_version(spark))
+            assert len(set(m["files"]) - files0) == 1
+            assert t.maybe_compact(spark) is None
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert t.read(spark).count() == 20_000  # 200 deleted, 200 inserted
 
 
 # op encoding for the CDF fold property: each element of the list is

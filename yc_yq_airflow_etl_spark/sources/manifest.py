@@ -2300,13 +2300,17 @@ class ManifestTable:
         mode: str = "copy-on-write",
     ) -> int:
         """Entry point: persists the batch for the duration of the
-        merge, then runs :meth:`_merge_impl`. The batch PLAN is
-        evaluated up to three times inside (touched-file probe,
-        carry-forward drop keys, rewrite/append union) — for a CDC
-        batch derived by filtering a big table, that is three full
-        source scans; a micro-batch is O(batch) by contract, so
-        caching it is always cheap relative to re-deriving it (guide
-        §5: cache exactly what is re-used and expensive to recompute).
+        merge, then runs :meth:`_merge_impl`. Inside, ``updates`` is
+        read up to three times (touched-file probe, carry-forward drop
+        keys, rewrite/append union) and ``delete_keys`` twice (probe,
+        drop keys); caching ``updates`` keeps a batch derived by
+        filtering a big table from costing three source scans — a
+        micro-batch is O(batch) by contract, so caching it is always
+        cheap relative to re-deriving it (guide §5: cache exactly what
+        is re-used and expensive to recompute). ``delete_keys`` is NOT
+        cached here: a caller whose delete keys are expensive to
+        derive materializes them first, as the CDC sinks do (both
+        clauses come from one checkpointed collapse of the batch).
         A batch the caller already persisted is left alone (persist
         levels cannot be changed in place) and never unpersisted."""
         from pyspark.storagelevel import StorageLevel
@@ -2735,6 +2739,11 @@ class ManifestTable:
         is not)."""
         from pyspark.sql import functions as F
 
+        from ..operators.checkpoints import (
+            checkpointed_rdd_id,
+            free_checkpoint,
+        )
+
         # schema already validated by merge() (unknown columns raise;
         # missing columns only pass on an evolved table) — the same
         # contract as copy-on-write, so the two modes stay
@@ -2752,26 +2761,31 @@ class ManifestTable:
             )
             pos = self._live_positions(pos, m, touched)
             # one find scan: checkpoint the (small) dead-position set
-            # so the count and the part write don't re-run the probe
+            # so the count and the part write don't re-run the probe;
+            # freed once the parts are written (or the write fails)
             dead = (
                 pos.join(drop_keys, on=key, how="left_semi")
                 .select("__dv_f", "__dv_pos")
                 .localCheckpoint()
             )
-            per_file = {
-                r["__dv_f"]: int(r["n"])
-                for r in dead.groupBy("__dv_f")
-                .agg(F.count("*").alias("n"))
-                .collect()  # bounded by file count — metadata-scale
-            }
-            if per_file:
-                parts, _, _n = self._write_files(
-                    dead.select(
-                        F.col("__dv_f").alias("_f"),
-                        F.col("__dv_pos").alias("_pos"),
-                    ),
-                    subdir="deletes",
-                )
+            dead_rdd = checkpointed_rdd_id(dead)
+            try:
+                per_file = {
+                    r["__dv_f"]: int(r["n"])
+                    for r in dead.groupBy("__dv_f")
+                    .agg(F.count("*").alias("n"))
+                    .collect()  # bounded by file count — metadata-scale
+                }
+                if per_file:
+                    parts, _, _n = self._write_files(
+                        dead.select(
+                            F.col("__dv_f").alias("_f"),
+                            F.col("__dv_pos").alias("_pos"),
+                        ),
+                        subdir="deletes",
+                    )
+            finally:
+                free_checkpoint(spark, dead_rdd)
         n_dead = sum(per_file.values())
         if not per_file and n_updates == 0:
             return base  # empty batch: nothing to commit

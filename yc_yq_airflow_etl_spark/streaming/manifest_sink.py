@@ -19,10 +19,14 @@ engine's own primitives.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from .._reserved import reserve_tags
+from ..operators.checkpoints import checkpointed_rdd_id, free_checkpoint
 from ..sources.manifest import ManifestTable
 
 
@@ -52,61 +56,83 @@ def stream_to_manifest_table(
     )
 
 
+@contextmanager
 def _collapse_last_change(
     batch_df: DataFrame,
     batch_id: int,
     key: str,
     order_col: str,
     op_col: str | None = None,
-) -> DataFrame:
+) -> Iterator[DataFrame]:
     """Shared CDC-batch preparation for :func:`upsert_batch` and
-    :func:`apply_cdc_batch`: validate, then collapse the batch to each
-    key's LAST change by ``order_col``. Validation is ONE aggregation
-    job on the hot streaming path (not one per check): tie detection
-    — tied ``(key, order_col)`` rows make the collapse
-    nondeterministic — and, when ``op_col`` is given, the NULL-op
-    guard (a NULL op would pass neither the delete filter nor its
-    negation: the change would vanish silently while the batch still
-    advanced the replay high-water mark). One implementation so the
-    two sinks can never drift."""
-    from pyspark.sql import Window
+    :func:`apply_cdc_batch`: collapse the batch to each key's LAST
+    change by ``order_col`` and validate it, yielding the collapsed
+    batch MATERIALIZED ONCE (``localCheckpoint``) and freeing it when
+    the block exits, normally or by exception.
+
+    One materialization does everything: the ``row_number`` window
+    that picks the last change also flags ties — equal ``order_col``
+    values sit next to each other in the window's sort, so a row past
+    the first whose predecessor has the same ``order_col`` (NULL-safe,
+    as groupBy groups NULLs) is a tied ``(key, order_col)`` pair, which
+    would make the collapse nondeterministic. When ``op_col`` is given,
+    the same pass counts NULL ops (a NULL op would pass neither the
+    delete filter nor its negation: the change would vanish silently
+    while the batch still advanced the replay high-water mark). Both
+    counts ride the materialization through ``observe`` on the rows
+    BEFORE the last-change filter, and both rules raise before
+    anything is staged.
+
+    Every later read of the batch (upserts, delete keys, merge's
+    probe and write) scans the materialization instead of re-running
+    the window, and the materialization keeps AQE's coalesced
+    partitioning — a small micro-batch lands as one file, not one per
+    configured shuffle partition. One implementation so the two sinks
+    can never drift."""
+    from pyspark.sql import Observation, Window
     from pyspark.sql import functions as F
 
-    # the collapse's row-number tag must not clash a data column
-    reserve_tags("last-change collapse", batch_df.columns, "_rn")
+    # the collapse's tags must not clash a data column
+    reserve_tags("last-change collapse", batch_df.columns, "_rn", "_tie")
+    w = Window.partitionBy(key).orderBy(F.col(order_col).desc())
     null_ops = (
         F.sum(F.col(op_col).isNull().cast("long"))
         if op_col is not None
         else F.lit(0)
     )
-    chk = (
-        batch_df.groupBy(key, order_col)
-        .agg(
-            F.count(F.lit(1)).alias("_n"),
-            null_ops.alias("_null_ops"),
-        )
-        .agg(
-            F.max("_n").alias("max_n"),
-            F.sum("_null_ops").alias("null_ops"),
-        )
-        .first()
-    )
-    if chk is not None and int(chk["max_n"] or 0) > 1:
-        raise ValueError(
-            f"micro-batch {batch_id} has tied ({key}, {order_col}) rows — "
-            "last-change collapse would be nondeterministic"
-        )
-    if chk is not None and int(chk["null_ops"] or 0) > 0:
-        raise ValueError(
-            f"micro-batch {batch_id} has rows with NULL {op_col!r} — "
-            "every change must carry an operation"
-        )
-    w = Window.partitionBy(key).orderBy(F.col(order_col).desc())
-    return (
+    obs = Observation()
+    last = (
         batch_df.withColumn("_rn", F.row_number().over(w))
+        .withColumn(
+            "_tie",
+            (F.col("_rn") > 1)
+            & F.lag(order_col).over(w).eqNullSafe(F.col(order_col)),
+        )
+        .observe(
+            obs,
+            F.max(F.col("_tie").cast("int")).alias("ties"),
+            null_ops.alias("null_ops"),
+        )
         .filter(F.col("_rn") == 1)
-        .drop("_rn")
+        .drop("_rn", "_tie")
+        .localCheckpoint()
     )
+    rdd_id = checkpointed_rdd_id(last)
+    try:
+        chk = obs.get
+        if int(chk["ties"] or 0) > 0:
+            raise ValueError(
+                f"micro-batch {batch_id} has tied ({key}, {order_col}) rows — "
+                "last-change collapse would be nondeterministic"
+            )
+        if int(chk["null_ops"] or 0) > 0:
+            raise ValueError(
+                f"micro-batch {batch_id} has rows with NULL {op_col!r} — "
+                "every change must carry an operation"
+            )
+        yield last
+    finally:
+        free_checkpoint(batch_df.sparkSession, rdd_id)
 
 
 def upsert_batch(
@@ -136,8 +162,8 @@ def upsert_batch(
     spark = batch_df.sparkSession
     if batch_id <= table.last_batch_id(spark):
         return False
-    last = _collapse_last_change(batch_df, batch_id, key, order_col)
-    table.merge(last, key, batch_id=batch_id, mode=mode)
+    with _collapse_last_change(batch_df, batch_id, key, order_col) as last:
+        table.merge(last, key, batch_id=batch_id, mode=mode)
     return True
 
 
@@ -178,16 +204,16 @@ def apply_cdc_batch(
     spark = batch_df.sparkSession
     if batch_id <= table.last_batch_id(spark):
         return False
-    last = _collapse_last_change(
+    with _collapse_last_change(
         batch_df, batch_id, key, order_col, op_col=op_col
-    )
-    deletes = last.filter(F.col(op_col) == delete_value).select(key)
-    upserts = (
-        last.filter(F.col(op_col) != delete_value).drop(op_col, order_col)
-    )
-    table.merge(
-        upserts, key, batch_id=batch_id, delete_keys=deletes, mode=mode
-    )
+    ) as last:
+        deletes = last.filter(F.col(op_col) == delete_value).select(key)
+        upserts = (
+            last.filter(F.col(op_col) != delete_value).drop(op_col, order_col)
+        )
+        table.merge(
+            upserts, key, batch_id=batch_id, delete_keys=deletes, mode=mode
+        )
     return True
 
 

@@ -119,6 +119,40 @@ def test_corruption_blocks_retirement(spark, payments, tmp_path):
     assert pipe.window()[0].year == 2020
 
 
+def _persisted_rdd_ids(spark) -> set[int]:
+    return {
+        int(i)
+        for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
+    }
+
+
+def test_reconcile_year_job_budget(spark, tmp_path):
+    """One reconciliation is at most 3 jobs: the lake read's schema
+    inference plus exclusion_diff_count's grouped shuffle and result
+    job (the NULL-key counts and the final sum ride those two). It
+    leaves no persisted RDD behind."""
+    from datetime import datetime
+
+    small = generate_payments(spark, minutes=3 * 1440)
+    lake = LakeTable(os.path.join(str(tmp_path), "lake"))
+    lo, hi = datetime(2020, 1, 1), datetime(2021, 1, 1)
+    load_year(small, lake, lo, hi)
+    assert reconcile_year(spark, small, lake, lo, hi) == 0  # warm-up
+    before = _persisted_rdd_ids(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("reconcile_year_jobs", "reconcile_year jobs")
+    try:
+        diff = reconcile_year(spark, small, lake, lo, hi)
+        n_jobs = len(
+            sc.statusTracker().getJobIdsForGroup("reconcile_year_jobs")
+        )
+    finally:
+        sc.setJobGroup("", "")
+    assert diff == 0
+    assert n_jobs <= 3, f"reconcile_year ran {n_jobs} jobs"
+    assert _persisted_rdd_ids(spark) == before
+
+
 def test_rerun_idempotent(spark, payments, tmp_path):
     retired: list[int] = []
     pipe = _pipeline(spark, payments, str(tmp_path), retired)

@@ -127,6 +127,81 @@ def test_exclusion_diff_count_equals_join_count(spark, left, right):
     assert exclusion_diff_count(ldf, rdf, ["k", "v"]) == expected
 
 
+# NaN and signed zeros collide on purpose: Spark groups and joins NaN
+# with NaN and -0.0 with 0.0, and both formulations must agree on it
+nan_rows_strategy = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=2),
+        st.one_of(
+            st.none(),
+            st.sampled_from([float("nan"), 0.0, -0.0, 1.5]),
+            st.floats(width=32),
+        ),
+    ),
+    min_size=0,
+    max_size=25,
+)
+
+
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow,
+                                 HealthCheck.function_scoped_fixture])
+@given(left=nan_rows_strategy, right=nan_rows_strategy)
+def test_exclusion_diff_count_equals_join_count_with_nan(spark, left, right):
+    """Property: the folded NULL path (NULL-keyed groups counted in
+    the same aggregate as the matched keys) equals
+    exclusion_join(...).count() with NaN, ±Inf and signed zeros in the
+    float key column."""
+    from yc_yq_airflow_etl_spark.operators.joins import exclusion_diff_count
+
+    schema = "k int, v float"
+    ldf = spark.createDataFrame(left, schema)
+    rdf = spark.createDataFrame(right, schema)
+    expected = exclusion_join(ldf, rdf, ["k", "v"]).count()
+    assert exclusion_diff_count(ldf, rdf, ["k", "v"]) == expected
+
+
+@pytest.mark.parametrize(
+    "left, right, expected",
+    [
+        pytest.param([], [], 0, id="both-empty"),
+        pytest.param(
+            [(None, 1.0), (None, None), (2, None)], [(None, None)], 4,
+            id="all-keys-null",
+        ),
+        # a NULL-keyed row never matches, not even its own copy
+        pytest.param([(1, None)], [(1, None)], 2, id="same-null-row-both-sides"),
+        # multiset rule: a key present on both sides drops entirely,
+        # whatever the multiplicities
+        pytest.param([(1, 2.0), (1, 2.0)], [(1, 2.0)], 0, id="dup-2-vs-1"),
+        pytest.param([(1, float("nan"))], [(1, float("nan"))], 0, id="nan-matches-nan"),
+    ],
+)
+def test_exclusion_diff_count_folded_null_cases(spark, left, right, expected):
+    from yc_yq_airflow_etl_spark.operators.joins import exclusion_diff_count
+
+    schema = "k int, v float"
+    ldf = spark.createDataFrame(left, schema)
+    rdf = spark.createDataFrame(right, schema)
+    assert exclusion_join(ldf, rdf, ["k", "v"]).count() == expected
+    assert exclusion_diff_count(ldf, rdf, ["k", "v"]) == expected
+
+
+def test_exclusion_diff_count_one_side_empty_after_filter(spark):
+    """An input whose every row is filtered away still aggregates
+    (no hang on the observed sum): the count is the other side's row
+    count, NULL-keyed rows included."""
+    from yc_yq_airflow_etl_spark.operators.joins import exclusion_diff_count
+
+    schema = "k int, v float"
+    rows = [(1, 1.0), (2, None), (None, 3.0)]
+    full = spark.createDataFrame(rows, schema)
+    gone = full.filter(F.col("k") > 100)
+    for ldf, rdf in ((full, gone), (gone, full)):
+        assert exclusion_join(ldf, rdf, ["k", "v"]).count() == 3
+        assert exclusion_diff_count(ldf, rdf, ["k", "v"]) == 3
+
+
 @settings(max_examples=10, deadline=None,
           suppress_health_check=[HealthCheck.too_slow,
                                  HealthCheck.function_scoped_fixture])

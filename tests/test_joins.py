@@ -270,6 +270,55 @@ def test_exclusion_join_strategies_agree_under_hot_keys(spark):
     assert exclusion_diff_count(left, right, ["k"]) == 10_005
 
 
+def _persisted_rdd_ids(spark) -> set[int]:
+    return {
+        int(i)
+        for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
+    }
+
+
+def test_exclusion_diff_count_two_jobs_nothing_persisted(spark):
+    """The count is one grouped shuffle (map job) plus one result job
+    carrying the observed sum — the NULL-keyed rows ride the same
+    aggregate instead of a scan per side, and the global sum adds no
+    second exchange. Nothing stays persisted, on success or when a
+    key column is missing."""
+    import pytest as _pytest
+    from pyspark.errors import AnalysisException
+
+    from yc_yq_airflow_etl_spark.operators.joins import (
+        exclusion_diff_count,
+        exclusion_join,
+    )
+
+    left = spark.range(2_000).selectExpr(
+        "id % 500 AS k", "IF(id % 97 = 0, NULL, CAST(id % 7 AS DOUBLE)) AS v"
+    )
+    right = spark.range(1_500).selectExpr(
+        "id % 400 AS k", "IF(id % 89 = 0, NULL, CAST(id % 7 AS DOUBLE)) AS v"
+    )
+    expected = exclusion_join(left, right, ["k", "v"]).count()
+    before = _persisted_rdd_ids(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("exclusion_diff_count_jobs", "exclusion_diff_count jobs")
+    try:
+        got = exclusion_diff_count(left, right, ["k", "v"])
+        n_jobs = len(
+            sc.statusTracker().getJobIdsForGroup("exclusion_diff_count_jobs")
+        )
+    finally:
+        sc.setJobGroup("", "")
+    assert got == expected > 0
+    assert n_jobs <= 2, f"exclusion_diff_count ran {n_jobs} jobs"
+    assert _persisted_rdd_ids(spark) == before
+
+    with _pytest.raises(AnalysisException):
+        exclusion_diff_count(left, right.drop("v"), ["k", "v"])
+    with _pytest.raises(AnalysisException):
+        exclusion_diff_count(left.drop("v"), right, ["k", "v"])
+    assert _persisted_rdd_ids(spark) == before
+
+
 def test_salted_join_matches_plain_join_under_skew(spark):
     """Multiset equivalence of the salted formulation vs the plain
     join, on a fixture with a 10⁴-duplicate hot key — inner and left,
@@ -769,6 +818,7 @@ def test_reserved_tag_guard_across_join_operators(spark):
 
     from yc_yq_airflow_etl_spark.operators.joins import (
         asof_join,
+        exclusion_diff_count,
         exclusion_join,
         interval_overlap_join,
         nearest_join,
@@ -784,6 +834,10 @@ def test_reserved_tag_guard_across_join_operators(spark):
             tl.withColumn("_xj_side", F.lit(1)), tl, on=["k"],
             strategy="union",
         )
+    for tag in ("_side", "_nk"):
+        keyed = tl.withColumnRenamed("t", tag)
+        with _pytest.raises(ValueError, match="reserved"):
+            exclusion_diff_count(keyed, keyed, on=["k", tag])
     with _pytest.raises(ValueError, match="reserved"):
         asof_join(
             tl.withColumn("_carry", F.lit(1)), tr, on_time="t", by=["k"]

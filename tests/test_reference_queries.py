@@ -28,6 +28,28 @@ def test_federation_counts_partition_totals(spark, testdata):
     assert years == sorted(years)
 
 
+def test_federation_counts_sorted_by_year_then_source(spark):
+    """The single-partition sort keeps the total (dyear, src) order
+    over an input spanning several years and both sources, with the
+    source rows arriving out of order."""
+    from datetime import datetime
+
+    hot = spark.createDataFrame(
+        [(i, datetime(2024 - i % 4, 1 + i % 12, 1)) for i in range(40)],
+        "id long, payment_date timestamp",
+    )
+    cold = spark.createDataFrame(
+        [(100 + i, datetime(2023 - i % 5, 6, 1)) for i in range(50)],
+        "id long, payment_date timestamp",
+    )
+    rows = federated_counts_by_year(hot.repartition(7), cold.repartition(5)).collect()
+    got = [(r.dyear, r.src) for r in rows]
+    assert got == sorted(got)
+    assert len(got) == len(set(got)) == 4 + 5
+    assert {s for _, s in got} == {"pg", "s3"}
+    assert sum(r.cnt for r in rows) == 90
+
+
 def test_exclusion_join_identical_sides_empty(spark, testdata):
     o = testdata["orders"].select("o_orderkey", "o_custkey", "o_totalprice")
     assert exclusion_join(o, o, list(o.columns)).count() == 0

@@ -173,45 +173,57 @@ def exclusion_join(
 def exclusion_diff_count(
     left: DataFrame, right: DataFrame, on: Sequence[str]
 ) -> int:
-    """``exclusion_join(left, right, on).count()`` in ONE shuffle.
+    """``exclusion_join(left, right, on).count()`` in one grouped
+    shuffle and one result job.
 
     The reconciliation check (yq_dag.py:93) only needs the count, and
     the anti-join formulation shuffles both inputs into two joins. A
     tagged union + groupBy over the key computes per-key multiset
     sides in a single exchange: keys present on only one side
-    contribute that side's multiplicity. NULL-keyed rows never match
-    anything in SQL join semantics, so they are counted per-side
-    before the grouped pass (grouping would wrongly unify them).
+    contribute that side's multiplicity.
 
-    At 100 TB this is the difference between one wide shuffle of the
-    union and two join shuffles — and partial aggregation compresses
-    each map task's output to its distinct keys before the exchange.
+    NULL-keyed rows are counted in the same aggregate. They never
+    match anything under SQL join semantics, so the grouping key
+    carries a ``_nk`` flag (any key column NULL) and a flagged group
+    contributes ``_nl + _nr`` — all of its rows, from both sides —
+    instead of the one-sided multiplicity. Partial aggregation
+    absorbs an all-NULL hot group map-side like any other key.
+
+    The global sum rides the result job through ``observe`` on the
+    per-key aggregate, driven by a ``noop`` write: no second exchange
+    for a global aggregate and no ``.first()`` job. Nothing is
+    persisted. At 100 TB this is one wide shuffle of the key-only
+    union, compressed by partial aggregation to each map task's
+    distinct keys before the exchange.
     """
+    from pyspark.sql import Observation
+
     keys = list(on)
-    _reserve("exclusion_diff_count", left.select(*keys), "_side", "_nl", "_nr")
+    _reserve(
+        "exclusion_diff_count", left.select(*keys),
+        "_side", "_nk", "_nl", "_nr",
+    )
     null_key = None
     for k in keys:
         c = F.col(k).isNull()
         null_key = c if null_key is None else (null_key | c)
 
-    l = left.select(*keys)
-    r = right.select(*keys)
-    null_count = l.filter(null_key).count() + r.filter(null_key).count()
-
-    u = l.filter(~null_key).withColumn("_side", F.lit(0)).unionByName(
-        r.filter(~null_key).withColumn("_side", F.lit(1))
+    u = left.select(*keys).withColumn("_side", F.lit(0)).unionByName(
+        right.select(*keys).withColumn("_side", F.lit(1))
     )
-    per_key = u.groupBy(*keys).agg(
+    per_key = u.groupBy(*keys, null_key.alias("_nk")).agg(
         F.sum(F.when(F.col("_side") == 0, 1).otherwise(0)).alias("_nl"),
         F.sum(F.when(F.col("_side") == 1, 1).otherwise(0)).alias("_nr"),
     )
-    row = per_key.select(
-        F.sum(
-            F.when(F.col("_nr") == 0, F.col("_nl")).otherwise(0)
-            + F.when(F.col("_nl") == 0, F.col("_nr")).otherwise(0)
-        ).alias("d")
-    ).first()
-    return int(row[0] or 0) + null_count
+    unmatched = F.when(F.col("_nk"), F.col("_nl") + F.col("_nr")).otherwise(
+        F.when(F.col("_nr") == 0, F.col("_nl")).otherwise(0)
+        + F.when(F.col("_nl") == 0, F.col("_nr")).otherwise(0)
+    )
+    obs = Observation()
+    per_key.observe(obs, F.sum(unmatched).alias("d")).write.format(
+        "noop"
+    ).mode("overwrite").save()
+    return int(obs.get["d"] or 0)
 
 
 def range_join(

@@ -16,8 +16,10 @@ Covers S1, S2, P1-P3, U1, A2, F2, F5, O1 of SURVEY.md §2 in one plan.
 Scale notes: the union is projection-first (2 columns enter the
 shuffle, not 8-9 — this is the 25.96 MB column-pruning behavior the
 reference's engine showed), the aggregate is partial+final
-(HashAggregate map-side combine), and the final sort is over ≤ #years
-× #sources rows, i.e. negligible.
+(HashAggregate map-side combine), and the final sort is a
+single-partition sort over ≤ #years × #sources rows: the aggregate is
+coalesced to one partition and sorted within it, so the total order
+costs no range exchange (no sampling job, no extra shuffle).
 """
 
 from __future__ import annotations
@@ -69,7 +71,8 @@ def federated_counts_by_year(
             F.count(F.lit(1)).alias("cnt"),
             F.sum("id").cast("long").alias("id_sum"),
         )
-        .orderBy("dyear", "src")
+        .coalesce(1)
+        .sortWithinPartitions("dyear", "src")
     )
 
 

@@ -2926,10 +2926,11 @@ def test_cow_update_recounts_on_legacy_manifest_without_rows(
     spark, tmp_path
 ):
     """A hand-made/legacy manifest lacking a recorded ``rows`` count:
-    _cow_rewrite must recount via _effective_rows (mirroring merge and
-    the MOR engines) instead of defaulting the base to 0 and recording
-    a wrong (here 0, possibly negative) count that all later
-    metadata-only accounting inherits."""
+    the copy-on-write UPDATE must recount via _effective_rows (the
+    row-change core's one accounting formula, shared by every op and
+    mode) instead of defaulting the base to 0 and recording a wrong
+    (here 0, possibly negative) count that all later metadata-only
+    accounting inherits."""
     import json as _json
 
     t = ManifestTable(str(tmp_path / "mt"))
@@ -4494,3 +4495,130 @@ def test_bucket_sets_exclude_null_rows_and_null_probe_guided(
     assert [r.v for r in got] == [6]
     nan_kept = mt.pruned_files_eq(spark, "x", float("nan"))
     assert len(nan_kept) == 1  # only the NaN file's bucket matches
+
+
+def _row_change_fixture(spark, path):
+    """20,000 rows in 8 range-disjoint files, ``k`` stat-tracked."""
+    t = ManifestTable(path, stat_cols=("k",))
+    t.overwrite(
+        spark.range(0, 20_000, numPartitions=8).select(
+            F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+        )
+    )
+    return t
+
+
+def _run_row_change(spark, t, op, mode, rejected=False):
+    if op == "merge":
+        ups = spark.range(19_500, 20_500).select(
+            F.col("id").alias("k"), F.lit(-1).cast("bigint").alias("v")
+        )
+        if rejected:  # duplicate keys
+            ups = ups.unionByName(ups.limit(1))
+        return t.merge(ups, "k", mode=mode)
+    if op == "delete_where":
+        pred = "nope % 50 = 0" if rejected else "k % 50 = 0"
+        return t.delete_where(spark, pred, mode=mode)
+    assignment = "v * 0.5" if rejected else "v + 1"  # double drifts
+    return t.update_where(spark, "k % 50 = 0", {"v": assignment}, mode=mode)
+
+
+# Per-call job ceilings on this fixture, measured when the ceilings
+# were set: a change may lower a count, never raise it.
+_ROW_CHANGE_JOB_CEILING = {
+    ("merge", "copy-on-write"): 9,
+    ("merge", "merge-on-read"): 15,
+    ("delete_where", "copy-on-write"): 10,
+    ("delete_where", "merge-on-read"): 4,
+    ("update_where", "copy-on-write"): 10,
+    ("update_where", "merge-on-read"): 8,
+}
+
+
+@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
+@pytest.mark.parametrize("op", ["merge", "delete_where", "update_where"])
+def test_row_change_frees_materializations_and_keeps_job_budget(
+    spark, tmp_path, op, mode
+):
+    """Every row-level change, in either mode, frees what it
+    materialized before returning — after a commit and after a
+    rejected call — and runs no more Spark jobs than the ceiling."""
+    t = _row_change_fixture(spark, str(tmp_path / "t"))
+    sc = spark.sparkContext
+    before = _persisted_rdd_ids(spark)
+    with pytest.raises(Exception):
+        _run_row_change(spark, t, op, mode, rejected=True)
+    assert _persisted_rdd_ids(spark) == before
+    assert t.current_version(spark) == 0
+
+    group = f"row_change_{op}_{mode}"
+    sc.setJobGroup(group, group)
+    try:
+        v = _run_row_change(spark, t, op, mode)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup("", "")
+    assert v == 1
+    assert _persisted_rdd_ids(spark) == before
+    assert jobs <= _ROW_CHANGE_JOB_CEILING[(op, mode)], jobs
+    want = {
+        "merge": 20_500,
+        "delete_where": 20_000 - 400,
+        "update_where": 20_000,
+    }[op]
+    assert t._manifest(spark, v)["rows"] == want
+    assert t.read(spark).count() == want
+
+
+@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
+def test_update_where_conflicts_with_commit_after_validation(
+    spark, tmp_path, monkeypatch, mode
+):
+    """update_where validates its assignments against the snapshot it
+    resolves first; a commit landing right after that resolution must
+    end the update in ConcurrentWriteError — never a silent update of
+    the newer snapshot the validation did not see."""
+    from yc_yq_airflow_etl_spark.sources.manifest import ConcurrentWriteError
+
+    t = ManifestTable(str(tmp_path / "t"), stat_cols=("id",))
+    t.overwrite(_ranged(spark, 0, 20))
+    orig = ManifestTable.current_version
+    state = {"armed": True}
+
+    def resolve_then_commit(self, spark_):
+        v = orig(self, spark_)
+        if state["armed"]:
+            state["armed"] = False
+            self.append(_ranged(spark, 20, 30))  # lands after the pin
+        return v
+
+    monkeypatch.setattr(ManifestTable, "current_version", resolve_then_commit)
+    with pytest.raises(ConcurrentWriteError):
+        t.update_where(spark, "id < 5", {"v": "v + 1"}, mode=mode)
+    monkeypatch.undo()
+    assert t.current_version(spark) == 1
+    got = {r.id: r.v for r in t.read(spark).collect()}
+    assert len(got) == 30 and got[0] == 0  # the update never landed
+
+
+@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
+def test_cdc_batch_changing_no_row_still_commits_once(spark, tmp_path, mode):
+    """A CDC batch whose net effect changes no row (here: deleting a
+    key the table never held) still lands exactly one commit — the
+    one recording its batch id — so a replay of it is skipped; a
+    second apply of the same batch id commits nothing."""
+    from yc_yq_airflow_etl_spark.streaming.manifest_sink import apply_cdc_batch
+
+    mt = ManifestTable(str(tmp_path / "t"), stat_cols=("id",))
+    mt.overwrite(_df(spark, 0, 6).coalesce(1))
+    batch = spark.createDataFrame(
+        [(9, 0, 0, "D")], "id long, v long, seq long, op string"
+    )
+    assert apply_cdc_batch(mt, batch, 3, "id", "seq", mode=mode) is True
+    assert mt.current_version(spark) == 1
+    m = mt._manifest(spark, 1)
+    assert m["last_batch_id"] == 3 and m["rows"] == 6
+    assert m["files"] == mt._manifest(spark, 0)["files"]
+    assert apply_cdc_batch(mt, batch, 3, "id", "seq", mode=mode) is False
+    assert mt.current_version(spark) == 1
+    assert sorted(r.id for r in mt.read(spark).collect()) == list(range(6))

@@ -144,16 +144,6 @@ class Catalog:
         return name in self._sources
 
 
-def testdata_catalog(sf_dir: str) -> Catalog:
-    """Catalog over the driver-generated testdata directory."""
-    from . import schemas
-
-    cat = Catalog()
-    for name, schema in schemas.TESTDATA_TABLES.items():
-        cat.register(ParquetTable(name, f"{sf_dir}/{name}.parquet", schema))
-    return cat
-
-
 def _events_ts_unit(path: str) -> tuple[str, bool]:
     """(unit, annotated) of the events ``ts`` column, read from ONE
     parquet footer — metadata only, no data scan. The fixture

@@ -59,6 +59,17 @@ def to_uint32(col: Column | str, name: str = "column") -> Column:
     ).otherwise(c)
 
 
+def let(col: Column, f) -> Column:
+    """Expression-level `let`: bind ``col`` ONCE as a lambda variable
+    (1-element ``transform``) so ``f`` may reference it repeatedly at
+    the cost of a single evaluation — Catalyst performs no CSE across
+    higher-order functions (the measured r17 quantize_vec lesson), so
+    a guard or rounding wrapper that mentions a heavy fold twice
+    otherwise executes it twice. Exact: ``transform`` applies ``f``
+    element-wise, so ``let(x, f) ≡ f(x)`` value-for-value."""
+    return F.get(F.transform(F.array(col), f), 0)
+
+
 def round6(col: Column | str) -> Column:
     """IEEE-stable 6-decimal rounding: ``floor(x * 1e6 + 0.5) / 1e6``.
 

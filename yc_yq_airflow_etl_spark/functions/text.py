@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .scalar import let
+
 MOD = 1_000_000_007  # fingerprint modulus: keeps a*31+c inside int64
 
 
@@ -203,24 +205,17 @@ def lang_id(col: Column | str) -> Column:
 
     words = F.array_distinct(tokenize(c))
     # bind `words` once; compute the per-language hit vector from it
-    scores_arr = F.get(
-        F.transform(
-            F.array(words),
-            lambda ws: F.array(
-                *[
-                    F.size(
-                        F.array_intersect(
-                            ws, F.lit(list(STOPWORDS[lang]))
-                        )
-                    )
-                    for lang in LANG_ORDER
-                ]
-            ),
+    scores_arr = let(
+        words,
+        lambda ws: F.array(
+            *[
+                F.size(F.array_intersect(ws, F.lit(list(STOPWORDS[lang]))))
+                for lang in LANG_ORDER
+            ]
         ),
-        0,
     )
     # bind the score vector once; the argmax chain reads elements
-    picked = F.get(F.transform(F.array(scores_arr), _pick), 0)
+    picked = let(scores_arr, _pick)
     return F.when(c.isNotNull(), picked)
 
 

@@ -27,6 +27,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.scalar import let, round6
+
+
 def _to_double(v: Column) -> Column:
     return F.transform(v, lambda x: x.cast("double"))
 
@@ -68,17 +71,6 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return F.when((den > 0) & ~F.isnan(r), r)
 
 
-def _let1(col: Column, f) -> Column:
-    """Expression-level `let`: bind ``col`` ONCE as a lambda variable
-    (1-element ``transform``) so ``f`` may reference it repeatedly at
-    the cost of a single evaluation — Catalyst performs no CSE across
-    higher-order functions (the measured r17 quantize_vec lesson), so
-    a guard or rounding wrapper that mentions a heavy fold twice
-    otherwise executes it twice. Exact: ``transform`` applies ``f``
-    element-wise, so ``_let1(x, f) ≡ f(x)`` value-for-value."""
-    return F.get(F.transform(F.array(col), f), 0)
-
-
 def _scored_cosine(
     a: Column, b: Column, norm_a: Column, norm_b: Column
 ) -> Column:
@@ -102,15 +94,12 @@ def _scored_cosine(
     ANSI raises DIVIDE_BY_ZERO on zero-norm vectors); pinned by
     ``test_topk_join_hoisted_norms_bit_identical`` and the
     ``_query_score`` memoization pins."""
-    return _let1(
+    return let(
         norm_a * norm_b,
-        lambda dn: _let1(
+        lambda dn: let(
             dot(a, b),
-            lambda d: _let1(
-                F.when((dn > 0) & ~F.isnan(d / dn), d / dn),
-                lambda r: F.when(
-                    F.isnan(r) | (F.abs(r) == float("inf")), r
-                ).otherwise(F.floor(r * 1e6 + F.lit(0.5)) / 1e6),
+            lambda d: let(
+                F.when((dn > 0) & ~F.isnan(d / dn), d / dn), round6
             ),
         ),
     )

@@ -87,11 +87,3 @@ class SourceMaintenance:
             self.runner.execute(self.drop_template.format(table=table))
             dropped.append(table)
         return dropped
-
-
-def pg_list_partitions_sql(prefix: str = "payments_y") -> str:
-    """The reference's pg_tables introspection (yq_dag.py:112)."""
-    return (
-        "select tablename from pg_tables "
-        f"where tablename like '{prefix}{{year}}%'"
-    )

@@ -71,6 +71,7 @@ import time
 import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -271,6 +272,31 @@ def _bucket_canon_type_of_value(value) -> str:
     if isinstance(value, str):
         return "string"
     raise ValueError(f"unsupported bucket probe type: {type(value).__name__}")
+
+
+def _qcol(name: str):
+    """A column by its literal name, backtick-quoted: a dot in a
+    column name must not parse as struct-field access."""
+    from pyspark.sql import functions as F
+
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
+# the (file, row_index) position columns a find step tags rows with
+_POS = ("__dv_f", "__dv_pos")
+
+
+class _RowChange(NamedTuple):
+    """What one row-level op hands :meth:`ManifestTable._row_change`:
+    only what differs between MERGE, DELETE WHERE and UPDATE WHERE."""
+
+    candidates: list[str]  # files that may hold matching rows
+    match: Callable  # position-tagged live rows -> the matching rows
+    rewrite: Callable  # copy-on-write: touched live rows -> replacement
+    images: Callable  # found matches (None: no find) -> rows to append
+    # manifest key recording the matched-row count; a tallying op
+    # finds in both modes and commits nothing when nothing matches
+    tally: str | None = None
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -508,6 +534,18 @@ class ManifestTable:
                 "(missing or torn)"
             )
         return m
+
+    def _snapshot(
+        self, spark: SparkSession, version: int | None = None
+    ) -> tuple[int, dict]:
+        """``(version, manifest)`` of snapshot ``version`` — the
+        current one when None. Callers pin the returned version for
+        every later lookup, so one operation never pairs two
+        snapshots."""
+        v = self.current_version(spark) if version is None else version
+        if v is None:
+            raise FileNotFoundError(f"no committed snapshot at {self.path}")
+        return v, self._manifest(spark, v)
 
     def manifest_files(self, spark: SparkSession, version: int) -> list[str]:
         """Public accessor: the data-file names version ``version``
@@ -804,9 +842,7 @@ class ManifestTable:
         from pyspark.sql import functions as F
 
         n = dict(self.bucket_cols)[col]
-        v = self.current_version(spark) if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.path}")
+        v, _ = self._snapshot(spark, version)
         dtype = dict(self.read(spark, version=v).dtypes).get(col)
         canon = _bucket_canon_type(dtype, col)
         probe_canon = _bucket_canon_type_of_value(value)
@@ -844,10 +880,7 @@ class ManifestTable:
         the probe's bucket. Files without bucket metadata are kept
         (conservative) — the result is always a correct superset of
         the files holding ``col = value``."""
-        v = self.current_version(spark) if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.path}")
-        m = self._manifest(spark, v)
+        v, m = self._snapshot(spark, version)
         if not m["files"]:
             return []
         b = self.bucket_of(spark, col, value, version=v)
@@ -866,10 +899,7 @@ class ManifestTable:
         count for ``col`` is positive (files without the stat are kept
         conservatively). The mirror of range pruning for the predicate
         min/max can never answer."""
-        v = self.current_version(spark) if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.path}")
-        m = self._manifest(spark, v)
+        _, m = self._snapshot(spark, version)
         stats = m.get("stats", {})
         out = []
         for f in m["files"]:
@@ -878,32 +908,32 @@ class ManifestTable:
                 out.append(f)
         return out
 
+    def _read_pruned(self, spark: SparkSession, prune, cond) -> DataFrame:
+        """Scan only the files ``prune(version)`` keeps, then apply
+        the exact predicate ``cond`` (file pruning is a superset
+        filter, never the answer). The version is pinned first and
+        supplies both the file list and the deletion vectors:
+        re-resolving in between would let a concurrent commit pair v1
+        files with v2 DVs (resurrecting deleted rows), and on a
+        never-committed table the pin fails before any lookup."""
+        from pyspark.sql import functions as F
+
+        v, m = self._snapshot(spark)
+        files = prune(v)
+        if not files:
+            return self.read(spark, version=v).filter(F.lit(False))
+        return self._live_rows(spark, m, files).filter(cond)
+
     def read_where_null(self, spark: SparkSession, col: str) -> DataFrame:
         """IS NULL read through null-count metadata: scan only files
         that record (or might hold) nulls, then apply the predicate."""
         from pyspark.sql import functions as F
 
-        v = self.current_version(spark)
-        if v is None:
-            # raise HERE, not downstream: passing version=None would
-            # make pruned_files_* re-resolve — a commit landing between
-            # the two lookups pairs v0's files with a vNone manifest
-            raise FileNotFoundError(f"no committed snapshot at {self.path}")
-        files = self.pruned_files_null(spark, col, version=v)
-        if not files:
-            return self.read(spark, version=v).filter(F.lit(False))
-        # the SAME snapshot supplies both the file list and the
-        # deletion vectors — re-resolving here would let a concurrent
-        # commit pair v1 files with v2 DVs (resurrecting deleted rows)
-        m = self._manifest(spark, v)
-        df = self._strip_dvs(
-            self._reader_for(spark, m).parquet(
-                *[f"{self.path}/data/{f}" for f in files]
-            ),
-            self._dv_frame(spark, m, files),
-            self._dv_rows(m, files),
+        return self._read_pruned(
+            spark,
+            lambda v: self.pruned_files_null(spark, col, version=v),
+            F.col(col).isNull(),
         )
-        return df.filter(F.col(col).isNull())
 
     def read_where_eq(self, spark: SparkSession, col: str, value) -> DataFrame:
         """Equality read through bucket metadata: scan ONLY the files
@@ -911,23 +941,11 @@ class ManifestTable:
         bucket set is a superset filter, never the answer)."""
         from pyspark.sql import functions as F
 
-        v = self.current_version(spark)
-        if v is None:
-            # see read_where_null: the pin must fail before any lookup
-            raise FileNotFoundError(f"no committed snapshot at {self.path}")
-        files = self.pruned_files_eq(spark, col, value, version=v)
-        if not files:
-            return self.read(spark, version=v).filter(F.lit(False))
-        # file list and DVs from ONE snapshot (see read_where_null)
-        m = self._manifest(spark, v)
-        df = self._strip_dvs(
-            self._reader_for(spark, m).parquet(
-                *[f"{self.path}/data/{f}" for f in files]
-            ),
-            self._dv_frame(spark, m, files),
-            self._dv_rows(m, files),
+        return self._read_pruned(
+            spark,
+            lambda v: self.pruned_files_eq(spark, col, value, version=v),
+            F.col(col) == value,
         )
-        return df.filter(F.col(col) == value)
 
     def _publish(
         self,
@@ -1509,10 +1527,7 @@ class ManifestTable:
                 "cluster needs sort columns: pass by=... or configure "
                 "stat_cols"
             )
-        v = self.current_version(spark)
-        if v is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.path}")
-        m = self._manifest(spark, v)
+        v, m = self._snapshot(spark)
         n_out = target_files if target_files else max(1, len(m["files"]))
         snap = self.read(spark, version=v)
         if zorder:
@@ -1772,15 +1787,20 @@ class ManifestTable:
         of the file schemas is resolved at COMMIT time: the manifest
         records the logical schema (``schema``) and an ``evolved``
         flag, and readers resolve entirely from that metadata."""
-        v = self.current_version(spark) if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.path}")
-        manifest = self._manifest(spark, v)
-        df = self._reader_for(spark, manifest).parquet(
-            *[f"{self.path}/data/{f}" for f in manifest["files"]]
-        )
+        _, m = self._snapshot(spark, version)
+        return self._live_rows(spark, m, m["files"])
+
+    def _live_rows(
+        self, spark: SparkSession, m: dict, files: list[str]
+    ) -> DataFrame:
+        """``files`` of snapshot ``m`` under its recorded schema, minus
+        the rows its deletion vectors hide."""
         return self._strip_dvs(
-            df, self._dv_frame(spark, manifest), self._dv_rows(manifest)
+            self._reader_for(spark, m).parquet(
+                *[f"{self.path}/data/{f}" for f in files]
+            ),
+            self._dv_frame(spark, m, files),
+            self._dv_rows(m, files),
         )
 
     # -- deletion vectors (merge-on-read DELETE) -------------------------
@@ -1862,22 +1882,14 @@ class ManifestTable:
         rec = m.get("schema")
         if rec is None:
             return df
-        from pyspark.sql import functions as F
-
         want = {f.name: f.dataType for f in _schema_from_json(rec).fields}
-
-        def qcol(name: str):
-            # backtick-quoted: a literal dot in a column name must not
-            # parse as struct-field access (df[name] shares that flaw)
-            return F.col("`" + name.replace("`", "``") + "`")
-
         out, casts, bad = [], 0, []
         for f in df.schema.fields:
             w = want.get(f.name)
             if w is None or _nullable_type(f.dataType) == _nullable_type(w):
-                out.append(qcol(f.name))
+                out.append(_qcol(f.name))
             elif _widens_to(f.dataType, w):
-                out.append(qcol(f.name).cast(w).alias(f.name))
+                out.append(_qcol(f.name).cast(w).alias(f.name))
                 casts += 1
             else:
                 bad.append(
@@ -2047,11 +2059,8 @@ class ManifestTable:
         union-schema contract)."""
         from pyspark.sql import functions as F
 
-        v_to = self.current_version(spark) if v_to is None else v_to
-        if v_to is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.path}")
+        v_to, mt_ = self._snapshot(spark, v_to)
         mf = self._manifest(spark, v_from)
-        mt_ = self._manifest(spark, v_to)
         # a file present in both snapshots is identical bytes, but a
         # merge-on-read DELETE changes its EFFECTIVE rows by attaching
         # a deletion vector without renaming it — treat a dv-entry
@@ -2137,10 +2146,7 @@ class ManifestTable:
         keep' WITHOUT touching a data file — the frame is built from
         the manifest alone, so it is version-count × file-count
         metadata, never a data scan."""
-        v = self.current_version(spark) if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.path}")
-        m = self._manifest(spark, v)
+        _, m = self._snapshot(spark, version)
         stats = m.get("stats", {})
         stat_cols = list(self.stat_cols)
         bucket_cols = [c for c, _ in self.bucket_cols]
@@ -2229,10 +2235,7 @@ class ManifestTable:
         (conservative), so the result is always a correct superset."""
         import math
 
-        v = self.current_version(spark) if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.path}")
-        m = self._manifest(spark, v)
+        _, m = self._snapshot(spark, version)
         stats = m.get("stats", {})
 
         def _is_nan(b) -> bool:
@@ -2272,23 +2275,11 @@ class ManifestTable:
         files."""
         from pyspark.sql import functions as F
 
-        v = self.current_version(spark)
-        if v is None:
-            # see read_where_null: the pin must fail before any lookup
-            raise FileNotFoundError(f"no committed snapshot at {self.path}")
-        files = self.pruned_files(spark, col, lo, hi, version=v)
-        if not files:
-            return self.read(spark, version=v).filter(F.lit(False))
-        # file list and DVs from ONE snapshot (see read_where_null)
-        m = self._manifest(spark, v)
-        df = self._strip_dvs(
-            self._reader_for(spark, m).parquet(
-                *[f"{self.path}/data/{f}" for f in files]
-            ),
-            self._dv_frame(spark, m, files),
-            self._dv_rows(m, files),
+        return self._read_pruned(
+            spark,
+            lambda v: self.pruned_files(spark, col, lo, hi, version=v),
+            (F.col(col) >= lo) & (F.col(col) <= hi),
         )
-        return df.filter((F.col(col) >= lo) & (F.col(col) <= hi))
 
     def merge(
         self,
@@ -2299,47 +2290,10 @@ class ManifestTable:
         delete_keys: DataFrame | None = None,
         mode: str = "copy-on-write",
     ) -> int:
-        """Entry point: persists the batch for the duration of the
-        merge, then runs :meth:`_merge_impl`. Inside, ``updates`` is
-        read up to three times (touched-file probe, carry-forward drop
-        keys, rewrite/append union) and ``delete_keys`` twice (probe,
-        drop keys); caching ``updates`` keeps a batch derived by
-        filtering a big table from costing three source scans — a
-        micro-batch is O(batch) by contract, so caching it is always
-        cheap relative to re-deriving it (guide §5: cache exactly what
-        is re-used and expensive to recompute). ``delete_keys`` is NOT
-        cached here: a caller whose delete keys are expensive to
-        derive materializes them first, as the CDC sinks do (both
-        clauses come from one checkpointed collapse of the batch).
-        A batch the caller already persisted is left alone (persist
-        levels cannot be changed in place) and never unpersisted."""
-        from pyspark.storagelevel import StorageLevel
-
-        lvl = updates.storageLevel
-        ours = not (lvl.useMemory or lvl.useDisk or lvl.useOffHeap)
-        if ours:
-            updates = updates.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            return self._merge_impl(
-                updates, key, expected_version, batch_id, delete_keys, mode
-            )
-        finally:
-            if ours:
-                updates.unpersist(blocking=False)
-
-    def _merge_impl(
-        self,
-        updates: DataFrame,
-        key: str,
-        expected_version: int | None,
-        batch_id: int | None,
-        delete_keys: DataFrame | None,
-        mode: str,
-    ) -> int:
-        """Copy-on-write MERGE (whole-row upsert by ``key``): rows of
-        the current snapshot whose key appears in ``updates`` are
-        replaced, unmatched update rows are inserted, everything else
-        is carried forward — BY FILE NAME, not by rewrite.
+        """Row-level MERGE (whole-row upsert by ``key``): rows of the
+        snapshot whose key appears in ``updates`` are replaced,
+        unmatched update rows are inserted, everything else is carried
+        forward — BY FILE NAME, not by rewrite.
 
         ``delete_keys`` (optional single-column frame of key values)
         is MERGE's WHEN-MATCHED-DELETE clause: those keys' rows are
@@ -2354,105 +2308,135 @@ class ManifestTable:
         inserts and a NULL delete key is always a no-op — the outcome
         is deterministic even when NULL appears in both clauses.
 
-        Touched-file selection is the point at 100 TB: a file is
-        rewritten only if its recorded [min, max] for ``key`` overlaps
-        an actual update key (small broadcast join of update keys
-        against the manifest's range list — a metadata decision).
-        When ``key`` is also a bucket column, the recorded per-file
-        bucket SET prunes further: a file whose bucket set misses
-        every probe key's bucket provably holds none of them and is
-        carried forward untouched even when its [min, max] range
-        overlaps — the case that matters for CDC at scale, where
-        update keys are uniformly distributed and every file's range
-        covers every key (range pruning degenerates to "touch all").
-        Without stat_cols or bucket_cols every file is conservatively
-        touched and the merge degrades to a full rewrite, still
-        correct.
-
-        ``mode="merge-on-read"``: NO file is rewritten at all — the
-        matched keys' current positions become deletion-vector
-        entries and ``updates`` lands as appended files, so a CDC
-        micro-batch costs O(batch) writes regardless of how many
-        files its keys scatter across (copy-on-write costs O(touched
-        files), which for uniformly distributed keys is the whole
-        table). The appended files record stats/bucket sets like any
-        append, so later merges probe them normally; the dead rows
+        The files a merge may touch are decided from METADATA by
+        :meth:`_merge_probe` (per-key [min, max] ∩ bucket-set proofs
+        in one batch-wide job, which also rejects duplicate update
+        keys); without stat_cols or bucket_cols every file is
+        conservatively touched, still correct. The change itself runs
+        through :meth:`_row_change`, the core MERGE shares with
+        DELETE/UPDATE WHERE: ``mode="copy-on-write"`` rewrites the
+        touched files without the batch's keys and writes the batch
+        beside them; ``mode="merge-on-read"`` rewrites NO file — the
+        matched keys' live positions become deletion-vector entries
+        and ``updates`` lands as appended files, so a CDC micro-batch
+        costs O(batch) writes however its keys scatter. The dead rows
         are compaction debt surfaced by ``files_table().dv_rows`` and
-        paid down by :meth:`compact` / :meth:`maybe_compact`.
+        paid down by :meth:`compact` / :meth:`maybe_compact`. A batch
+        that matches and inserts nothing commits nothing, unless its
+        ``batch_id`` raises the high-water mark: then the commit
+        records the batch (one commit per streaming batch).
+
+        ``updates`` is read up to three times (probe, drop keys,
+        write), so it is persisted for the duration of the call — a
+        micro-batch is O(batch) by contract, and caching it keeps a
+        batch derived from a big table from costing three source
+        scans. A batch the caller already persisted is left alone
+        and never unpersisted. ``delete_keys`` is NOT cached here: a
+        caller whose delete keys are expensive to derive materializes
+        them first, as the CDC sinks do.
 
         Concurrency is compare-and-swap: the commit validates the
         snapshot is still ``expected_version`` (default: the version
         read at entry) and raises :class:`ConcurrentWriteError`
         otherwise — rewritten files computed against a stale base
-        cannot silently drop a concurrent commit's rows (the same
-        conflict rule Delta/Iceberg apply to row-rewriting ops; append
+        cannot silently drop a concurrent commit's rows (append
         commutes and keeps its automatic rebase instead)."""
         from pyspark.sql import functions as F
+        from pyspark.storagelevel import StorageLevel
 
         spark = updates.sparkSession
-        base = (
-            self.current_version(spark)
-            if expected_version is None
-            else expected_version
-        )
-        if base is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.path}")
-        m = self._manifest(spark, base)
-        stats = m.get("stats", {})
+        lvl = updates.storageLevel
+        ours = not (lvl.useMemory or lvl.useDisk or lvl.useOffHeap)
+        if ours:
+            updates = updates.persist(StorageLevel.MEMORY_AND_DISK)
 
-        if mode not in ("copy-on-write", "merge-on-read"):
-            raise ValueError(
-                f"unknown merge mode {mode!r} — "
-                "'copy-on-write' or 'merge-on-read'"
+        def prepare(base: int, m: dict) -> _RowChange:
+            # one schema contract for BOTH modes: unknown columns always
+            # fail loudly — tolerating them would silently widen the
+            # schema off a typo'd CDC batch; missing columns are allowed
+            # only on an evolved table (absent columns read as NULL, the
+            # same contract read() gives pre-evolution files). Real
+            # schema evolution goes through append.
+            expected_cols = m.get("columns")
+            if expected_cols is None:
+                # hand-made manifest without a columns record: at least
+                # hold the identifier line
+                _check_new_names(updates.columns, "merge updates")
+            else:
+                unknown = sorted(set(updates.columns) - set(expected_cols))
+                if unknown:
+                    raise ValueError(
+                        f"merge updates carry unknown columns {unknown} — "
+                        "schema evolution goes through append, not MERGE"
+                    )
+                missing = sorted(set(expected_cols) - set(updates.columns))
+                if missing and not m.get("evolved"):
+                    raise ValueError(
+                        f"merge updates are missing columns {missing} and "
+                        f"table {self.path} is not schema-evolved — a "
+                        "malformed batch must fail, not NULL-fill"
+                    )
+            # type contract: the batch's files will be read under the
+            # recorded schema — a drifted type must widen or fail HERE
+            ups = self._conform_to_schema(updates, m, "merge updates")
+            drop_keys = ups.select(key)
+            dk = None
+            if delete_keys is not None:
+                dk = delete_keys.select(
+                    F.col(delete_keys.columns[0]).alias(key)
+                ).distinct()
+                drop_keys = drop_keys.unionByName(dk)
+
+            def rewrite(rows: DataFrame) -> DataFrame:
+                # evolved snapshots tolerate updates written against the
+                # pre-evolution schema; a non-evolved table keeps the
+                # strict match so a malformed batch fails loudly
+                carried = rows.join(drop_keys, on=key, how="left_anti")
+                return carried.unionByName(
+                    ups, allowMissingColumns=bool(m.get("evolved"))
+                )
+
+            return _RowChange(
+                candidates=self._merge_probe(spark, base, m, ups, dk, key),
+                match=lambda s: s.join(
+                    drop_keys, on=key, how="left_semi"
+                ).select(*_POS),
+                rewrite=rewrite,
+                images=lambda found: ups,
             )
-        # one schema contract for BOTH modes (and for the touched==∅
-        # fast path, which otherwise commits `updates` unvalidated):
-        # unknown columns always fail loudly — tolerating them would
-        # silently widen the schema off a typo'd CDC batch; missing
-        # columns are allowed only on an evolved table (absent columns
-        # read as NULL, the same contract read() gives pre-evolution
-        # files). Real schema evolution goes through append.
-        expected_cols = m.get("columns")
-        if expected_cols is None:
-            # hand-made manifest without a columns record: the
-            # unknown-column check cannot run, so at least hold the
-            # identifier line — a dotted name must not enter this way
-            _check_new_names(updates.columns, "merge updates")
-        else:
-            unknown = sorted(set(updates.columns) - set(expected_cols))
-            if unknown:
-                raise ValueError(
-                    f"merge updates carry unknown columns {unknown} — "
-                    "schema evolution goes through append, not MERGE"
-                )
-            missing = sorted(set(expected_cols) - set(updates.columns))
-            if missing and not m.get("evolved"):
-                raise ValueError(
-                    f"merge updates are missing columns {missing} and "
-                    f"table {self.path} is not schema-evolved — a "
-                    "malformed batch must fail, not NULL-fill"
-                )
-        # type contract (both modes): the batch's files will be read
-        # under the recorded schema — a drifted type must widen or fail
-        # HERE, not brick every later read
-        updates = self._conform_to_schema(updates, m, "merge updates")
-        dk = None
-        if delete_keys is not None:
-            dk = delete_keys.select(
-                F.col(delete_keys.columns[0]).alias(key)
-            ).distinct()
 
-        # ONE batch-wide job decides everything the keys can decide:
-        # duplicate-update detection, update∩delete ambiguity, and the
-        # touched-file set. At 100 TB this is one shuffle of the CDC
-        # batch (groupBy key) feeding a broadcast join against the
-        # file metadata, instead of the four separate batch scans the
-        # clause-per-job formulation costs (dup-check aggregation,
-        # ambiguity semi-join, bucket probe, range probe). The range
-        # and bucket proofs are applied PER KEY in the join condition
-        # — strictly stronger pruning than a global bucket-set
-        # intersect, and still exact: key k can live in file f only if
-        # k ∈ [min, max] AND bucket(k) ∈ the file's recorded set.
+        try:
+            return self._row_change(
+                spark, "merge", mode, expected_version, prepare, batch_id
+            )
+        finally:
+            if ours:
+                updates.unpersist(blocking=False)
+
+    def _merge_probe(
+        self,
+        spark: SparkSession,
+        base: int,
+        m: dict,
+        updates: DataFrame,
+        dk: DataFrame | None,
+        key: str,
+    ) -> list[str]:
+        """MERGE's candidate files, decided from metadata. ONE
+        batch-wide job decides everything the keys can decide:
+        duplicate-update detection, update∩delete ambiguity (both
+        raise), and the touched-file set — one shuffle of the batch
+        (groupBy key) feeding a broadcast join against the file
+        metadata, instead of a job per clause. The range and bucket
+        proofs apply PER KEY in the join condition — strictly stronger
+        than a global bucket-set intersect, and still exact: key k can
+        live in file f only if k ∈ [min, max] AND bucket(k) ∈ the
+        file's recorded set. Bucket sets matter for CDC at scale, where
+        uniformly distributed keys make every file's range cover every
+        key. Files with neither proof are conservatively touched."""
+        from pyspark.sql import functions as F
+
+        stats = m.get("stats", {})
         probe = updates.select(
             F.col(key).alias("_k"),
             F.lit(1).alias("_u"),
@@ -2518,9 +2502,8 @@ class ManifestTable:
             # equi-matches any row downstream (the carry-forward anti
             # join and the MOR position probe are both equi-joins), so a
             # NULL update row inserts and a NULL delete key no-ops —
-            # deterministic, the same contract the pre-r9 per-clause
-            # equi-join check gave (it never matched NULLs). Only a
-            # NON-NULL key in both clauses has an ambiguous outcome.
+            # deterministic. Only a NON-NULL key in both clauses has an
+            # ambiguous outcome.
             F.max(
                 (
                     (F.col("_cu") > 0)
@@ -2536,9 +2519,10 @@ class ManifestTable:
             if bound_t == "double":
                 # mixed int/float bounds (hand-edited/legacy manifests):
                 # int bounds ride along as doubles. An int too wide for
-                # an exact double (|v| > 2^53) would silently shift the
-                # recorded range and could mis-prune, so that file falls
-                # back to conservatively touched instead.
+                # an exact double (|v| > 2^53, or beyond double range)
+                # would silently shift the recorded range and could
+                # mis-prune, so that file falls back to conservatively
+                # touched instead.
                 widened: list[tuple] = []
                 for f, mn, mx, bs in provable:
                     vals = []
@@ -2549,8 +2533,6 @@ class ManifestTable:
                         try:
                             fv = float(v)
                         except OverflowError:
-                            # int beyond double range (~1.8e308): same
-                            # conservative-touch fallback as >2^53.
                             vals = None
                             break
                         if fv == v:
@@ -2599,253 +2581,7 @@ class ManifestTable:
                 "a key appears in BOTH updates and delete_keys — "
                 "the merge outcome would be ambiguous"
             )
-        untouched = [f for f in m["files"] if f not in touched]
-
-        drop_keys = updates.select(key)
-        if dk is not None:
-            drop_keys = drop_keys.unionByName(dk)
-        if mode == "merge-on-read":
-            return self._merge_mor(
-                spark, m, base, updates, key, drop_keys,
-                sorted(touched), batch_id,
-            )
-        if touched:
-            # metadata-resolved schema (or mergeSchema fallback): a
-            # mixed-schema touched set read plain would adopt one
-            # file's columns by listing order and silently drop the
-            # evolved column from the rewrite
-            touched_reader = self._reader_for(spark, m)
-            old_rows = self._strip_dvs(
-                touched_reader.parquet(
-                    *[f"{self.path}/data/{f}" for f in sorted(touched)]
-                ),
-                self._dv_frame(spark, m, sorted(touched)),
-                self._dv_rows(m, sorted(touched)),
-            )
-            carried_rows = old_rows.join(drop_keys, on=key, how="left_anti")
-            # evolved snapshots tolerate updates written against the
-            # pre-evolution schema (absent columns read as NULL, the
-            # same contract read() gives); a non-evolved table keeps
-            # the strict match so a malformed batch fails loudly
-            new_data = carried_rows.unionByName(
-                updates, allowMissingColumns=bool(m.get("evolved"))
-            )
-        else:
-            new_data = updates
-        new_files, _, wrote_rows = self._write_files(new_data)
-        # pre-publish no-orphan window: the stats/count jobs below can
-        # fail (executor loss) with the rewrite already staged
-        with self._staged_cleanup(spark, new_files):
-            new_stats = self._file_stats(spark, new_files)
-            final = untouched + new_files
-            # row accounting is O(touched + new), never a full-table
-            # recount (at 100 TB a merge that recounts every carried
-            # file costs a table scan per commit): carried files
-            # contribute their recorded effective total, which equals
-            # the snapshot's rows minus the touched files' effective
-            # (DV-subtracted) rows
-            new_rows = wrote_rows  # observed on the write job itself
-            if m.get("rows") is None:
-                rows = self._rows_of(
-                    spark, {**stats, **new_stats}, final
-                ) - self._dv_rows(
-                    m, untouched
-                )  # legacy manifest without a recorded count
-            else:
-                touched_eff = (
-                    self._rows_of(spark, stats, sorted(touched))
-                    - self._dv_rows(m, sorted(touched))
-                    if touched
-                    else 0
-                )
-                rows = int(m["rows"]) - touched_eff + new_rows
-
-        def rebase() -> tuple[list[str], int, dict]:
-            cur = self.current_version(spark)
-            if cur != base:
-                raise ConcurrentWriteError(
-                    f"merge computed against v{base} but the snapshot is "
-                    f"now v{cur} — re-run the merge on the new base"
-                )
-            extra: dict = {
-                # union with the snapshot's recorded columns: on an
-                # evolved table with touched==∅, new_data is just
-                # `updates` and may lack the evolved column — taking
-                # its columns alone would narrow the schema
-                "columns": sorted(
-                    set(new_data.columns) | set(m.get("columns") or [])
-                )
-            }
-            if m.get("evolved"):
-                # carried-forward files may still hold the
-                # pre-evolution schema; dropping the flag would make
-                # read() skip mergeSchema and the evolved column would
-                # vanish nondeterministically (same carry as every
-                # other row-rewriting engine here)
-                extra["evolved"] = True
-            if m.get("schema"):
-                # merge never changes the logical schema — carry it
-                extra["schema"] = m["schema"]
-            elif new_files or m.get("read_merged"):
-                # files were added with no schema record to conform
-                # against (legacy chain): a same-named type drift in
-                # the batch is undetectable, so homogeneity stays
-                # unprovable — readers must keep merging footers. A
-                # commit landing NO data file only carries the flag.
-                extra["read_merged"] = True
-            # the streaming high-water mark must SURVIVE a merge — a
-            # commit that dropped it would let an at-least-once replay
-            # of an already-committed batch re-land after any upsert
-            hwm = max(int(m.get("last_batch_id", -1)),
-                      -1 if batch_id is None else int(batch_id))
-            if hwm >= 0:
-                extra["last_batch_id"] = hwm
-            carried = {
-                f: s for f, s in stats.items() if f in set(untouched)
-            }
-            if carried or new_stats:
-                extra["stats"] = {**carried, **new_stats}
-            # untouched files keep their deletion vectors (their dead
-            # rows stay dead); rewritten files materialized theirs
-            carried_dvs = {
-                f: e
-                for f, e in m.get("dvs", {}).items()
-                if f in set(untouched)
-            }
-            if carried_dvs:
-                extra["dvs"] = carried_dvs
-            return final, rows, extra
-
-        return self._publish_cleanly(spark, "merge", rebase, new_files)
-
-    def _merge_mor(
-        self,
-        spark: SparkSession,
-        m: dict,
-        base: int,
-        updates: DataFrame,
-        key: str,
-        drop_keys: DataFrame,
-        touched: list[str],
-        batch_id: int | None,
-    ) -> int:
-        """Merge-on-read MERGE engine: matched keys' live positions in
-        the (already pruned) candidate files become deletion-vector
-        entries, ``updates`` appends as new files — write cost is
-        O(batch), never O(touched files). The key-to-position lookup
-        is a semi-join of the candidate scan against the batch's keys
-        (left to the planner: the batch side is micro-batch-sized in
-        the CDC loop and broadcasts; AQE picks a shuffle join when it
-        is not)."""
-        from pyspark.sql import functions as F
-
-        from ..operators.checkpoints import (
-            checkpointed_rdd_id,
-            free_checkpoint,
-        )
-
-        # schema already validated by merge() (unknown columns raise;
-        # missing columns only pass on an evolved table) — the same
-        # contract as copy-on-write, so the two modes stay
-        # observationally equivalent on every accepted batch
-        n_updates = updates.count()
-        per_file: dict[str, int] = {}
-        parts: list[str] = []
-        if touched:
-            pos = self._reader_for(spark, m).parquet(
-                *[f"{self.path}/data/{f}" for f in touched]
-            ).select(
-                F.col(key),
-                F.col("_metadata.file_name").alias("__dv_f"),
-                F.col("_metadata.row_index").alias("__dv_pos"),
-            )
-            pos = self._live_positions(pos, m, touched)
-            # one find scan: checkpoint the (small) dead-position set
-            # so the count and the part write don't re-run the probe;
-            # freed once the parts are written (or the write fails)
-            dead = (
-                pos.join(drop_keys, on=key, how="left_semi")
-                .select("__dv_f", "__dv_pos")
-                .localCheckpoint()
-            )
-            dead_rdd = checkpointed_rdd_id(dead)
-            try:
-                per_file = {
-                    r["__dv_f"]: int(r["n"])
-                    for r in dead.groupBy("__dv_f")
-                    .agg(F.count("*").alias("n"))
-                    .collect()  # bounded by file count — metadata-scale
-                }
-                if per_file:
-                    parts, _, _n = self._write_files(
-                        dead.select(
-                            F.col("__dv_f").alias("_f"),
-                            F.col("__dv_pos").alias("_pos"),
-                        ),
-                        subdir="deletes",
-                    )
-            finally:
-                free_checkpoint(spark, dead_rdd)
-        n_dead = sum(per_file.values())
-        if not per_file and n_updates == 0:
-            return base  # empty batch: nothing to commit
-
-        new_files: list[str] = []
-        new_stats: dict = {}
-        # pre-publish window: the DV parts are already staged, and the
-        # batch write / stats / legacy recount below can all fail —
-        # whatever landed by then must not outlive the failure
-        with self._staged_cleanup(spark, new_files, parts):
-            if n_updates:
-                staged, _, _n = self._write_files(updates)
-                new_files.extend(staged)  # extend: cleanup sees them
-                new_stats = self._file_stats(spark, new_files)
-            new_dvs = {f: dict(e) for f, e in m.get("dvs", {}).items()}
-            for f, n in per_file.items():
-                e = new_dvs.setdefault(f, {"parts": [], "rows": 0})
-                e["parts"] = list(e["parts"]) + parts
-                e["rows"] = int(e["rows"]) + n
-            # hoisted OUT of rebase(): on a legacy manifest without a
-            # recorded count this is a full recount, and rebase re-runs
-            # on every commit attempt — per-attempt work must stay
-            # metadata-only (the _append_rebase rule)
-            eff_rows = self._effective_rows(spark, m)
-
-        def rebase() -> tuple[list[str], int, dict]:
-            cur = self.current_version(spark)
-            if cur != base:
-                raise ConcurrentWriteError(
-                    f"merge computed against v{base} but the snapshot is "
-                    f"now v{cur} — re-run the merge on the new base"
-                )
-            extra: dict = {
-                "columns": m.get("columns", sorted(updates.columns))
-            }
-            if m.get("evolved"):
-                extra["evolved"] = True
-            if m.get("schema"):
-                extra["schema"] = m["schema"]
-            elif new_files or m.get("read_merged"):
-                # see the copy-on-write rebase: appended batch files
-                # on a legacy chain keep homogeneity unprovable; a
-                # pure-delete_keys commit (DV parts only, no data
-                # file) just carries a pre-existing flag
-                extra["read_merged"] = True
-            hwm = max(int(m.get("last_batch_id", -1)),
-                      -1 if batch_id is None else int(batch_id))
-            if hwm >= 0:
-                extra["last_batch_id"] = hwm
-            if m.get("stats") or new_stats:
-                extra["stats"] = {**m.get("stats", {}), **new_stats}
-            if new_dvs:
-                extra["dvs"] = new_dvs
-            return (
-                list(m["files"]) + new_files,
-                eff_rows - n_dead + n_updates,
-                extra,
-            )
-
-        return self._publish_cleanly(spark, "merge", rebase, new_files, parts)
+        return sorted(touched)
 
     def delete_where(
         self,
@@ -2861,8 +2597,8 @@ class ManifestTable:
         ``mode="copy-on-write"`` (default): untouched files are
         carried forward BY NAME and only files containing matches are
         rewritten. Touched-file selection is Delta's two-phase shape:
-        one scan over the snapshot tagged with ``input_file_name()``
-        finds the files that actually CONTAIN matching rows (the
+        one scan over the snapshot tagged with each row's file finds
+        the files that actually CONTAIN live matching rows (the
         collect is bounded by file count — metadata-scale), then only
         those files are rewritten without their matching rows. Parquet
         row-group stats prune the find-phase scan for range predicates
@@ -2880,121 +2616,26 @@ class ManifestTable:
         stats stay as written — a conservative superset, still valid
         for pruning.
 
-        Either mode: a predicate matching nothing is a NO-OP (the
-        current version is returned, no commit — nothing changed, so
-        publishing an identical snapshot would only burn a version and
-        invalidate caches); row accounting is metadata-only; the
-        streaming high-water mark survives; concurrency is
-        compare-and-swap like :meth:`merge`."""
+        Either mode (both run :meth:`_row_change`): a predicate
+        matching nothing is a NO-OP (the current version is returned,
+        no commit — publishing an identical snapshot would only burn a
+        version and invalidate caches); row accounting is
+        metadata-only; the streaming high-water mark survives;
+        concurrency is compare-and-swap like :meth:`merge`."""
         from pyspark.sql import functions as F
 
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        if mode == "merge-on-read":
-            return self._delete_mor(spark, pred, expected_version)
-        if mode != "copy-on-write":
-            raise ValueError(
-                f"unknown delete mode {mode!r} — "
-                "'copy-on-write' or 'merge-on-read'"
-            )
-        return self._cow_rewrite(
-            spark,
-            pred,
-            op="delete",
-            transform=lambda rows: rows.filter(~F.coalesce(pred, F.lit(False))),
-            expected_version=expected_version,
-        )
-
-    def _delete_mor(
-        self, spark: SparkSession, pred, expected_version: int | None
-    ) -> int:
-        """Merge-on-read DELETE engine: record matching positions as
-        deletion-vector parts, commit metadata only. Rows already dead
-        under an existing DV are excluded before counting, so repeated
-        overlapping deletes never double-subtract."""
-        from pyspark.sql import functions as F
-
-        base = (
-            self.current_version(spark)
-            if expected_version is None
-            else expected_version
-        )
-        if base is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.path}")
-        m = self._manifest(spark, base)
-
-        raw = self._reader_for(spark, m).parquet(
-            *[f"{self.path}/data/{f}" for f in m["files"]]
-        )
-        hit = raw.filter(F.coalesce(pred, F.lit(False))).select(
-            F.col("_metadata.file_name").alias("__dv_f"),
-            F.col("_metadata.row_index").alias("__dv_pos"),
-        )
-        # one find scan total: the checkpoint materializes the (small)
-        # position set so the per-file count and the part write below
-        # reuse it instead of re-running the predicate scan
-        hit = self._live_positions(hit, m).localCheckpoint()
-        per_file = {
-            r["__dv_f"]: int(r["n"])
-            for r in hit.groupBy("__dv_f")
-            .agg(F.count("*").alias("n"))
-            .collect()  # bounded by file count — metadata-scale
-        }
-        if not per_file:
-            return base
-        parts, _, _n = self._write_files(
-            hit.select(
-                F.col("__dv_f").alias("_f"), F.col("__dv_pos").alias("_pos")
+        cond = F.coalesce(pred, F.lit(False))
+        return self._row_change(
+            spark, "delete", mode, expected_version,
+            lambda base, m: _RowChange(
+                candidates=m["files"],
+                match=lambda s: s.filter(cond).select(*_POS),
+                rewrite=lambda rows: rows.filter(~cond),
+                images=lambda found: None,
+                tally="deleted_rows",
             ),
-            subdir="deletes",
         )
-        n_deleted = sum(per_file.values())
-        # pre-publish window: a legacy recount can fail with the DV
-        # parts already staged
-        with self._staged_cleanup(spark, [], parts):
-            new_dvs = {f: dict(e) for f, e in m.get("dvs", {}).items()}
-            for f, n in per_file.items():
-                e = new_dvs.setdefault(f, {"parts": [], "rows": 0})
-                # every new part is mapped to every file it may cover —
-                # a conservative superset; the anti-join key includes
-                # the file name, so extra pairs match nothing
-                e["parts"] = list(e["parts"]) + parts
-                e["rows"] = int(e["rows"]) + n
-            # hoisted out of rebase(): legacy manifests recount here,
-            # and per-attempt rebase work must stay metadata-only
-            eff_rows = self._effective_rows(spark, m)
-
-        def rebase() -> tuple[list[str], int, dict]:
-            cur = self.current_version(spark)
-            if cur != base:
-                raise ConcurrentWriteError(
-                    f"delete computed against v{base} but the snapshot "
-                    f"is now v{cur} — re-run the delete on the new base"
-                )
-            extra: dict = {
-                "columns": m.get("columns", sorted(raw.columns)),
-                "deleted_rows": n_deleted,
-                "dvs": new_dvs,
-            }
-            if m.get("evolved"):
-                extra["evolved"] = True
-            if m.get("schema"):
-                extra["schema"] = m["schema"]
-            elif m.get("read_merged"):
-                # no data file added or changed here, but the chain's
-                # homogeneity was already unprovable — carry the flag
-                extra["read_merged"] = True
-            if m.get("stats"):
-                extra["stats"] = m["stats"]  # files unchanged
-            hwm = int(m.get("last_batch_id", -1))
-            if hwm >= 0:
-                extra["last_batch_id"] = hwm
-            return (
-                list(m["files"]),
-                eff_rows - n_deleted,
-                extra,
-            )
-
-        return self._publish_cleanly(spark, "delete", rebase, [], parts)
 
     def update_where(
         self,
@@ -3020,17 +2661,22 @@ class ManifestTable:
         deletion-vector entries and their TRANSFORMED images append
         as new files (Iceberg's MOR update = positional delete +
         insert, in one commit) — write cost O(matched rows), not
-        O(touched files)."""
+        O(touched files).
+
+        Assignment names and output types are validated against the
+        snapshot :meth:`_row_change` resolves and then changes — a
+        commit landing after that resolution fails the update's CAS
+        check rather than being updated unvalidated."""
         from pyspark.sql import functions as F
 
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
+        cond = F.coalesce(pred, F.lit(False))
         exprs = {
             c: (F.expr(e) if isinstance(e, str) else e)
             for c, e in assignments.items()
         }
 
         def transform(rows: DataFrame) -> DataFrame:
-            cond = F.coalesce(pred, F.lit(False))
             # single select: every assignment sees the ORIGINAL row
             return rows.select(
                 *[
@@ -3040,256 +2686,220 @@ class ManifestTable:
                 ]
             )
 
-        # Validate assignment names against the PINNED base, not a
-        # fresh read(): when expected_version targets an older
-        # snapshot, a concurrent commit between this check and the
-        # engine run must not swap the schema being judged (TOCTOU).
-        base = (
-            self.current_version(spark)
-            if expected_version is None
-            else expected_version
-        )
-        if base is None:
-            raise FileNotFoundError(
-                f"update_where on {self.path}: no committed snapshot"
-            )
-        base_m = self._manifest(spark, base)
-        base_cols = base_m.get("columns")
-        if base_cols is None and base_m.get("schema"):
-            # no columns record but a schema record: its field names
-            import json as _json
-
-            from pyspark.sql.types import StructType
-
-            base_cols = StructType.fromJson(
-                _json.loads(base_m["schema"])
-            ).names
-        if base_cols is None and base_m.get("files"):
-            # hand-made manifest without a columns record: footer
-            # schema of the pinned base's own files (analysis only)
-            base_cols = self._reader_for(spark, base_m).parquet(
-                *[f"{self.path}/data/{f}" for f in base_m["files"]]
-            ).columns
-        if base_cols is None:
-            # no columns record, no schema record, no files: the
-            # snapshot has NO observable schema, so no assignment can
-            # be validated — fail loudly (read()-based validation on
-            # such a snapshot also raised) rather than skip the check
-            raise ValueError(
-                f"update_where on {self.path} v{base}: the snapshot "
-                "records no columns, no schema, and no files — cannot "
-                "validate assignment names against it"
-            )
-        unknown = set(exprs) - set(base_cols)
-        if unknown:
-            raise ValueError(
-                f"update_where assigns unknown columns "
-                f"{sorted(unknown)} (schema evolution goes through "
-                "append, not UPDATE)"
-            )
-        if mode == "merge-on-read":
-            return self._update_mor(
-                spark, pred, transform, expected_version
-            )
-        if mode != "copy-on-write":
-            raise ValueError(
-                f"unknown update mode {mode!r} — "
-                "'copy-on-write' or 'merge-on-read'"
-            )
-        return self._cow_rewrite(
-            spark, pred, op="update", transform=transform,
-            expected_version=expected_version,
-        )
-
-    def _update_mor(
-        self, spark: SparkSession, pred, transform, expected_version
-    ) -> int:
-        """Merge-on-read UPDATE engine: one scan finds the LIVE rows
-        matching the predicate (already-dead positions are excluded,
-        so an update can never resurrect a deleted row); their
-        positions land as deletion-vector parts and their transformed
-        images as appended files, atomically. Row count is unchanged
-        by construction."""
-        from pyspark.sql import functions as F
-
-        base = (
-            self.current_version(spark)
-            if expected_version is None
-            else expected_version
-        )
-        if base is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.path}")
-        m = self._manifest(spark, base)
-
-        raw = self._reader_for(spark, m).parquet(
-            *[f"{self.path}/data/{f}" for f in m["files"]]
-        )
-        data_cols = raw.columns
-        # validate the assignments' OUTPUT types up front (schema
-        # analysis only — no job): a rejected update must fail before
-        # the find scan runs or any DV part lands under deletes/
-        self._conform_to_schema(transform(raw), m, "update assignments")
-        matched = raw.filter(F.coalesce(pred, F.lit(False))).select(
-            F.col("_metadata.file_name").alias("__dv_f"),
-            F.col("_metadata.row_index").alias("__dv_pos"),
-            *data_cols,  # reserved tags — a data column named _f/_pos
-            # must survive the update intact
-        )
-        # one find scan: the checkpoint holds the matched rows (the
-        # data being rewritten anyway), reused by the count, the DV
-        # part write AND the transformed-image write — without it the
-        # full-table predicate scan runs three times
-        matched = self._live_positions(matched, m).localCheckpoint()
-        per_file = {
-            r["__dv_f"]: int(r["n"])
-            for r in matched.groupBy("__dv_f")
-            .agg(F.count("*").alias("n"))
-            .collect()  # bounded by file count — metadata-scale
-        }
-        if not per_file:
-            return base  # no live row matches: no-op, no commit
-        n_matched = sum(per_file.values())
-        parts, _, _n = self._write_files(
-            matched.select(
-                F.col("__dv_f").alias("_f"), F.col("__dv_pos").alias("_pos")
-            ),
-            subdir="deletes",
-        )
-        new_files: list[str] = []
-        # pre-publish window: the parts are staged; the image write,
-        # stats job and legacy recount below can all still fail
-        with self._staged_cleanup(spark, new_files, parts):
-            staged, _, _n = self._write_files(
-                # an assignment can change a column's type (v -> v*0.5):
-                # widen or fail before the file lands under the record
+        def prepare(base: int, m: dict) -> _RowChange:
+            base_cols = m.get("columns")
+            if base_cols is None and m.get("schema"):
+                base_cols = _schema_from_json(m["schema"]).names
+            if base_cols is None and m["files"]:
+                # hand-made manifest without a columns record: footer
+                # schema of the pinned base's own files (analysis only)
+                base_cols = self._reader_for(spark, m).parquet(
+                    *[f"{self.path}/data/{f}" for f in m["files"]]
+                ).columns
+            if base_cols is None:
+                # nothing observable to validate assignments against —
+                # fail loudly rather than skip the check
+                raise ValueError(
+                    f"update_where on {self.path} v{base}: the snapshot "
+                    "records no columns, no schema, and no files — cannot "
+                    "validate assignment names against it"
+                )
+            unknown = set(exprs) - set(base_cols)
+            if unknown:
+                raise ValueError(
+                    f"update_where assigns unknown columns "
+                    f"{sorted(unknown)} (schema evolution goes through "
+                    "append, not UPDATE)"
+                )
+            if m.get("schema"):
+                # the assignments' OUTPUT types, from the schema record
+                # alone (no job): a drifted update fails before the
+                # find scan runs or anything is staged
                 self._conform_to_schema(
-                    transform(matched.drop("__dv_f", "__dv_pos")),
+                    transform(
+                        spark.createDataFrame(
+                            [], _schema_from_json(m["schema"])
+                        )
+                    ),
                     m,
                     "update assignments",
                 )
-            )
-            new_files.extend(staged)  # extend: cleanup sees them
-            new_stats = self._file_stats(spark, new_files)
-            new_dvs = {f: dict(e) for f, e in m.get("dvs", {}).items()}
-            for f, n in per_file.items():
-                e = new_dvs.setdefault(f, {"parts": [], "rows": 0})
-                e["parts"] = list(e["parts"]) + parts
-                e["rows"] = int(e["rows"]) + n
-            # hoisted out of rebase(): legacy manifests recount here,
-            # and per-attempt rebase work must stay metadata-only
-            eff_rows = self._effective_rows(spark, m)
-
-        def rebase() -> tuple[list[str], int, dict]:
-            cur = self.current_version(spark)
-            if cur != base:
-                raise ConcurrentWriteError(
-                    f"update computed against v{base} but the snapshot "
-                    f"is now v{cur} — re-run the update on the new base"
-                )
-            extra: dict = {
-                "columns": m.get("columns", sorted(data_cols)),
-                "updated_rows": n_matched,
-                "dvs": new_dvs,
-            }
-            if m.get("evolved"):
-                extra["evolved"] = True
-            if m.get("schema"):
-                extra["schema"] = m["schema"]
-            else:
-                # transformed images appended on a legacy chain —
-                # homogeneity stays unprovable (see the merge rebase)
-                extra["read_merged"] = True
-            if m.get("stats") or new_stats:
-                extra["stats"] = {**m.get("stats", {}), **new_stats}
-            hwm = int(m.get("last_batch_id", -1))
-            if hwm >= 0:
-                extra["last_batch_id"] = hwm
-            return (
-                list(m["files"]) + new_files,
-                eff_rows,
-                extra,
+            return _RowChange(
+                candidates=m["files"],
+                match=lambda s: s.filter(cond),
+                rewrite=transform,
+                images=lambda found: transform(found.drop(*_POS)),
+                tally="updated_rows",
             )
 
-        return self._publish_cleanly(spark, "update", rebase, new_files, parts)
+        return self._row_change(
+            spark, "update", mode, expected_version, prepare
+        )
 
-    def _cow_rewrite(
+    def _row_change(
         self,
         spark: SparkSession,
-        pred,
         op: str,
-        transform,
+        mode: str,
         expected_version: int | None,
+        prepare,
+        batch_id: int | None = None,
     ) -> int:
-        """Shared engine of the row-rewriting ops (DELETE/UPDATE):
-        find the files containing predicate matches (one tagged scan,
-        metadata-scale collect), rewrite ONLY those through
-        ``transform``, carry the rest by name, commit CAS-guarded."""
+        """The ONE row-level change core behind MERGE, DELETE WHERE and
+        UPDATE WHERE: resolve the base snapshot once, let the op
+        validate against it (``prepare(base, manifest)`` returns its
+        :class:`_RowChange`), find → (rewrite | deletion vectors +
+        append) → one CAS commit.
+
+        - Find: the candidate files' live rows, tagged with their
+          (file, row_index) positions, filtered by the op's ``match``.
+          Merge-on-read always finds (the positions become deletion
+          vectors) and materializes the result once — the count, the
+          DV-part write and update's images reuse it — freeing it on
+          every exit. Copy-on-write finds only for ops that tally
+          their matches: the scan narrows the rewrite to files holding
+          live matches. MERGE's candidates are already decided from
+          metadata, so its copy-on-write path never scans to find.
+        - Write: copy-on-write rewrites the touched files' live rows
+          through ``rewrite`` (materializing their deletes); with no
+          file touched only the op's ``images`` land (MERGE inserts).
+          Merge-on-read writes the found positions as DV parts and
+          appends ``images``. Written frames conform to the recorded
+          schema; a write of zero rows lands no file.
+        - Commit: nothing rewritten, dead or written is a no-op unless
+          the call raises the streaming high-water mark (a CDC batch
+          commits once even when it changes no row); a tallying op
+          whose find matched nothing is a no-op. Rows are accounted
+          from metadata: effective rows − live rows of rewritten files
+          − new dead positions + rows written. The record carries
+          columns, schema, the evolved flag and the high-water mark;
+          it flags ``read_merged`` when files were added to a chain
+          without a schema record or the flag was already set."""
         from pyspark.sql import functions as F
 
-        base = (
-            self.current_version(spark)
-            if expected_version is None
-            else expected_version
+        from ..operators.checkpoints import (
+            checkpointed_rdd_id,
+            free_checkpoint,
         )
-        if base is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.path}")
-        m = self._manifest(spark, base)
+
+        if mode not in ("copy-on-write", "merge-on-read"):
+            raise ValueError(
+                f"unknown {op} mode {mode!r} — "
+                "'copy-on-write' or 'merge-on-read'"
+            )
+        mor = mode == "merge-on-read"
+        base, m = self._snapshot(spark, expected_version)
+        ch = prepare(base, m)
         stats = m.get("stats", {})
-
-        # touched-file detection reads the RAW files with the hidden
-        # _metadata columns and subtracts deletion vectors BEFORE the
-        # predicate: input_file_name() on the DV-applied read() would
-        # be a multi-source expression (scan ⋈ DV parquet — Spark
-        # rejects it), and a file whose only matches are already-dead
-        # rows must not trigger a rewrite
-        finder = self._reader_for(spark, m).parquet(
-            *[f"{self.path}/data/{f}" for f in m["files"]]
-        )
-        # type-validate the rewrite's output before the find scan (a
-        # delete's identity transform passes trivially; an update
-        # assignment with real drift fails with zero I/O)
-        self._conform_to_schema(transform(finder), m, f"{op} rewrite")
-        finder = finder.select(
-            F.col("_metadata.file_name").alias("__dv_f"),
-            F.col("_metadata.row_index").alias("__dv_pos"),
-            *finder.columns,  # reserved tags: a data column named
-            # _f/_pos must not collide with the position columns
-        )
-        finder = self._live_positions(finder, m)
-        hit_files = (
-            finder.filter(pred)
-            .select("__dv_f")
-            .distinct()
-            .collect()  # bounded by file count — metadata-scale
-        )
-        touched = {r["__dv_f"] for r in hit_files}
-        if not touched:
-            return base
-        untouched = [f for f in m["files"] if f not in touched]
-
-        old_rows = self._strip_dvs(
-            self._reader_for(spark, m).parquet(
-                *[f"{self.path}/data/{f}" for f in sorted(touched)]
-            ),
-            self._dv_frame(spark, m, sorted(touched)),
-            self._dv_rows(m, sorted(touched)),
-        )
-        touched_before = old_rows.count()
-        matched = old_rows.filter(F.coalesce(pred, F.lit(False))).count()
-        new_files, _, wrote_rows = self._write_files(
-            # same type contract as _update_mor: the rewrite carries
-            # the schema record forward, so its files must conform
-            self._conform_to_schema(transform(old_rows), m, f"{op} rewrite")
-        )
-        # pre-publish window: stats/count jobs over the staged rewrite
-        with self._staged_cleanup(spark, new_files):
+        # the streaming high-water mark survives every commit; a batch
+        # that raises it commits even when it changes no row, so its
+        # replay is skipped (one commit per batch)
+        last = int(m.get("last_batch_id", -1))
+        hwm = last if batch_id is None else max(last, int(batch_id))
+        raw = found = rdd = None
+        if ch.candidates and (mor or ch.tally):
+            raw = self._reader_for(spark, m).parquet(
+                *[f"{self.path}/data/{f}" for f in ch.candidates]
+            )
+            # reserved position tags: a data column named _f/_pos
+            # must not collide with them
+            tagged = raw.select(
+                F.col("_metadata.file_name").alias("__dv_f"),
+                F.col("_metadata.row_index").alias("__dv_pos"),
+                *[_qcol(c) for c in raw.columns],
+            )
+            found = ch.match(self._live_positions(tagged, m, ch.candidates))
+            if mor:
+                found = found.localCheckpoint()
+                rdd = checkpointed_rdd_id(found)
+        new_files: list[str] = []
+        parts: list[str] = []
+        # pre-publish no-orphan window: whatever landed by failure time
+        # (DV parts, data files) is deleted with the failure
+        with self._staged_cleanup(spark, new_files, parts):
+            try:
+                hits = {} if found is None else {
+                    r["__dv_f"]: int(r["n"])
+                    for r in found.groupBy("__dv_f")
+                    .agg(F.count("*").alias("n"))
+                    .collect()  # bounded by file count — metadata-scale
+                }
+                if ch.tally and not hits:
+                    return base  # no live row matches: no commit
+                dead = hits if mor else {}
+                if mor:
+                    removed = []
+                elif ch.tally:
+                    removed = sorted(hits)  # files holding live matches
+                else:
+                    removed = list(ch.candidates)  # decided from metadata
+                if dead:
+                    parts += self._write_files(
+                        found.select(
+                            F.col("__dv_f").alias("_f"),
+                            F.col("__dv_pos").alias("_pos"),
+                        ),
+                        subdir="deletes",
+                    )[0]
+                out = (
+                    ch.rewrite(self._live_rows(spark, m, removed))
+                    if removed
+                    else ch.images(found)
+                )
+                written = 0
+                if out is not None:
+                    staged, _, written = self._write_files(
+                        self._conform_to_schema(out, m, f"{op} rewrite")
+                    )
+                    new_files += staged  # extend: cleanup sees them
+                    if not written:
+                        self._abandon_files(spark, staged)
+                        new_files.clear()
+            finally:
+                free_checkpoint(spark, rdd)
+            if not (removed or dead or new_files) and hwm == last:
+                return base  # nothing changed: no commit
             new_stats = self._file_stats(spark, new_files)
-            new_rows = wrote_rows  # observed on the write job itself
-            final = untouched + new_files
-            # legacy manifest without a recorded count: recount like
-            # merge()/_merge_mor/_delete_mor do — a 0 default would
-            # drive the subtraction negative
-            rows = self._effective_rows(spark, m) - touched_before + new_rows
+            removed_live = self._rows_of(
+                spark, stats, removed
+            ) - self._dv_rows(m, removed)
+            rows = (
+                self._effective_rows(spark, m)
+                - removed_live
+                - sum(dead.values())
+                + written
+            )
+        gone = set(removed)
+        kept = [f for f in m["files"] if f not in gone]
+        extra: dict = {
+            "columns": m.get("columns")
+            or sorted((out if out is not None else raw).columns)
+        }
+        if ch.tally:
+            extra[ch.tally] = sum(hits.values())
+        if m.get("evolved"):
+            extra["evolved"] = True
+        if m.get("schema"):
+            extra["schema"] = m["schema"]  # a row change never alters it
+        elif new_files or m.get("read_merged"):
+            # files added to a chain without a schema record: a
+            # same-named type drift is undetectable, so homogeneity
+            # stays unprovable and reads keep merging footers
+            extra["read_merged"] = True
+        if hwm >= 0:
+            extra["last_batch_id"] = hwm
+        carried = {f: s for f, s in stats.items() if f not in gone}
+        if carried or new_stats:
+            extra["stats"] = {**carried, **new_stats}
+        dvs = {
+            f: dict(e) for f, e in m.get("dvs", {}).items() if f not in gone
+        }
+        for f, n in dead.items():
+            e = dvs.setdefault(f, {"parts": [], "rows": 0})
+            e["parts"] = list(e["parts"]) + parts
+            e["rows"] = int(e["rows"]) + n
+        if dvs:
+            extra["dvs"] = dvs
 
         def rebase() -> tuple[list[str], int, dict]:
             cur = self.current_version(spark)
@@ -3298,37 +2908,9 @@ class ManifestTable:
                     f"{op} computed against v{base} but the snapshot is "
                     f"now v{cur} — re-run the {op} on the new base"
                 )
-            extra: dict = {
-                "columns": m.get("columns", sorted(old_rows.columns))
-            }
-            if op == "delete":
-                extra["deleted_rows"] = matched
-            else:
-                extra["updated_rows"] = matched
-            if m.get("evolved"):
-                extra["evolved"] = True
-            if m.get("schema"):
-                extra["schema"] = m["schema"]
-            else:
-                # rewritten files landed on a legacy chain —
-                # homogeneity stays unprovable (see the merge rebase)
-                extra["read_merged"] = True
-            hwm = int(m.get("last_batch_id", -1))
-            if hwm >= 0:
-                extra["last_batch_id"] = hwm
-            carried = {f: s for f, s in stats.items() if f in set(untouched)}
-            if carried or new_stats:
-                extra["stats"] = {**carried, **new_stats}
-            carried_dvs = {
-                f: e
-                for f, e in m.get("dvs", {}).items()
-                if f in set(untouched)
-            }
-            if carried_dvs:
-                extra["dvs"] = carried_dvs
-            return final, rows, extra
+            return kept + new_files, rows, extra
 
-        return self._publish_cleanly(spark, op, rebase, new_files)
+        return self._publish_cleanly(spark, op, rebase, new_files, parts)
 
     # -- maintenance -----------------------------------------------------
 

@@ -73,6 +73,7 @@ def test_dedup_survives_partitions_of_only_degenerate_docs(spark):
     found r14 by the degenerate-input sweep, mutation-verified red
     with the non-empty-yield guard removed). Real ingests contain
     short and NULL docs; dedup must skip them, not crash."""
+    from yc_yq_airflow_etl_spark.operators import dedup
     from yc_yq_airflow_etl_spark.operators.dedup import (
         incremental_minhash_dedup,
         minhash_lsh_pairs,
@@ -91,6 +92,7 @@ def test_dedup_survives_partitions_of_only_degenerate_docs(spark):
     ).repartition(4)
     # every partition is all-skipped → result must be EMPTY, not a crash
     assert minhash_lsh_pairs(degenerate).count() == 0
+    assert dedup.LAST_MINHASH_CANDIDATES == 0
     assert simhash(degenerate.filter("text IS NOT NULL")).count() == 4
     # incremental: degenerate batch against a real index, and vice versa
     real = spark.createDataFrame(
@@ -131,6 +133,76 @@ def test_simhash_deterministic_and_locality(spark, docs):
 def test_simhash_pairs_pigeonhole(docs):
     pairs = {(r.id_a, r.id_b): r.hamming for r in simhash_dup_pairs(docs).collect()}
     assert pairs[(1, 2)] == 0 and pairs[(1, 5)] == 0 and pairs[(2, 5)] == 0
+
+
+# jobs per call on the sf0.001 corpus (local[4], 8 shuffle partitions)
+# before the candidate count was observed, when counting it was an
+# opt-in persist + count() of its own
+_PAIRS_JOBS = {"simhash": 12, "minhash": 15}
+
+
+@pytest.mark.parametrize("op", ["simhash", "minhash"])
+def test_candidate_count_is_observed_without_an_extra_job(
+    spark, testdata, monkeypatch, op
+):
+    """``LAST_{SIMHASH,MINHASH}_CANDIDATES`` (the candidate-pair volume
+    the bench's scale attribution reads) is set on every call, equals
+    the candidate set rebuilt here from the operator's own band
+    buckets, and rides the pair materialization: no extra job."""
+    from collections import defaultdict
+
+    from yc_yq_airflow_etl_spark.operators import dedup as D
+
+    docs = testdata["documents"]
+    if op == "simhash":
+        run = lambda: D.simhash_dup_pairs(docs, max_hamming=8)  # noqa: E731
+        keyed = [
+            (r.doc_id, b, (r.simhash >> (16 * b)) & 0xFFFF)
+            for r in D.simhash(docs).collect()
+            for b in range(4)
+        ]
+        cap = 1000
+    else:
+        run = lambda: D.minhash_lsh_pairs(  # noqa: E731
+            docs, jaccard_threshold=0.9
+        )
+        sig = D._signatures_pandas(
+            D._spread(docs, "doc_id"), "doc_id", "text", 3, 24
+        )
+        keyed = [
+            (r._id, r.band, r.bucket)
+            for r in D._band_explode(sig, 8, D._band_params(24, 8)).collect()
+        ]
+        cap = 50
+    buckets = defaultdict(list)
+    for i, band, key in keyed:
+        buckets[(band, key)].append(i)
+    want = len(
+        {
+            (a, b)
+            for ids in buckets.values()
+            if len(ids) <= cap
+            for a in ids
+            for b in ids
+            if a < b
+        }
+    )
+    run().unpersist()  # warm
+    attr = f"LAST_{op.upper()}_CANDIDATES"
+    monkeypatch.setattr(D, attr, None)
+    sc = spark.sparkContext
+    group = f"candidate_obs_{op}"
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup("", "")
+    n_pairs = out.count()
+    out.unpersist()
+    assert getattr(D, attr) == want
+    assert want > n_pairs  # the verify step drops candidates
+    assert n_jobs <= _PAIRS_JOBS[op]
 
 
 def test_similarity_survives_corrupt_vectors_and_ranks_them_last(spark):
@@ -1601,6 +1673,28 @@ def test_query_score_expression_is_memoized_and_reusable(spark):
     sa = a.select(_query_score("embedding", q).alias("c")).first().c
     sb = b.select(_query_score("embedding", q).alias("c")).first().c
     assert sa == 1.0 and sb == 0.0
+
+
+def test_query_score_cache_is_keyed_by_application_id(spark, monkeypatch):
+    """The memo key is the active context's application id, not ``id()``
+    of the context object: Python may hand a stopped context's ``id``
+    to the next context, which would then get the dead context's
+    Column. Two application ids never share an entry, even when the
+    context object (and so its ``id``) is the same one."""
+    from pyspark import SparkContext
+
+    from yc_yq_airflow_etl_spark.operators import similarity as S
+
+    q = (0.5, 0.25)
+    first = S._query_score("embedding", q)
+    app_id = SparkContext._active_spark_context.applicationId
+    assert S._query_score_for_ctx(app_id, "embedding", q) is first
+    monkeypatch.setattr(
+        SparkContext, "applicationId", property(lambda self: "app-next")
+    )
+    second = S._query_score("embedding", q)
+    assert second is not first
+    assert S._query_score("embedding", q) is second
 
 
 def test_quantization_refuses_or_nulls_non_finite_vectors(spark):

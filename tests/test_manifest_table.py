@@ -46,6 +46,49 @@ def test_append_accumulates_and_time_travel(spark, table):
     assert table.read(spark, version=0).count() == 100
 
 
+def _data_files(table):
+    return {
+        f for f in os.listdir(f"{table.path}/data") if f.endswith(".parquet")
+    }
+
+
+def test_empty_append_lands_no_file(spark, table):
+    """An empty frame that adds no column leaves the content as it is:
+    no data file lands and, with no batch id raising the high-water
+    mark, nothing commits. An empty frame that adds a column still
+    commits (the column is new content)."""
+    v0 = table.overwrite(_df(spark, 0, 10))
+    files = table.manifest_files(spark, v0)
+    assert table.append(_df(spark, 0, 0)) == v0
+    assert table.current_version(spark) == v0
+    assert _data_files(table) == set(files)
+    assert table.read(spark).count() == 10
+    v1 = table.append(_df(spark, 0, 0).withColumn("w", F.lit(1)))
+    assert v1 == v0 + 1
+    assert "w" in table._manifest(spark, v1)["columns"]
+
+
+def test_commit_batch_of_empty_batch_records_batch_id_without_a_file(
+    spark, table
+):
+    """``commit_batch`` appends every micro-batch: an empty one commits
+    once, metadata-only, to record its batch id (same files, rows and
+    content keys), and its replay is skipped."""
+    from yc_yq_airflow_etl_spark.streaming.manifest_sink import commit_batch
+
+    v0 = table.overwrite(_df(spark, 0, 10))
+    assert commit_batch(table, _df(spark, 0, 0), 3) is True
+    v1 = table.current_version(spark)
+    m0, m1 = table._manifest(spark, v0), table._manifest(spark, v1)
+    assert v1 == v0 + 1 and m1["last_batch_id"] == 3
+    assert _data_files(table) == set(m0["files"])
+    for k in ("files", "rows", "columns", "schema", "stats"):
+        assert m1.get(k) == m0.get(k), k
+    assert commit_batch(table, _df(spark, 0, 0), 3) is False
+    assert table.current_version(spark) == v1
+    assert table.read(spark).count() == 10
+
+
 def test_compact_preserves_rows_and_snapshot_isolation(spark, table):
     table.overwrite(_df(spark, 0, 50))
     for lo in range(50, 250, 50):

@@ -38,8 +38,9 @@ ratio over ``BENCH_CONTROLS`` (q4/q12/q14/q18 — never edit these
 without re-baselining) is therefore the right deflator for the bench
 wall. Effective-metric preference for the bench: control-normalized
 (when >= MIN_CONTROLS pair) > canary-normalized > raw. The flag
-output self-triages: "controls inflated n%, normalized growth m%" —
-what used to take a judge an afternoon of per-query archaeology.
+output self-triages: "controls inflated n%, normalized growth m%".
+:func:`ladder` is the one implementation of that preference; bench.py
+records its own run against the committed sidecar through it too.
 
 TWO-EPOCH REALITY (documented per the r14 verdict): the committed
 sidecar (bench_structure.json) is necessarily written by the
@@ -122,6 +123,63 @@ def control_ratio(
     mid = n // 2
     med = ratios[mid] if n % 2 else (ratios[mid - 1] + ratios[mid]) / 2.0
     return round(med, 3), n
+
+
+def ladder(
+    now: float | None,
+    ref: float | None,
+    ctl_ratio: float | None = None,
+    ctl_n: int = 0,
+    now_canary: float | None = None,
+    ref_canary: float | None = None,
+) -> dict:
+    """The normalization ladder for one wall metric: growth of ``now``
+    over ``ref``, deflated by the first rung that applies —
+
+    1. CONTROL SET (``ctl_ratio``, see :func:`control_ratio`): sees the
+       multi-core contention the single-thread canary cannot;
+    2. single-thread CANARY (``now_canary / ref_canary``): boot-to-boot
+       CPU drift;
+    3. raw growth.
+
+    Whichever applies is the SOLE effective metric — never OR-ed with
+    raw, so a faster host cannot mask a real regression. Returns
+    ``host_canary_ratio``, ``growth_pct``, ``normalizer`` ("controls",
+    "canary" or None), ``normalized_growth_pct``, ``flag`` (effective
+    growth past MAX_GROWTH_PCT) and ``note`` (the self-triage text);
+    the growth fields are None and ``flag`` False without a
+    reference."""
+    host = (
+        round(now_canary / ref_canary, 3) if now_canary and ref_canary else None
+    )
+    r = {
+        "host_canary_ratio": host,
+        "growth_pct": None,
+        "normalizer": None,
+        "normalized_growth_pct": None,
+        "flag": False,
+        "note": "",
+    }
+    if now is None or not ref:
+        return r
+    r["growth_pct"] = growth = 100.0 * (now / ref - 1.0)
+    if ctl_ratio or host:
+        r["normalizer"] = "controls" if ctl_ratio else "canary"
+        norm = 100.0 * (now / (ctl_ratio or host) / ref - 1.0)
+        r["normalized_growth_pct"] = norm
+        r["note"] = (
+            f", controls inflated {100.0 * (ctl_ratio - 1.0):+.1f}% "
+            f"(median of {ctl_n}), normalized growth {norm:+.1f}%"
+            if ctl_ratio
+            else f", host-normalized {norm:+.1f}% at canary ratio {host}"
+        )
+    else:
+        norm = growth
+        r["note"] = (
+            ", no control/canary pair — raw growth is the effective metric"
+        )
+    r["flag"] = norm > MAX_GROWTH_PCT
+    return r
 
 
 def measure_suite_sec_per_test() -> tuple[float, int, float | None] | None:
@@ -266,41 +324,11 @@ def main() -> int:
         if now is None or not ref:
             print(f"SKIP  {label}: no measurement recorded yet")
             continue
-        host_ratio = (
-            round(now_canary / ref_canary, 3)
-            if now_canary and ref_canary
-            else None
-        )
-        growth = 100.0 * (now / ref - 1.0)
-        # normalizer preference: control set (sees multi-core
-        # contention) > single-thread canary (sees boot-to-boot CPU
-        # drift) > raw. Whichever applies is the SOLE effective metric.
-        if ctl:
-            norm_growth = 100.0 * (now / ctl / ref - 1.0)
-            norm_note = (
-                f", controls inflated {100.0 * (ctl - 1.0):+.1f}% "
-                f"(median of {ctl_n}), normalized growth "
-                f"{norm_growth:+.1f}%"
-            )
-        elif host_ratio:
-            norm_growth = 100.0 * (now / host_ratio / ref - 1.0)
-            norm_note = (
-                f", host-normalized {norm_growth:+.1f}% at canary ratio "
-                f"{host_ratio}"
-            )
-        else:
-            norm_growth = None
-            norm_note = (
-                ", no control/canary pair — raw growth is the "
-                "effective metric"
-            )
-        effective = norm_growth if norm_growth is not None else growth
-        status = "FLAG " if effective > MAX_GROWTH_PCT else "OK   "
-        if effective > MAX_GROWTH_PCT:
-            flags += 1
+        r = ladder(now, ref, ctl, ctl_n, now_canary, ref_canary)
+        flags += r["flag"]
         print(
-            f"{status} {label}: {now} vs budget {ref} "
-            f"({growth:+.1f}%{norm_note})"
+            f"{'FLAG ' if r['flag'] else 'OK   '} {label}: {now} vs budget "
+            f"{ref} ({r['growth_pct']:+.1f}%{r['note']})"
         )
     return 1 if flags else 0
 

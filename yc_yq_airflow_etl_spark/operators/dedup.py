@@ -23,7 +23,7 @@ Scale design (the 100 TB story, applied to every op here):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.scalar import round6
@@ -315,7 +315,7 @@ def minhash_lsh_pairs(
     # explode + both verify-join sides) otherwise run as concurrent
     # stages of one job, each recomputing the full hash plan before
     # any of them has populated the cache.
-    sig.count()
+    n_sig = sig.count()
 
     # narrow band table: (id, band, bucket) only — keeps the explode,
     # the bucket-size aggregation, and the candidate self-join free of
@@ -338,14 +338,8 @@ def minhash_lsh_pairs(
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    global LAST_MINHASH_CANDIDATES
-    cand_cached = False
-    if RECORD_MINHASH_CANDIDATES:
-        cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
-        LAST_MINHASH_CANDIDATES = cand.count()
-        cand_cached = True
-    else:
-        LAST_MINHASH_CANDIDATES = None
+    cand_obs = Observation()
+    cand = cand.observe(cand_obs, F.count(F.lit(1)).alias("n"))
 
     # verification join: candidates (small) back to the persisted
     # signature table for exact Jaccard + signature-agreement estimate
@@ -387,8 +381,11 @@ def minhash_lsh_pairs(
         ).filter(F.col("jaccard") >= jaccard_threshold),
         sig,
     )
-    if cand_cached:
-        cand.unpersist(blocking=False)
+    global LAST_MINHASH_CANDIDATES
+    # an empty signature table lets AQE prune the verify joins, and the
+    # observed candidate frame under them, before they run (no count
+    # is reported): no signature, no candidate
+    LAST_MINHASH_CANDIDATES = int(cand_obs.get["n"]) if n_sig else 0
     return out
 
 
@@ -741,22 +738,14 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
     return _spread(df, id_col).select(id_col, text_col).mapInPandas(gen, schema)
 
 
-# Scale-attribution instrumentation (bench-only): when the flag is on,
-# simhash_dup_pairs counts its candidate set (the post-bucket-cap,
-# pre-verify pair volume) into LAST_SIMHASH_CANDIDATES so a
-# super-linear wall-time ratio can be attributed — candidates growing
-# with the data is a FIXTURE property (denser buckets), candidates
-# growing faster than output against flat data would be a plan
-# regression. Off by default: the count is an extra action on the
-# heavy join and has no business in production runs.
-RECORD_SIMHASH_CANDIDATES: bool = False
+# Scale attribution: the candidate-pair volume (post-bucket-cap,
+# pre-verify) of the most recent simhash_dup_pairs / minhash_lsh_pairs
+# call in this process, so a super-linear wall-time ratio can be
+# attributed — candidates growing with the data is a FIXTURE property
+# (denser buckets), candidates outgrowing the output pairs would be a
+# plan regression. Observed on the candidate frame (DataFrame.observe)
+# and collected by _finish_pairs' materialization: no extra job.
 LAST_SIMHASH_CANDIDATES: int | None = None
-
-# Same instrumentation for the minhash band-bucket path (r10 verdict:
-# attribute the dedup_minhash_pairs 10x ratio drift exactly like
-# simhash's): candidate volume after the bucket cap, before the exact-
-# Jaccard verify join.
-RECORD_MINHASH_CANDIDATES: bool = False
 LAST_MINHASH_CANDIDATES: int | None = None
 
 
@@ -816,14 +805,8 @@ def simhash_dup_pairs(
         .filter(F.col("id_a") < F.col("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    global LAST_SIMHASH_CANDIDATES
-    cand_cached = False
-    if RECORD_SIMHASH_CANDIDATES:
-        cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
-        LAST_SIMHASH_CANDIDATES = cand.count()
-        cand_cached = True
-    else:
-        LAST_SIMHASH_CANDIDATES = None
+    cand_obs = Observation()
+    cand = cand.observe(cand_obs, F.count(F.lit(1)).alias("n"))
     hamming = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
     out = _finish_pairs(
         cand.select("id_a", "id_b", hamming.alias("hamming")).filter(
@@ -831,8 +814,8 @@ def simhash_dup_pairs(
         ),
         fp,
     )
-    if cand_cached:
-        cand.unpersist(blocking=False)
+    global LAST_SIMHASH_CANDIDATES
+    LAST_SIMHASH_CANDIDATES = int(cand_obs.get["n"])
     return out
 
 
@@ -1025,8 +1008,6 @@ def connected_components(
     # metric there removes the per-round `.agg().first()` job — one
     # fewer full O(V) pass per round (and per-round job-submission
     # latency), with the identical DECIMAL(38,0) overflow-safe sum.
-    from pyspark.sql import Observation
-
     _label_sum = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
     obs0 = Observation()
     labels = (

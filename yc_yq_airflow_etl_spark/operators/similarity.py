@@ -170,7 +170,7 @@ def query_literal(vec: Sequence[float]) -> Column:
 
 @lru_cache(maxsize=64)
 def _query_score_for_ctx(
-    ctx_token: int, vec_col: str, qt: tuple[float, ...]
+    app_id: str | None, vec_col: str, qt: tuple[float, ...]
 ) -> Column:
     # let-bound scoring (r18): the naive composition executed the
     # query literal's norm fold (which Catalyst does NOT constant-
@@ -193,16 +193,20 @@ def _query_score(vec_col: str, qt: tuple[float, ...]) -> Column:
     number of plans; the cache key is pure values, so the entry is
     deterministic.
 
-    The key carries the ACTIVE SparkContext's identity (r18, ADVICE):
-    a Column wraps py4j JVM references, so an entry cached under a
+    The key carries the ACTIVE SparkContext's application id: a
+    Column wraps py4j JVM references, so an entry cached under a
     stopped-and-recreated context would be a stale JVM handle and
     every same-key call after the restart would die with opaque py4j
     errors instead of rebuilding the expression. A new context simply
-    misses the cache and rebuilds."""
+    misses the cache and rebuilds. The application id, not ``id()`` of
+    the context object: Python may hand a stopped context's ``id`` to
+    its successor, while every context gets a fresh application id."""
     from pyspark import SparkContext
 
     sc = SparkContext._active_spark_context
-    return _query_score_for_ctx(id(sc), vec_col, qt)
+    return _query_score_for_ctx(
+        sc.applicationId if sc is not None else None, vec_col, qt
+    )
 
 
 def brute_force_topk(

@@ -285,6 +285,11 @@ def _qcol(name: str):
 # the (file, row_index) position columns a find step tags rows with
 _POS = ("__dv_f", "__dv_pos")
 
+# manifest keys describing a snapshot's content beyond its file list
+# and row count: a commit that re-publishes a snapshot's content
+# (heal, restore, a batch-id-only append) carries exactly these
+_CONTENT_KEYS = ("columns", "schema", "stats", "evolved", "read_merged", "dvs")
+
 
 class _RowChange(NamedTuple):
     """What one row-level op hands :meth:`ManifestTable._row_change`:
@@ -1182,6 +1187,11 @@ class ManifestTable:
         replay of an already-committed micro-batch is detectable from
         the LATEST manifest alone (surviving vacuum of old ones).
 
+        An empty frame that adds no column to an existing table lands
+        no file: it commits (metadata-only) only when ``batch_id``
+        raises the high-water mark, else it returns the current
+        version.
+
         Types: NEW columns evolve freely; a column the table already
         has must conform to the recorded schema — lossless numeric
         widenings cast to the table's type, real drift raises HERE,
@@ -1192,6 +1202,16 @@ class ManifestTable:
         streaming sink would brick the table."""
         df = self._conform_to_current(df, "append")
         new_files, spark, wrote_rows = self._write_files(df)
+        if not wrote_rows:
+            base = self.current_version(spark)
+            m = self._manifest(spark, base) if base is not None else {}
+            if base is not None and set(df.columns) <= set(
+                m.get("columns") or []
+            ):
+                # no row and no new column: the content is unchanged,
+                # so land no file (the row-change core's no-op rule)
+                self._abandon_files(spark, new_files)
+                return self._record_batch(spark, base, m, batch_id)
         # pre-publish no-orphan window (stats job + rebase build);
         # publish failures get _publish_cleanly's classification
         with self._staged_cleanup(spark, new_files):
@@ -1202,6 +1222,31 @@ class ManifestTable:
                 new_schema=df.schema, new_rows_known=wrote_rows,
             )
         return self._publish_cleanly(spark, "append", rebase, new_files)
+
+    def _record_batch(
+        self, spark: SparkSession, base: int, m: dict, batch_id: int | None
+    ) -> int:
+        """Metadata-only commit of ``batch_id`` as the streaming
+        high-water mark: files, rows and every content key carry over
+        unchanged. A no-op returning ``base`` (snapshot ``m``) unless
+        ``batch_id`` raises the mark, so an empty micro-batch commits
+        once and its replay is skipped."""
+        if batch_id is None or int(batch_id) <= int(
+            m.get("last_batch_id", -1)
+        ):
+            return base
+
+        def rebase() -> tuple[list[str], int, dict]:
+            # re-resolved per attempt: a commit winning the race moves
+            # the content this one carries
+            cur = self._manifest(spark, self.current_version(spark))
+            extra = {k: cur[k] for k in _CONTENT_KEYS if k in cur}
+            extra["last_batch_id"] = max(
+                int(cur.get("last_batch_id", -1)), int(batch_id)
+            )
+            return cur["files"], self._effective_rows(spark, cur), extra
+
+        return self._publish_cleanly(spark, "append", rebase, [])
 
     def write_audit_publish(
         self, df: DataFrame, rules, batch_id: int | None = None
@@ -1397,18 +1442,7 @@ class ManifestTable:
             m = self._try_manifest(spark, v)
             if m is None or _missing_of(m):
                 continue
-            extra_base = {
-                k: m[k]
-                for k in (
-                    "columns",
-                    "schema",
-                    "stats",
-                    "evolved",
-                    "read_merged",
-                    "dvs",
-                )
-                if k in m
-            }
+            extra_base = {k: m[k] for k in _CONTENT_KEYS if k in m}
 
             def rebase() -> tuple[list[str], int, dict]:
                 extra = dict(extra_base)
@@ -1674,18 +1708,7 @@ class ManifestTable:
             )
 
         def _content_publish(src: dict, src_version: int, extra2: dict) -> int:
-            extra_base = {
-                k: src[k]
-                for k in (
-                    "columns",
-                    "schema",
-                    "stats",
-                    "evolved",
-                    "read_merged",
-                    "dvs",
-                )
-                if k in src
-            }
+            extra_base = {k: src[k] for k in _CONTENT_KEYS if k in src}
 
             def rebase() -> tuple[list[str], int, dict]:
                 extra = dict(extra_base)

@@ -318,8 +318,7 @@ def main() -> None:
             f"{name}: {n} rows in {t}s (stages={s['stages']}, "
             f"shuf_w={s['shuffle_write_bytes']})"
         )
-    prev_walls = prev.get("queries", {})
-    for name in _steady_names(names, qs, out["queries"], prev_walls):
+    for name in _steady_names(names, qs, out, prev):
         first = out["queries"][name]
         _, t = _count(qs, name, spark, sf_dir)
         _record(out, name, first, t)
@@ -397,12 +396,16 @@ def _committed_sidecar() -> dict:
             return {}
 
 
-def _steady_names(names, qs, walls, prev_walls) -> list:
+def _steady_names(names, qs, out: dict, prev: dict) -> list:
     """The front, the headline set, the watch list, and up to 40
     queries whose first-run wall moved >1.25x against the committed
     sidecar: run-order artifacts are not confined to the front. A real
     plan regression survives its steady re-run; the cap keeps a
-    globally slow machine day from doubling the bench."""
+    globally slow machine day from doubling the bench. Only a sidecar
+    at this run's scale factor compares (the rule ``_wall_budget``
+    keeps): walls at another scale say nothing about a move."""
+    walls = out["queries"]
+    prev_walls = prev.get("queries", {}) if prev.get("sf") == out["sf"] else {}
     moved = sorted(
         (
             n

@@ -45,3 +45,15 @@ def test_every_setup_entry_is_callable():
     labels = [label for label, _ in bench.SETUP]
     assert len(labels) == 12 and len(set(labels)) == 12
     assert all(callable(fn) for _, fn in bench.SETUP)
+
+
+def test_steady_reruns_compare_walls_only_at_the_same_scale_factor():
+    names = [f"q{i}" for i in range(14)]
+    qs = dict.fromkeys(names)
+    out = {"sf": 0.01, "queries": dict.fromkeys(names, 1.0)}
+    out["queries"]["q13"] = 3.0  # 3x the committed wall
+    committed = {"queries": dict.fromkeys(names, 1.0)}
+    same = bench._steady_names(names, qs, out, {**committed, "sf": 0.01})
+    other = bench._steady_names(names, qs, out, {**committed, "sf": 0.1})
+    assert "q13" in same
+    assert other == names[:12]

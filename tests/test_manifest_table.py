@@ -4569,12 +4569,12 @@ def _run_row_change(spark, t, op, mode, rejected=False):
 # Per-call job ceilings on this fixture, measured when the ceilings
 # were set: a change may lower a count, never raise it.
 _ROW_CHANGE_JOB_CEILING = {
-    ("merge", "copy-on-write"): 9,
-    ("merge", "merge-on-read"): 15,
-    ("delete_where", "copy-on-write"): 10,
+    ("merge", "copy-on-write"): 6,
+    ("merge", "merge-on-read"): 10,
+    ("delete_where", "copy-on-write"): 3,
     ("delete_where", "merge-on-read"): 4,
-    ("update_where", "copy-on-write"): 10,
-    ("update_where", "merge-on-read"): 8,
+    ("update_where", "copy-on-write"): 3,
+    ("update_where", "merge-on-read"): 5,
 }
 
 
@@ -4665,3 +4665,290 @@ def test_cdc_batch_changing_no_row_still_commits_once(spark, tmp_path, mode):
     assert apply_cdc_batch(mt, batch, 3, "id", "seq", mode=mode) is False
     assert mt.current_version(spark) == 1
     assert sorted(r.id for r in mt.read(spark).collect()) == list(range(6))
+
+
+# -- footer stats (``_file_stats`` without a Spark pass) ---------------------
+
+_NAN, _BIG = float("nan"), "b" * 5000  # over parquet-mr's 4 KiB bound cap
+
+
+@pytest.mark.parametrize(
+    "schema, rows, footer_answers",
+    [
+        ("x tinyint", [(-128,), (127,), (None,), (3,)], True),
+        ("x smallint", [(-32768,), (32767,), (None,)], True),
+        ("x int", [(-(2**31),), (2**31 - 1,), (None,)], True),
+        ("x bigint", [(-(2**63),), (2**63 - 1,), (None,)], True),
+        ("x float", [(0.1,), (-2.5,), (None,), (3.25e38,)], True),
+        ("x double", [(0.1,), (-1e300,), (None,), (5e-324,)], True),
+        ("x string", [("Z",), ("é",), ("\uffff",), ("\U0001f600",)], True),
+        ("x double, s string", [(None, None), (None, None)], True),
+        ("x float", [(1.5,), (_NAN,)], False),
+        ("x double", [(1.5,), (_NAN,), (None,)], False),
+        ("x float", [(-0.0,), (0.0,), (2.0,)], False),
+        ("x double", [(1.0,), (0.0,), (-0.0,)], False),
+        ("x string", [("a",), (_BIG,)], False),
+    ],
+    ids=[
+        "tinyint", "smallint", "int", "bigint", "float", "double",
+        "non-ascii-string", "null-only", "float-nan", "double-nan",
+        "float-signed-zeros", "double-signed-zeros", "string-over-4k",
+    ],
+)
+def test_footer_stats_match_the_spark_pass(
+    spark, tmp_path, schema, rows, footer_answers
+):
+    """Every recorded stats entry is byte-identical to the Spark pass's
+    (the route it replaces). Where the footer cannot give that exact
+    answer — NaN, a zero of either sign, a bound parquet-mr omitted —
+    the footer route declines and the entry is the Spark pass's."""
+    import json as _json
+
+    cols = tuple(f.split()[0] for f in schema.split(", "))
+    t = ManifestTable(str(tmp_path / "t"), stat_cols=cols)
+    t.overwrite(spark.createDataFrame(rows, schema).coalesce(1))
+    m = t._manifest(spark, 0)
+    (f,) = m["files"]
+    scanned = t._scanned_stats(spark, [f])
+    footer = t._footer_stats(t._footer_reader(spark)(f), None)
+    assert (footer is not None) is footer_answers
+    if footer_answers:
+        assert _json.dumps(footer) == _json.dumps(scanned[f])
+    assert _json.dumps(m["stats"]) == _json.dumps(scanned)
+
+
+def test_footer_stats_merge_row_groups_and_skip_empty_files(spark, tmp_path):
+    """Row counts, null counts and bounds merge across row groups
+    exactly as one Spark pass over the file computes them; a file
+    with no rows records no entry on either route; a string bound the
+    writer may have truncated sends the file to the Spark pass."""
+    import json as _json
+
+    import pyarrow.parquet as pq
+
+    t = ManifestTable(str(tmp_path / "rg"), stat_cols=("id", "s"))
+    spark.conf.set("parquet.block.size", "4096")
+    try:
+        t.overwrite(
+            spark.range(0, 20_000, numPartitions=1).select(
+                ((F.col("id") * 7919) % 20_000 - 5_000).alias("id"),
+                F.when(F.col("id") % 7 != 0, F.concat(F.lit("k"), F.col("id")))
+                .alias("s"),
+            )
+        )
+    finally:
+        spark.conf.unset("parquet.block.size")
+    (f,) = t._manifest(spark, 0)["files"]
+    assert pq.ParquetFile(f"{t.path}/data/{f}").num_row_groups > 1
+    footer = t._footer_stats(t._footer_reader(spark)(f), None)
+    assert _json.dumps(footer) == _json.dumps(t._scanned_stats(spark, [f])[f])
+
+    e = ManifestTable(str(tmp_path / "empty"), stat_cols=("id",))
+    e.overwrite(spark.createDataFrame([], "id long"))
+    (f,) = e._manifest(spark, 0)["files"]
+    assert e._footer_stats(e._footer_reader(spark)(f), None) == {}
+    assert e._scanned_stats(spark, [f]) == {}
+    assert "stats" not in e._manifest(spark, 0)
+
+    s = ManifestTable(str(tmp_path / "trunc"), stat_cols=("s",))
+    spark.conf.set("parquet.statistics.truncate.length", "4")
+    try:
+        s.overwrite(
+            spark.createDataFrame([("abcdefgh",), ("zzzzzzzz",)], "s string")
+            .coalesce(1)
+        )
+    finally:
+        spark.conf.unset("parquet.statistics.truncate.length")
+    (f,) = s._manifest(spark, 0)["files"]
+    assert s._footer_stats(s._footer_reader(spark)(f), 4) is None
+    assert s._manifest(spark, 0)["stats"][f]["s"] == ["abcdefgh", "zzzzzzzz"]
+
+
+# -- merge-on-read CDC apply: one validation, per-key candidates ------------
+
+
+def _cdc_batch(spark, b):
+    """~1,000 changes on a 20,000-key table: 400 keys updated twice,
+    100 deleted, 100 inserted."""
+    return (
+        spark.range(400)
+        .select(((F.col("id") * 37 + b) % 20_000).alias("id"))
+        .crossJoin(spark.range(1, 3).withColumnRenamed("id", "seq"))
+        .select("id", (F.col("id") * b).alias("v"), "seq", F.lit("U").alias("op"))
+        .unionByName(
+            spark.range(100).select(
+                (F.col("id") * 29 + 15_000 + b).alias("id"),
+                F.lit(0).cast("long").alias("v"),
+                F.lit(1).cast("long").alias("seq"),
+                F.lit("D").alias("op"),
+            )
+        )
+        .unionByName(
+            spark.range(100).select(
+                (F.col("id") + 20_000 + 100 * b).alias("id"),
+                F.col("id").alias("v"),
+                F.lit(1).cast("long").alias("seq"),
+                F.lit("I").alias("op"),
+            )
+        )
+    )
+
+
+def test_cdc_merge_on_read_batch_job_budget(spark, tmp_path):
+    """One merge-on-read ``apply_cdc_batch``, its collapse included,
+    runs at most 12 Spark jobs — also once deletion vectors exist —
+    and leaves the persisted-RDD set as it found it."""
+    from yc_yq_airflow_etl_spark.streaming.manifest_sink import apply_cdc_batch
+
+    t = ManifestTable(str(tmp_path / "t"), stat_cols=("id",))
+    t.overwrite(_df(spark, 0, 20_000).repartition(8))
+    sc = spark.sparkContext
+    before = _persisted_rdd_ids(spark)
+    for b in (1, 2):
+        group = f"cdc_mor_batch_{b}"
+        sc.setJobGroup(group, group)
+        try:
+            assert apply_cdc_batch(
+                t, _cdc_batch(spark, b), b, "id", "seq", mode="merge-on-read"
+            )
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setJobGroup("", "")
+        assert jobs <= 12, (b, jobs)
+        assert _persisted_rdd_ids(spark) == before
+    assert t.read(spark).count() == 20_000  # 200 deleted, 200 inserted
+
+
+def _with_synthetic_files(spark, t, entries):
+    """Re-publish ``t``'s latest manifest in place with extra files
+    that have recorded stats but no bytes on disk: any scan of one
+    fails loudly."""
+    import json as _json
+
+    v = t.current_version(spark)
+    m = t._manifest(spark, v)
+    for i, stats in enumerate(entries):
+        name = f"synth_{i:02d}.parquet"
+        m["files"].append(name)
+        m["stats"][name] = {"rows:": 10, **stats}
+        m["rows"] = int(m["rows"]) + 10
+    with open(f"{t.path}/_manifests/v{v}.json", "w") as fh:
+        _json.dump(m, fh)
+    crc = f"{t.path}/_manifests/.v{v}.json.crc"
+    if os.path.exists(crc):
+        os.remove(crc)
+
+
+@pytest.mark.parametrize("proof", ["range", "bucket"])
+def test_cdc_merge_on_read_scans_only_candidate_files(spark, tmp_path, proof):
+    """The merge-on-read CDC path still skips files from metadata, key
+    by key: the batch updates and deletes old keys of 1 of 8 files and
+    inserts new keys, one above every file, so its overall [min, max]
+    covers all 8 — yet by disjoint recorded ranges, or by disjoint
+    bucket sets under ranges that cover every old key, the other 7
+    (stats but no bytes, so a scan of one fails) are never read."""
+    from yc_yq_airflow_etl_spark.streaming.manifest_sink import apply_cdc_batch
+
+    buckets = 64
+    t = ManifestTable(
+        str(tmp_path / "t"),
+        stat_cols=("id",),
+        bucket_cols=(("id", buckets),) if proof == "bucket" else (),
+    )
+    t.overwrite(_ranged(spark, 0, 100))
+    changes = [
+        (3, 30, 1, "U"), (5, 0, 1, "D"), (150, 1, 1, "I"), (50_000, 2, 1, "I"),
+    ]
+    if proof == "range":
+        synth = [
+            {"id": [i * 1000, i * 1000 + 999], "nulls:id": 0}
+            for i in range(1, 8)
+        ]
+    else:
+        hit = {t.bucket_of(spark, "id", k) for k, *_ in changes}
+        other = sorted(set(range(buckets)) - hit)
+        synth = [
+            {"id": [0, 1000], "nulls:id": 0, "bucket:id": other[i::7]}
+            for i in range(7)
+        ]
+    _with_synthetic_files(spark, t, synth)
+    batch = spark.createDataFrame(
+        changes, "id long, v long, seq long, op string"
+    )
+    v = apply_cdc_batch(t, batch, 1, "id", "seq", mode="merge-on-read")
+    assert v
+    m = t._manifest(spark, t.current_version(spark))
+    assert m["rows"] == 100 + 70 + 1  # one delete, two inserts
+    assert {f: e["rows"] for f, e in m["dvs"].items()} == {
+        m["files"][0]: 2  # the update's old row and the delete
+    }
+
+
+_cdc_changes = st.lists(
+    st.tuples(
+        st.one_of(st.none(), st.integers(min_value=0, max_value=60)),
+        st.sampled_from(["U", "D"]),
+    ),
+    min_size=1,
+    max_size=12,
+    unique_by=lambda c: c[0],
+)
+
+
+@settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[
+        HealthCheck.too_slow,
+        HealthCheck.function_scoped_fixture,
+    ],
+)
+@given(changes=_cdc_changes)
+def test_cdc_candidates_cover_every_file_holding_a_match(
+    spark, tmp_path_factory, monkeypatch, changes
+):
+    """The probe-chosen candidates of a merge-on-read CDC batch are
+    a superset of the files that actually hold one of its keys (range
+    and bucket proofs both active), and the applied table equals the
+    replayed model."""
+    from yc_yq_airflow_etl_spark.streaming.manifest_sink import apply_cdc_batch
+
+    path = str(tmp_path_factory.mktemp("cand") / "t")
+    t = ManifestTable(path, stat_cols=("id",), bucket_cols=(("id", 4),))
+    t.overwrite(_ranged(spark, 0, 15))
+    for lo in (15, 30, 45):
+        t.append(_ranged(spark, lo, lo + 15))
+    base = t._manifest(spark, t.current_version(spark))
+    picked: list = []
+    orig = ManifestTable._merge_probe
+
+    def spy(self, *args, **kwargs):
+        picked.append(orig(self, *args, **kwargs))
+        return picked[-1]
+
+    monkeypatch.setattr(ManifestTable, "_merge_probe", spy)
+    batch = spark.createDataFrame(
+        [(k, 7, 1, op) for k, op in changes],
+        "id long, v long, seq long, op string",
+    )
+    assert apply_cdc_batch(t, batch, 1, "id", "seq", mode="merge-on-read")
+    monkeypatch.undo()
+    keys = {k for k, _ in changes if k is not None}
+    holding = {
+        r.f
+        for r in spark.read.parquet(
+            *[f"{path}/data/{f}" for f in base["files"]]
+        )
+        .select(F.col("_metadata.file_name").alias("f"), "id")
+        .filter(F.col("id").isin(list(keys) or [-1]))
+        .collect()
+    }
+    assert len(picked) == 1 and holding <= set(picked[0])
+    model = {i: 2 * i for i in range(60)}
+    for k, op in changes:
+        if op == "D":
+            model.pop(k, None)
+        elif k is not None:
+            model[k] = 7
+    got = {r.id: r.v for r in t.read(spark).collect() if r.id is not None}
+    assert got == model

@@ -1081,7 +1081,16 @@ def dedup_cluster_assignments(
     ``keep iff doc_id == keeper_id`` — singletons (absent here) are
     kept implicitly, so the output stays bounded by the duplicate
     rate, not the corpus size."""
-    comp = connected_components(pairs, max_iter=25)
+    return cluster_assignments(
+        connected_components(pairs, max_iter=25), id_col
+    )
+
+
+def cluster_assignments(comp: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """:func:`dedup_cluster_assignments` from the (id, label) frame
+    :func:`connected_components` returned — for a caller that
+    materializes the assignments and then frees that frame's
+    checkpoint."""
     sizes = comp.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
     # no forced broadcast: the cluster table scales with the duplicate
     # rate; AQE picks broadcast when it is in fact small

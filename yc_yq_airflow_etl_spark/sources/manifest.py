@@ -67,6 +67,7 @@ from __future__ import annotations
 
 import json
 import re
+import struct
 import time
 import uuid
 from contextlib import contextmanager
@@ -201,6 +202,43 @@ def _widens_to(src, dst) -> bool:
 # strings lexicographically — both orderings match Spark's)
 _STATS_TYPES = {"tinyint", "smallint", "int", "bigint", "float", "double", "string"}
 
+# how each stats type's footer min/max bytes decode (parquet-mr writes
+# them little-endian); None: a string, compared as unsigned UTF-8 bytes
+_FOOTER_FORMATS = {
+    "tinyint": "<i",
+    "smallint": "<i",
+    "int": "<i",
+    "bigint": "<q",
+    "float": "<f",
+    "double": "<d",
+    "string": None,
+}
+
+
+def _check_stat_types(stat_cols, types: dict) -> None:
+    for c in stat_cols:
+        if types.get(c) not in _STATS_TYPES:
+            raise ValueError(
+                f"stat column {c!r} has type {types.get(c)} — only "
+                f"{sorted(_STATS_TYPES)} survive the JSON manifest "
+                "round-trip with correct ordering"
+            )
+
+
+def _stats_truncate_length(spark: SparkSession) -> int | None:
+    """The byte length past which the session's Parquet writer
+    truncates string min/max (``parquet.statistics.truncate.length``;
+    unset: never). A footer string bound at or past it may be a
+    truncated prefix, not the value."""
+    vals = [
+        spark.conf.get("parquet.statistics.truncate.length", None),
+        spark._jsc.hadoopConfiguration().get(
+            "parquet.statistics.truncate.length"
+        ),
+    ]
+    set_ = [int(v) for v in vals if v]
+    return min(set_) if set_ else None
+
 
 def _stats_sql_type(bounds) -> str:
     """SQL type for a column of recorded min/max stat values (post-
@@ -284,6 +322,9 @@ def _qcol(name: str):
 
 # the (file, row_index) position columns a find step tags rows with
 _POS = ("__dv_f", "__dv_pos")
+
+# a deletion-vector part's columns: _metadata.file_name, row_index
+_DV_SCHEMA = "_f string, _pos bigint"
 
 # manifest keys describing a snapshot's content beyond its file list
 # and row count: a commit that re-publishes a snapshot's content
@@ -740,38 +781,189 @@ class ManifestTable:
     def _file_stats(
         self, spark: SparkSession, files: list[str]
     ) -> dict[str, dict[str, list]]:
-        """Per-file metadata for freshly-landed files in ONE
-        column-pruned Spark pass grouped by input_file_name (cost
-        scales with the NEW files only — carried-forward files keep
-        their recorded stats): min/max for ``stat_cols``, and for
-        ``bucket_cols`` the bounded set of bucket values present
-        (recorded under a ``bucket:<col>`` key so it can never collide
-        with a range entry). Returns {} when neither is configured."""
+        """Per-file metadata for freshly-landed files (cost scales with
+        the NEW files only — carried-forward files keep their recorded
+        stats): the physical row count, min/max and null count for
+        ``stat_cols``, and for ``bucket_cols`` the bounded set of
+        bucket values present (recorded under a ``bucket:<col>`` key
+        so it can never collide with a range entry). Returns {} when
+        neither is configured.
+
+        Parquet footers already hold row counts, min/max and null
+        counts, so without ``bucket_cols`` each entry is read from its
+        file's footer on the driver (:meth:`_footer_stats`) — no Spark
+        job, the way Iceberg and Delta take file stats from the
+        writer. One column-pruned Spark pass (:meth:`_scanned_stats`)
+        covers what footers cannot answer exactly: bucket sets, and
+        any file whose footer lacks a bound or may disagree with the
+        pass (see :meth:`_footer_stats`). Both routes record
+        byte-identical entries. Footers are read one after another:
+        ~4 ms per file on local files, under the pass's cost at every
+        size measured (1–300 files, 4-core host); a store with a high
+        per-request latency pays it once per file."""
         if (not self.stat_cols and not self.bucket_cols) or not files:
             return {}
+        out: dict[str, dict[str, list]] = {}
+        rest = list(files)
+        if not self.bucket_cols:
+            trunc = _stats_truncate_length(spark)
+            footer = self._footer_reader(spark)
+            rest = []
+            for f in files:
+                entry = self._footer_stats(footer(f), trunc)
+                if entry is None:
+                    rest.append(f)
+                elif entry:  # an empty file records no entry (as the pass)
+                    out[f] = entry
+        if rest:
+            out.update(self._scanned_stats(spark, rest))
+        return out
+
+    def _stats_entry(self, rows: int, ranges: dict) -> dict:
+        """One file's recorded stats entry from its row count and, per
+        stat column, ``(min, max, nulls)`` — the one layout both stats
+        routes record. The row count is keyed "rows:" (empty column
+        part) so it can never collide with a real column's range
+        entry; commits account rows from it instead of re-reading
+        freshly written data."""
+        entry: dict = {"rows:": int(rows)}
+        for c in self.stat_cols:
+            mn, mx, nulls = ranges[c]
+            # an entirely-null column yields null min/max: record NO
+            # range for it — readers then keep the file conservatively
+            # instead of comparing None against real bounds
+            if mn is not None and mx is not None:
+                entry[c] = [mn, mx]
+            # null count completes the stats triad (ranges, buckets,
+            # nulls): IS NULL probes prune on it, and min/max alone
+            # cannot say whether a file HAS nulls
+            entry[f"nulls:{c}"] = int(nulls or 0)
+        return entry
+
+    def _footer_reader(self, spark: SparkSession) -> Callable:
+        """``read(name)``: data file ``name``'s Parquet footer, read
+        through the table's Hadoop FileSystem by parquet-mr's footer
+        reader (so every store :meth:`_fs` handles works). The JVM
+        classes are resolved once, not per file. ``readFooter`` reads
+        only the footer; opening a ``ParquetFileReader`` for it cost
+        ~10x more per file (a 4-core host, local files)."""
+        jvm, fs = self._fs(spark)
+        parquet = jvm.org.apache.parquet
+        read_footer = parquet.hadoop.ParquetFileReader.readFooter
+        from_status = parquet.hadoop.util.HadoopInputFile.fromStatus
+        whole = parquet.format.converter.ParquetMetadataConverter.NO_FILTER
+        path = jvm.org.apache.hadoop.fs.Path
+        conf = spark._jsc.hadoopConfiguration()
+
+        def read(name: str):
+            status = fs.getFileStatus(path(f"{self.path}/data/{name}"))
+            return read_footer(from_status(status, conf), whole)
+
+        return read
+
+    def _footer_stats(self, footer, trunc: int | None) -> dict | None:
+        """A data file's stats entry from its Parquet ``footer``, with
+        row counts, null counts and min/max merged across row groups.
+        ``{}`` for a file with no rows (the Spark pass groups none).
+
+        Returns None — fall back to the Spark pass — wherever the
+        footer cannot give that pass's answer exactly: no Spark schema
+        in the footer; a row group with values but no min/max
+        (parquet-mr omits bounds over 4 KiB, and drops float bounds
+        when a NaN is present — Spark's max would be NaN); a float
+        bound of ±0.0 (the footer reader widens zeros to [-0.0, +0.0],
+        while Spark's min/max keeps whichever zero it met first); a
+        string bound the writer may have truncated (``trunc``); bytes
+        that are not UTF-8. Java lists are walked by index: each step
+        of a py4j iterator, its end included, is a round trip, and the
+        end arrives as a converted exception."""
+        meta = footer.getFileMetaData().getKeyValueMetaData().get(
+            "org.apache.spark.sql.parquet.row.metadata"
+        )
+        if meta is None:
+            return None
+        types = {
+            f.name: f.dataType.simpleString()
+            for f in _schema_from_json(meta).fields
+        }
+        _check_stat_types(self.stat_cols, types)
+        rows = 0
+        ranges = {c: [None, None, 0] for c in self.stat_cols}
+        at: dict[str, int] = {}  # stat column -> its chunk's position
+        blocks = footer.getBlocks()
+        for b in range(blocks.size()):
+            block = blocks.get(b)
+            n = block.getRowCount()
+            rows += n
+            chunks = block.getColumns()
+            if not at:  # every row group lists the same leaf columns
+                for i in range(chunks.size()):
+                    path = chunks.get(i).getPath().toArray()
+                    if len(path) == 1 and path[0] in ranges:
+                        at[path[0]] = i
+                if len(at) != len(ranges):
+                    return None
+            for c, i in at.items():
+                st = chunks.get(i).getStatistics()
+                nulls = st.getNumNulls()  # -1: not recorded
+                if nulls < 0:
+                    return None
+                ranges[c][2] += nulls
+                if not st.hasNonNullValue():
+                    if nulls < n:
+                        return None  # values present, bounds omitted
+                    continue
+                # strings stay bytes until the end: unsigned byte order
+                # is Spark's string order
+                fmt = _FOOTER_FORMATS[types[c]]
+                bounds = []
+                for raw in (bytes(st.getMinBytes()), bytes(st.getMaxBytes())):
+                    if fmt is None:
+                        if trunc is not None and len(raw) >= trunc:
+                            return None
+                        bounds.append(raw)
+                        continue
+                    if len(raw) != struct.calcsize(fmt):
+                        return None
+                    v = struct.unpack(fmt, raw)[0]
+                    if isinstance(v, float) and (v == 0.0 or v != v):
+                        return None
+                    bounds.append(v)
+                mn, mx, _ = ranges[c]
+                if mn is None or bounds[0] < mn:
+                    ranges[c][0] = bounds[0]
+                if mx is None or bounds[1] > mx:
+                    ranges[c][1] = bounds[1]
+        if not rows:
+            return {}
+        try:
+            return self._stats_entry(
+                rows,
+                {
+                    c: tuple(
+                        b.decode("utf-8") if isinstance(b, bytes) else b
+                        for b in r
+                    )
+                    for c, r in ranges.items()
+                },
+            )
+        except UnicodeDecodeError:
+            return None
+
+    def _scanned_stats(
+        self, spark: SparkSession, files: list[str]
+    ) -> dict[str, dict[str, list]]:
+        """:meth:`_file_stats` by ONE column-pruned Spark pass grouped
+        by input_file_name: the route for bucket sets, and the
+        reference the footer route must match."""
         from pyspark.sql import functions as F
 
         df = spark.read.option("ignoreMissingFiles", "false").parquet(
             *[f"{self.path}/data/{f}" for f in files]
         )
         types = dict(df.dtypes)
-        for c in self.stat_cols:
-            if types.get(c) not in _STATS_TYPES:
-                raise ValueError(
-                    f"stat column {c!r} has type {types.get(c)} — only "
-                    f"{sorted(_STATS_TYPES)} survive the JSON manifest "
-                    "round-trip with correct ordering"
-                )
-        aggs = [
-            # physical row count per file, rides the same pass for
-            # free: commits then account rows from METADATA (recorded
-            # count of carried/new files ± DV debt) instead of
-            # re-reading freshly written data — at 100 TB that second
-            # object-store scan per commit is the cost that matters.
-            # Keyed "rows:" (empty column part) so it can never
-            # collide with a real column's range entry.
-            F.count(F.lit(1)).alias("_rc"),
-        ]
+        _check_stat_types(self.stat_cols, types)
+        aggs = [F.count(F.lit(1)).alias("_rc")]
         for c in self.stat_cols:
             aggs.append(F.min(c).alias(f"_mn_{c}"))
             aggs.append(F.max(c).alias(f"_mx_{c}"))
@@ -805,18 +997,13 @@ class ManifestTable:
         )
         out: dict[str, dict[str, list]] = {}
         for r in rows:
-            entry = {"rows:": int(r["_rc"])}
-            for c in self.stat_cols:
-                mn, mx = r[f"_mn_{c}"], r[f"_mx_{c}"]
-                # an entirely-null column yields null min/max: record NO
-                # range for it — readers then keep the file conservatively
-                # instead of comparing None against real bounds
-                if mn is not None and mx is not None:
-                    entry[c] = [mn, mx]
-                # null count completes the stats triad (ranges, buckets,
-                # nulls): IS NULL probes prune on it, and min/max alone
-                # cannot say whether a file HAS nulls
-                entry[f"nulls:{c}"] = int(r[f"_nn_{c}"] or 0)
+            entry = self._stats_entry(
+                r["_rc"],
+                {
+                    c: (r[f"_mn_{c}"], r[f"_mx_{c}"], r[f"_nn_{c}"])
+                    for c in self.stat_cols
+                },
+            )
             for c, _ in self.bucket_cols:
                 # empty set is VALID metadata: only-null files match no
                 # equality probe, pruning them is correct
@@ -1847,7 +2034,9 @@ class ManifestTable:
         relevant to ``files`` (all files when None); None when there
         are no deletes to apply. Parts may conservatively hold
         positions of other files — the anti-join key includes the file
-        name, so extra pairs match nothing."""
+        name, so extra pairs match nothing. Its only readers are
+        left-anti joins, where a repeated pair changes nothing, so it
+        is not deduplicated (no shuffle per DV read)."""
         dvs = manifest.get("dvs", {})
         if files is not None:
             want = set(files)
@@ -1859,11 +2048,12 @@ class ManifestTable:
 
         return (
             # forced off like _reader_for: a skipped missing DV part
-            # silently RESURRECTS deleted rows
+            # silently RESURRECTS deleted rows. The parts' schema is
+            # fixed, so no job infers it from their footers
             spark.read.option("ignoreMissingFiles", "false")
+            .schema(_DV_SCHEMA)
             .parquet(*[f"{self.path}/deletes/{p}" for p in parts])
             .select(F.col("_f"), F.col("_pos"))
-            .distinct()
         )
 
     # Above this many dead rows the DV frame stops being broadcast:
@@ -2312,6 +2502,8 @@ class ManifestTable:
         batch_id: int | None = None,
         delete_keys: DataFrame | None = None,
         mode: str = "copy-on-write",
+        *,
+        _collapsed: bool = False,
     ) -> int:
         """Row-level MERGE (whole-row upsert by ``key``): rows of the
         snapshot whose key appears in ``updates`` are replaced,
@@ -2358,6 +2550,14 @@ class ManifestTable:
         caller whose delete keys are expensive to derive materializes
         them first, as the CDC sinks do.
 
+        ``_collapsed`` is private to :func:`apply_cdc_batch
+        <yc_yq_airflow_etl_spark.streaming.manifest_sink.apply_cdc_batch>`,
+        whose one materialization of the batch already holds one row
+        per key, split into disjoint upserts and deletes: the probe
+        then skips the duplicate and ambiguity checks that
+        materialization made and only picks the files (the same
+        per-key proofs, one job), and the batch is not persisted again.
+
         Concurrency is compare-and-swap: the commit validates the
         snapshot is still ``expected_version`` (default: the version
         read at entry) and raises :class:`ConcurrentWriteError`
@@ -2369,7 +2569,10 @@ class ManifestTable:
 
         spark = updates.sparkSession
         lvl = updates.storageLevel
-        ours = not (lvl.useMemory or lvl.useDisk or lvl.useOffHeap)
+        # a collapsed batch is a materialization already
+        ours = not (
+            _collapsed or lvl.useMemory or lvl.useDisk or lvl.useOffHeap
+        )
         if ours:
             updates = updates.persist(StorageLevel.MEMORY_AND_DISK)
 
@@ -2405,9 +2608,11 @@ class ManifestTable:
             drop_keys = ups.select(key)
             dk = None
             if delete_keys is not None:
+                # repeated keys change neither the semi/anti joins nor
+                # the probe's max(_d): no distinct, no shuffle for one
                 dk = delete_keys.select(
                     F.col(delete_keys.columns[0]).alias(key)
-                ).distinct()
+                )
                 drop_keys = drop_keys.unionByName(dk)
 
             def rewrite(rows: DataFrame) -> DataFrame:
@@ -2420,7 +2625,9 @@ class ManifestTable:
                 )
 
             return _RowChange(
-                candidates=self._merge_probe(spark, base, m, ups, dk, key),
+                candidates=self._merge_probe(
+                    spark, base, m, ups, dk, key, checked=_collapsed
+                ),
                 match=lambda s: s.join(
                     drop_keys, on=key, how="left_semi"
                 ).select(*_POS),
@@ -2444,6 +2651,7 @@ class ManifestTable:
         updates: DataFrame,
         dk: DataFrame | None,
         key: str,
+        checked: bool = False,
     ) -> list[str]:
         """MERGE's candidate files, decided from metadata. ONE
         batch-wide job decides everything the keys can decide:
@@ -2456,7 +2664,14 @@ class ManifestTable:
         live in file f only if k ∈ [min, max] AND bucket(k) ∈ the
         file's recorded set. Bucket sets matter for CDC at scale, where
         uniformly distributed keys make every file's range cover every
-        key. Files with neither proof are conservatively touched."""
+        key. Files with neither proof are conservatively touched.
+
+        ``checked``: the caller already guarantees one row per update
+        key and no key in both clauses, so the probe runs the same
+        per-key file join with neither the key grouping nor the checks
+        — its touched files gathered by ``observe`` on a ``noop``
+        write, one job with no shuffle."""
+        from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
         stats = m.get("stats", {})
@@ -2473,7 +2688,7 @@ class ManifestTable:
                     F.lit(1).alias("_d"),
                 )
             )
-        keyed = probe.groupBy("_k").agg(
+        keyed = probe if checked else probe.groupBy("_k").agg(
             F.sum("_u").alias("_cu"), F.max("_d").alias("_cd")
         )
         bucket_n = dict(self.bucket_cols).get(key)
@@ -2485,8 +2700,18 @@ class ManifestTable:
             # matches no file only because the `hit` predicate below
             # requires _k IS NOT NULL (r16: the commit side also stops
             # recording the phantom NULL bucket in file sets).
-            dtype = dict(self.read(spark, version=base).dtypes).get(key)
-            canon = _bucket_canon_type(dtype, key)
+            # the recorded schema names the key's type without a read
+            # (which checks every file of the snapshot exists)
+            sch = m.get("schema")
+            dtypes = (
+                {
+                    f.name: f.dataType.simpleString()
+                    for f in _schema_from_json(sch).fields
+                }
+                if sch is not None
+                else dict(self.read(spark, version=base).dtypes)
+            )
+            canon = _bucket_canon_type(dtypes.get(key), key)
             keyed = keyed.withColumn(
                 "_b",
                 F.pmod(F.xxhash64(F.col("_k").cast(canon)), F.lit(bucket_n)),
@@ -2582,6 +2807,13 @@ class ManifestTable:
                     | F.array_contains(F.col("_bs"), F.col("_b"))
                 )
             )
+            if checked:
+                obs = Observation()
+                keyed.join(F.broadcast(files_df), hit).observe(
+                    obs, F.collect_set("_f").alias("_fs")
+                ).write.format("noop").mode("overwrite").save()
+                touched.update(obs.get["_fs"])
+                return sorted(touched)
             per_file = (
                 keyed.join(F.broadcast(files_df), hit, "left")
                 .groupBy("_f")
@@ -2593,6 +2825,8 @@ class ManifestTable:
                     touched.add(r["_f"])
                 dup_rows = dup_rows or (r["_mcu"] or 0) > 1
                 ambiguous = ambiguous or bool(r["_amb"])
+        elif checked:
+            return sorted(touched)
         else:
             row = keyed.agg(*flag_aggs).first()
             dup_rows = (row["_mcu"] or 0) > 1

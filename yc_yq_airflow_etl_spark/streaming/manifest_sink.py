@@ -211,8 +211,11 @@ def apply_cdc_batch(
         upserts = (
             last.filter(F.col(op_col) != delete_value).drop(op_col, order_col)
         )
+        # validated once: merge takes the collapse's word for key
+        # uniqueness and disjoint upserts/deletes
         table.merge(
-            upserts, key, batch_id=batch_id, delete_keys=deletes, mode=mode
+            upserts, key, batch_id=batch_id, delete_keys=deletes,
+            mode=mode, _collapsed=True,
         )
     return True
 

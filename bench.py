@@ -22,9 +22,10 @@ Each query is timed from plan to a driver-side count of the (small)
 result. The run-order front, the headline set, the watch list and every
 query whose first-run wall moved >1.25x against the committed sidecar
 are re-run once in-process, and that STEADY number is the primary wall:
-the cohort rotation reorders the run, so first-run walls at the front
-absorb session warm-up (codegen, file listing, page cache) and regress
-spuriously. First-run values stay under ``first_run`` in the sidecar.
+first-run walls at the front of the run (registration order after the
+headline set) absorb session warm-up (codegen, file listing, page
+cache) and regress spuriously. First-run values stay under
+``first_run`` in the sidecar.
 
 Alongside wall time, every query records STRUCTURE — executed stage
 count and shuffle read/write bytes from the Spark status store — so
@@ -166,8 +167,8 @@ SETUP = (
     ("merge_base_demo", _an.ensure_merge_base_demo),
 )
 
-# Recorded walls are always steady-vs-steady for these, wherever the
-# cohort rotation puts them (besides the run-order front and HEADLINE).
+# Recorded walls are always steady-vs-steady for these, wherever they
+# fall in the run order (besides the run-order front and HEADLINE).
 WATCH = (
     "manifest_merge_upsert",
     "token_packing_bins",

@@ -181,6 +181,22 @@ def test_two_year_progression(spark, payments, tmp_path):
     assert pipe.window()[0].year == 2022
 
 
+def test_window_refuses_a_watermark_off_1_january(spark, payments, tmp_path):
+    """A window starting mid-year would overwrite whole payment_year
+    partitions (wiping the half-year cooled by the previous window)
+    and retire a whole source year of which only half was cooled. The
+    pipeline refuses it before anything is written."""
+    retired: list[int] = []
+    pipe = _pipeline(spark, payments, str(tmp_path), retired)
+    pipe.initial_watermark = "2020-07-01"
+    with pytest.raises(ValueError, match="start on 1 January, not 2020-07-01"):
+        pipe.run_once()
+    assert retired == []
+    assert not (tmp_path / "lake").exists()
+    assert not (tmp_path / "state.json").exists()
+    assert pipe.state.get_watermark(pipe.initial_watermark).month == 7
+
+
 def test_single_active_run_lock(tmp_path):
     """max_active_runs=1 (yq_dag.py:50): a second concurrent holder of
     the pipeline lock fails fast with PipelineBusyError."""

@@ -112,11 +112,8 @@ def test_strict_datetime_second_truncation(spark):
 
 
 def test_registry_rotation_contract():
-    """The driver verifies the FIRST 50 emitted queries per round, so
-    the emission order is load-bearing. Pin the invariants a careless
-    registry edit would break: unique names, every query oracled, the
-    window exactly covering _FRONT, _FRONT/_BACK sized to the 50-slot
-    window and disjoint, and every listed name actually registered."""
+    """The registry emits every query once, in registration order, and
+    every query has its DuckDB oracle twin."""
     from yc_yq_airflow_etl_spark.plans import registry
 
     specs = registry.specs()
@@ -124,32 +121,7 @@ def test_registry_rotation_contract():
     assert len(names) == len(set(names)), "duplicate registry names"
     oracles = registry.oracle_sql()
     assert set(oracles) == set(names), "every query needs an oracle twin"
-    # r18 state: clean 3-round cycle — _FRONT is the r15-verified
-    # cohort in CORRECTNESS_r15.json key order, _BACK the r17-verified
-    # cohort in CORRECTNESS_r17.json key order (pinned against the
-    # committed records so a registry edit can't silently reorder the
-    # window the driver grades).
-    import json
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(repo, "CORRECTNESS_r15.json")) as fh:
-        r15_keys = list(json.load(fh))
-    with open(os.path.join(repo, "CORRECTNESS_r17.json")) as fh:
-        r17_keys = list(json.load(fh))
-    assert len(registry._FRONT) == 50
-    assert list(registry._FRONT) == r15_keys
-    assert len(registry._BACK) == 50
-    assert list(registry._BACK) == r17_keys
-    assert not set(registry._FRONT) & set(registry._BACK)
-    missing = (set(registry._FRONT) | set(registry._BACK)) - set(names)
-    assert not missing, f"rotation lists name unregistered queries: {missing}"
-    assert names[: len(registry._FRONT)] == list(registry._FRONT), (
-        "driver window (first 50 emitted) must open exactly with _FRONT"
-    )
-    assert names[-len(registry._BACK) :] == list(registry._BACK), (
-        "truncation absorbers (last emitted) must be exactly _BACK"
-    )
+    assert names == [s.name for s in registry._REGISTRY]
 
 
 def test_round6_engine_divergence_is_understood(spark):

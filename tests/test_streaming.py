@@ -944,3 +944,78 @@ def test_cooling_batch_null_year_reconciles_instead_of_poison_pill(
     cold = spark.read.parquet(lake.path)
     assert cold.count() == 61
     assert cold.filter(F.col("payment_year").isNull()).count() == 1
+
+
+def _persisted_rdd_ids(spark) -> set[int]:
+    return {
+        int(i)
+        for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
+    }
+
+
+def test_cooling_foreach_batch_job_budget(spark, tmp_path):
+    """One non-empty micro-batch through the cooling step is at most 4
+    jobs: the observed partition write, the lake read's schema
+    inference and exclusion_diff_count's grouped shuffle and result
+    job. The row count and the written year set ride the write job, so
+    the body persists nothing and leaves the persisted-RDD count where
+    it found it."""
+    from yc_yq_airflow_etl_spark.streaming.cooling_stream import (
+        cooling_foreach_batch,
+    )
+
+    # a two-year batch (every 100th payment of 2020 plus the first day
+    # of 2021), read from files like a file-source micro-batch
+    src = str(tmp_path / "pg")
+    generate_payments(spark, minutes=527040 + 1440).filter(
+        F.col("id") % 100 == 0
+    ).write.parquet(src)
+    batch = spark.read.parquet(src)
+    lake = LakeTable(str(tmp_path / "lake"))
+    diffs: list[tuple[int, int]] = []
+    body = cooling_foreach_batch(lake, on_diff=lambda b, d: diffs.append((b, d)))
+    body(batch, 0)  # warm-up: the lake exists from here on
+    before = _persisted_rdd_ids(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("cooling_batch_jobs", "cooling micro-batch jobs")
+    try:
+        body(batch, 1)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup("cooling_batch_jobs"))
+    finally:
+        sc.setJobGroup("", "")
+    assert diffs == [(0, 0), (1, 0)]
+    assert n_jobs <= 4, f"the micro-batch body ran {n_jobs} jobs"
+    assert _persisted_rdd_ids(spark) == before
+    per_year = {
+        r.payment_year: r.c
+        for r in lake.read(spark).groupBy("payment_year")
+        .agg(F.count(F.lit(1)).alias("c")).collect()
+    }
+    assert per_year == {2020: 5270, 2021: 14}
+
+
+def test_cooling_foreach_batch_raises_on_a_lossy_write(spark, tmp_path):
+    """Mutation test of the stream's raise branch: a lake whose write
+    drops one row must fail the micro-batch with the batch pipeline's
+    "Data are not equal!" error, and ``on_diff`` sees the diff first."""
+    from dataclasses import dataclass
+
+    from yc_yq_airflow_etl_spark.plans.cooling import ReconciliationError
+    from yc_yq_airflow_etl_spark.streaming.cooling_stream import (
+        cooling_foreach_batch,
+    )
+
+    @dataclass(frozen=True)
+    class LossyLake(LakeTable):
+        def overwrite_partitions(self, df, sort_by=None):
+            super().overwrite_partitions(df.filter(F.col("id") != 7), sort_by)
+
+    lake = LossyLake(str(tmp_path / "lake"))
+    diffs: list[tuple[int, int]] = []
+    body = cooling_foreach_batch(lake, on_diff=lambda b, d: diffs.append((b, d)))
+    with pytest.raises(
+        ReconciliationError,
+        match=r"^Data are not equal! exclusion-join diff=1 for micro-batch 3$",
+    ):
+        body(generate_payments(spark, minutes=60), 3)
+    assert diffs == [(3, 1)]

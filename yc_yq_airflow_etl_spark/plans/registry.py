@@ -58,164 +58,15 @@ class QuerySpec:
 
 _REGISTRY: list[QuerySpec] = []
 
-# The driver's CORRECTNESS check verifies the first 50 registered
-# queries per round (observed cap in rounds 1-6: exactly 50 rows each
-# time, truncating the last-registered module). Emission order is
-# therefore a verification-priority order, ROTATED each round,
-# prioritized STRICTLY by last-driver-verified round (oldest first,
-# new queries alongside). With 150 registered queries and a 50-row
-# window the achievable freshness bound is ≤3 rounds between driver
-# rows per query (⌈150/50⌉ = 3); the bound holds only because _BACK
-# (the PREVIOUS round's verified set — freshest hard signal) is
-# always the truncated tail and never re-checked early.
-#
-# Round-18 state (clean 3-round cycle, per the r17 verdict): _FRONT =
-# the r15-verified cohort in CORRECTNESS_r15.json key order (oldest
-# driver rows, due for re-verification), the middle is the
-# r16-verified cohort in registration order (fronts in r19), _BACK =
-# the r17-verified cohort in CORRECTNESS_r17.json key order (freshest
-# hard signal, safest to truncate). The three cohorts are disjoint
-# 50/50/50, so every registered query's last driver row stays ≤3
-# rounds old with zero exceptions.
-#
-# SATURATION: 150 queries = 3 full 50-slot windows — the rotation has
-# ZERO slack. Every registry addition beyond 150 pushes some existing
-# query past the 3-round freshness bound. Prefer deepening existing
-# queries (more pinned columns) over net-new registrations; a genuinely
-# new capability must retire or merge an existing query in the same
-# commit.
-_FRONT: tuple[str, ...] = (
-    "ntile_customer_quartiles",
-    "udtf_top_ngrams",
-    "q1_pricing_summary",
-    "approx_distinct_customers",
-    "q3_shipping_priority",
-    "q6_revenue_delta",
-    "salted_event_counts",
-    "json_event_props",
-    "asof_click_purchase",
-    "range_join_price_bands",
-    "histogram_quantile_store",
-    "manifest_schema_evolution",
-    "manifest_vacuum_safety",
-    "manifest_compaction_maintenance",
-    "exclusion_join_hotkey_diff",
-    "dedup_canonical_corpus",
-    "bloom_prefilter_scan",
-    "dataset_splits",
-    "corpus_mixture_weights",
-    "source_capped_sample",
-    "json_malformed_audit",
-    "table_profile",
-    "fk_integrity_audit",
-    "event_funnel",
-    "timeseries_gap_fill",
-    "revenue_anomaly_zscore",
-    "order_constraint_audit",
-    "pagerank_doc_ranks",
-    "weighted_doc_sample",
-    "cluster_aware_splits",
-    "kmv_join_cardinality",
-    "scd2_point_in_time_revenue",
-    "manifest_partition_evolution",
-    "manifest_table_changes",
-    "multimodal_phash_dupes",
-    "user_inactivity_report",
-    "entity_resolution_links",
-    "multi_touch_attribution",
-    "quality_percentile_calibration",
-    "manifest_files_metadata",
-    "dau_wau_metrics",
-    "manifest_wap_publish",
-    "stream_click_purchase_left",
-    "multimodal_wav_features",
-    "q2_min_cost_supplier",
-    "q8_market_share",
-    "q9_product_profit",
-    "q11_important_stock",
-    "q16_supplier_part_counts",
-    "q20_dominant_part_suppliers",
-)
-
-# Truncation absorbers: the 50 queries driver-verified green in r17
-# (CORRECTNESS_r17.json order). If the 50-row cap cuts anything beyond
-# _FRONT's own tail, it cuts these — the freshest hard signal is the
-# safest to truncate. (The unlisted middle — the r16-verified cohort —
-# sits between _FRONT and _BACK in registration order and fronts in
-# round 19.)
-_BACK: tuple[str, ...] = (
-    "embedding_norm_audit",
-    "q12_priority_by_returnflag",
-    "federation_counts",
-    "cooling_window_filter",
-    "exclusion_join_diff",
-    "exclusion_join_clean_count",
-    "manifest_merge_upsert",
-    "range_frame_rolling_revenue",
-    "retention_cohorts",
-    "incremental_agg_maintenance",
-    "doc_repetition_stats",
-    "token_packing_bins",
-    "scd2_customer_history",
-    "unigram_logprob_scores",
-    "manifest_history_ops",
-    "manifest_bucket_pruned_scan",
-    "multimodal_ppm_features",
-    "asof_click_purchase_bucketed",
-    "zorder_pruned_scan",
-    "manifest_time_travel_counts",
-    "dedup_clusters",
-    "embedding_quantization_stats",
-    "pii_redaction_stats",
-    "decontamination_overlap",
-    "q4_late_shipment_priority",
-    "q5_local_supplier_volume",
-    "q10_returned_item_customers",
-    "q13_order_count_distribution",
-    "q18_large_volume_orders",
-    "q22_idle_rich_customers",
-    "event_sessionization",
-    "bucketed_join_revenue",
-    "multi_format_union",
-    "cms_heavy_hitters",
-    "stream_exact_dedup",
-    "multimodal_resize_features",
-    "multimodal_video_frames",
-    "q7_bination_volume",
-    "q14_promo_revenue",
-    "q17_small_quantity_revenue",
-    "q19_disjunctive_revenue",
-    "stream_static_enrichment",
-    "q15_top_supplier",
-    "events_tumbling_hourly",
-    "events_sliding_counts",
-    "events_session_stats",
-    "stream_click_purchase_join",
-    "stateful_spend_alerts",
-    "events_time_rollup",
-    "udaf_lang_stats",
-)
 
 def register(name: str, builder: QueryFn, oracle: str | None) -> None:
     _REGISTRY.append(QuerySpec(name, builder, oracle))
 
 
 def specs() -> list[QuerySpec]:
+    """Every registered query, in registration order."""
     _ensure_loaded()
-    front_rank = {n: i for i, n in enumerate(_FRONT)}
-    back_rank = {n: i for i, n in enumerate(_BACK)}
-    front = sorted(
-        (s for s in _REGISTRY if s.name in front_rank),
-        key=lambda s: front_rank[s.name],
-    )
-    back = sorted(
-        (s for s in _REGISTRY if s.name in back_rank),
-        key=lambda s: back_rank[s.name],
-    )
-    middle = [
-        s for s in _REGISTRY if s.name not in front_rank and s.name not in back_rank
-    ]
-    return front + middle + back
+    return list(_REGISTRY)
 
 
 def queries() -> dict[str, QueryFn]:

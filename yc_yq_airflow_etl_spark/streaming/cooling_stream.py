@@ -12,23 +12,27 @@ Two entry points:
 - :func:`stream_events_to_lake` — generic continuous ingestion:
   file-source stream → event-time watermark → partitioned parquet
   sink with checkpointing (exactly-once file sink semantics).
-- :func:`cooling_foreach_batch` — the reference's transactional
-  load→reconcile→branch step run per micro-batch via foreachBatch,
-  preserving the safety property (a failed reconcile raises inside
-  the batch, failing the query before anything is retired).
+- :func:`cooling_foreach_batch` — the batch DAG's own cooling step
+  (``plans.cooling.cooling_step``: load → reconcile → raise) run per
+  micro-batch via foreachBatch. The stream stages a NULL
+  ``payment_date`` as a NULL year, which lands in Hive's default
+  partition; the step reads back exactly the partitions the write
+  observed, the default one included. A failed reconcile raises
+  inside the batch, failing the query before its offsets commit, and
+  replay re-runs the idempotent step.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators import exclusion_join
-from ..plans.cooling import RECONCILE_KEY, ReconciliationError
+from ..plans.cooling import cooling_step
 from ..sources.lake import LakeTable
 
 
@@ -69,14 +73,15 @@ def stream_events_to_lake(
 
 def cooling_foreach_batch(
     lake: LakeTable,
-    year_col: Callable[[DataFrame], F.Column] = lambda df: F.year("payment_date"),
     on_diff: Callable[[int, int], None] | None = None,
 ) -> Callable[[DataFrame, int], None]:
-    """Build the per-micro-batch body: write the batch's partitions
-    (dynamic overwrite keeps re-delivered batches idempotent), then
-    reconcile the written partitions against the batch — the
-    EXCLUSION JOIN safety check (yq_dag.py:93-94) applied at
-    micro-batch granularity.
+    """Build the per-micro-batch body: stage the batch's
+    ``payment_year`` and run the cooling step on it — overwrite the
+    batch's partitions (dynamic overwrite keeps re-delivered batches
+    idempotent), read back the partitions the write observed and
+    reconcile them against the batch, the EXCLUSION JOIN safety check
+    (yq_dag.py:93-94) at micro-batch granularity. ``on_diff(batch_id,
+    diff)`` sees every batch's diff, before a non-zero one raises.
 
     Contract: micro-batches must be partition-aligned (a Hive
     partition never spans two batches) — the same alignment the
@@ -85,50 +90,12 @@ def cooling_foreach_batch(
     append+dedup variant instead."""
 
     def body(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        from pyspark import StorageLevel
-
-        # persist ONCE: the batch plan is otherwise re-evaluated three
-        # times per trigger (partition write, distinct-years collect,
-        # exclusion join) — tripling source-read cost on the hot path
-        staged = batch.withColumn(
-            "payment_year", year_col(batch).cast("int")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            lake.overwrite_partitions(staged)
-
-            spark = batch.sparkSession
-            years = [
-                r[0]
-                for r in staged.select("payment_year").distinct().collect()
-            ]
-            # NULL-aware readback: a NULL year lands in Hive's default
-            # partition; `isin([None, ...])` is never true for NULL
-            # rows, so without the isNull branch those rows would show
-            # up only on the staged side of the symmetric diff — a
-            # FALSE ReconciliationError that poison-pills the stream
-            # (replay reproduces it forever). The reconcile's job is
-            # verifying the write, and the write did succeed.
-            year_filter = F.col("payment_year").isin(
-                [y for y in years if y is not None]
-            )
-            if any(y is None for y in years):
-                year_filter = year_filter | F.col("payment_year").isNull()
-            readback = lake.read(spark).filter(year_filter)
-            diff = exclusion_join(
-                staged.select(*RECONCILE_KEY),
-                readback.select(*RECONCILE_KEY),
-                RECONCILE_KEY,
-            ).count()
-        finally:
-            staged.unpersist(blocking=False)
-        if on_diff is not None:
-            on_diff(batch_id, diff)
-        if diff != 0:
-            raise ReconciliationError(
-                f"Data are not equal! diff={diff} in micro-batch {batch_id}"
-            )
+        cooling_step(
+            batch.withColumn("payment_year", F.year("payment_date").cast("int")),
+            lake,
+            f"micro-batch {batch_id}",
+            on_diff=None if on_diff is None else partial(on_diff, batch_id),
+        )
 
     return body
 

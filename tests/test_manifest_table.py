@@ -4819,6 +4819,59 @@ def test_cdc_merge_on_read_batch_job_budget(spark, tmp_path):
     assert t.read(spark).count() == 20_000  # 200 deleted, 200 inserted
 
 
+def _python_stages(spark, group) -> list[int]:
+    """The group's stages whose RDD lineage holds a ``PythonRDD`` (a
+    stage that runs Python workers), from each stage's operation graph
+    in the status store."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    dot = sc._jvm.org.apache.spark.ui.scope.RDDOperationGraph.makeDotFile
+    return [
+        s
+        for j in sc.statusTracker().getJobIdsForGroup(group)
+        for s in sc.statusTracker().getJobInfo(j).stageIds
+        if "PythonRDD" in dot(store.operationGraphForStage(s))
+    ]
+
+
+def test_cdc_and_merge_run_no_python_worker_stage(spark, tmp_path):
+    """A merge-on-read ``apply_cdc_batch`` and a copy-on-write ``merge``
+    on the 20,000-row, 8-file table run no stage with a ``PythonRDD``:
+    the probe's file-stats frame is decoded in the JVM."""
+    from yc_yq_airflow_etl_spark.streaming.manifest_sink import apply_cdc_batch
+
+    sc = spark.sparkContext
+
+    def python_stages(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setJobGroup("", "")
+        return _python_stages(spark, group)
+
+    # the check sees a Python stage when there is one
+    assert python_stages(
+        "py_stage_control",
+        lambda: spark.createDataFrame([(1,)], "x int").count(),
+    )
+    t = ManifestTable(str(tmp_path / "t"), stat_cols=("id",))
+    t.overwrite(_df(spark, 0, 20_000).repartition(8))
+    assert python_stages(
+        "py_stage_mor_cdc",
+        lambda: apply_cdc_batch(
+            t, _cdc_batch(spark, 1), 1, "id", "seq", mode="merge-on-read"
+        ),
+    ) == []
+    assert python_stages(
+        "py_stage_cow_merge", lambda: t.merge(_df(spark, 19_500, 20_500), "id")
+    ) == []
+    # the batch deletes 100 keys and inserts 20,100..20,199; the merge
+    # inserts the 400 keys of 20,000..20,499 not yet present
+    assert t.read(spark).count() == 20_400
+
+
 def _with_synthetic_files(spark, t, entries):
     """Re-publish ``t``'s latest manifest in place with extra files
     that have recorded stats but no bytes on disk: any scan of one

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
+from ..session import local_frame
 from .checkpoints import checkpointed_rdd_id, free_checkpoint
 
 
@@ -96,7 +97,8 @@ def pagerank(
             # column keeps the INPUT pair columns' type (string ids in
             # ≠ bigint ids out would break a caller's union/join)
             id_type = pairs.schema[id_a].dataType
-            return pairs.sparkSession.createDataFrame(
+            return local_frame(
+                pairs.sparkSession,
                 [],
                 T.StructType(
                     [

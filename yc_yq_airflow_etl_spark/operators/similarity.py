@@ -19,6 +19,7 @@ vectors; a Pandas-UDF BLAS path only pays off at ≥ O(1k) dims.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 from functools import lru_cache
 
@@ -168,17 +169,34 @@ def query_literal(vec: Sequence[float]) -> Column:
     return F.lit(np.asarray(vals, dtype=np.float64))
 
 
+def query_norm(vec: Sequence[float]) -> Column:
+    """``l2_norm(query_literal(vec))`` computed once on the driver and
+    passed as a double literal. Catalyst does not constant-fold
+    ``aggregate()`` over a literal array, so the in-plan form re-ran
+    the query's fold on every corpus row. Same left-to-right fold in
+    IEEE doubles, ``sqrt(((0.0 + q0*q0) + q1*q1) + …)``, so the value
+    is bit-identical to Spark's (pinned for zero, NaN, ±Inf and
+    subnormal vectors)."""
+    acc = 0.0
+    for x in vec:
+        x = float(x)
+        acc = acc + x * x
+    return F.lit(math.sqrt(acc))
+
+
 @lru_cache(maxsize=64)
 def _query_score_for_ctx(
     app_id: str | None, vec_col: str, qt: tuple[float, ...]
 ) -> Column:
     # let-bound scoring (r18): the naive composition executed the
-    # query literal's norm fold (which Catalyst does NOT constant-
-    # fold), the corpus row's norm fold and the dot up to six times
-    # per row — see _scored_cosine. Same values, one evaluation each.
-    q = query_literal(qt)
+    # corpus row's norm fold and the dot up to six times per row — see
+    # _scored_cosine. Same values, one evaluation each; the query's
+    # norm is a driver-side literal (query_norm).
     return _scored_cosine(
-        F.col(vec_col), q, l2_norm(F.col(vec_col)), l2_norm(q)
+        F.col(vec_col),
+        query_literal(qt),
+        l2_norm(F.col(vec_col)),
+        query_norm(qt),
     )
 
 
@@ -583,7 +601,7 @@ def ivf_topk(
             F.col(id_col),
             # let-bound scoring (r18, same values — _scored_cosine)
             _scored_cosine(
-                F.col(vec_col), q, l2_norm(F.col(vec_col)), l2_norm(q)
+                F.col(vec_col), q, l2_norm(F.col(vec_col)), query_norm(query)
             ).alias("cosine"),
         )
         .orderBy(F.col("cosine").desc(), F.col(id_col).asc())

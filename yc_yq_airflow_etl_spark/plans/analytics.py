@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from ..functions.scalar import round6
 from ..catalog import data_tag, load_testdata
 from ..schemas import EVENT_PROPS
+from ..session import local_frame
 
 DEC = "decimal(18,2)"
 
@@ -1844,7 +1845,8 @@ def range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_testdata(spark, sf_dir)
     from ..operators.joins import range_join
 
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [(i, i * 50_000.0, (i + 1) * 50_000.0) for i in range(10)],
         "band bigint, lo double, hi double",
     )
@@ -1892,7 +1894,8 @@ def range_join_price_bands_bucketed(spark: SparkSession, sf_dir: str) -> DataFra
     t = load_testdata(spark, sf_dir)
     from ..operators.joins import bucketed_range_join
 
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [(i, i * 50_000.0, (i + 1) * 50_000.0) for i in range(10)],
         "band bigint, lo double, hi double",
     )
@@ -2815,7 +2818,8 @@ def manifest_compaction_maintenance(
 
     nv = mt.maybe_compact(spark, max_files=3, target_files=1)
     m = mt._manifest(spark, nv)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 files_before,
@@ -3720,7 +3724,8 @@ def manifest_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     after2 = mt.read(spark).count()
     viol1 = next(r.n_violations for r in rep1 if r.rule == "_total")
     viol2 = next(r.n_violations for r in rep2 if r.rule == "_total")
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (1, int(v1 is not None), int(viol1), int(after1)),
             (2, int(v2 is not None), int(viol2), int(after2)),
@@ -3790,7 +3795,8 @@ def ensure_cdf_demo(spark: SparkSession, sf_dir: str) -> str:
             o.filter((ok >= lo) & (ok <= hi))
             .withColumn("o_totalprice", -F.col("o_totalprice"))
             .unionByName(
-                spark.createDataFrame(
+                local_frame(
+                    spark,
                     [(m + 1000, 42.42)],
                     "o_orderkey bigint, o_totalprice double",
                 )
@@ -3928,7 +3934,7 @@ def manifest_history_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     demo table: operation kinds and per-snapshot row counts must match
     the oracle's closed-form replay of the same year slices. The log
     itself is manifest metadata (bounded by version count), so the
-    createDataFrame here is metadata-scale, not a data collect.
+    local_frame here is metadata-scale, not a data collect.
 
     Deepened pins (r13), both metadata-only:
 
@@ -3958,7 +3964,8 @@ def manifest_history_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
             (v, e["op"], int(e["rows"]), int(e["rows"]) - prev_rows, carried)
         )
         prev_rows = int(e["rows"])
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "version int, op string, n_rows bigint, rows_added bigint, "
         "prev_files_carried int",
@@ -4052,7 +4059,8 @@ def manifest_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             r1.filter(F.col("c_mktsegment").isNull()).count(),
         ),
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "version int, n_rows bigint, n_cols int, n_null_segment bigint"
     ).orderBy("version")
 
@@ -4118,7 +4126,8 @@ def manifest_vacuum_safety(spark: SparkSession, sf_dir: str) -> DataFrame:
     live = mt._manifest(spark, mt.current_version(spark))["files"]
     rows_after = mt.read(spark).count()
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 len(deleted),
@@ -4245,7 +4254,8 @@ def manifest_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.filter((ok >= lo) & (ok <= hi))
         .withColumn("o_totalprice", -F.col("o_totalprice"))
         .unionByName(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(m + 1000, 42.42)], "o_orderkey bigint, o_totalprice double"
             )
         )

@@ -32,6 +32,7 @@ from ..operators.dedup import (
 )
 from ..operators.multimodal import documents_as_media, extract_features
 from ..operators.similarity import brute_force_topk
+from ..session import local_frame
 
 # --- dedup --------------------------------------------------------------
 
@@ -1241,7 +1242,8 @@ def lang_id_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash. Fixture rows carry deterministic negative ids (-1…-8, their
     enumeration order) so they can never collide with corpus ids."""
     t = load_testdata(spark, sf_dir)
-    fixture = spark.createDataFrame(
+    fixture = local_frame(
+        spark,
         [
             (-(i + 1), lang, text)
             for i, (lang, text) in enumerate(MULTILINGUAL_FIXTURE)
@@ -2256,7 +2258,8 @@ def similarity_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("lsh", 3, qid, round(len(inter) / 10.0, 6),
              len(inter), sum(inter))
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "method string, param int, query_id int, recall double, "
         "n_hits int, hit_id_sum bigint",
@@ -3084,7 +3087,8 @@ def cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("c_ab"))
         .filter(F.col("c_ab") >= 5)
     )
-    vocab_local = spark.createDataFrame(
+    vocab_local = local_frame(
+        spark,
         [(r.term, int(r.df)) for r in vocab_rows], "term string, df bigint"
     )
     joined = co.join(

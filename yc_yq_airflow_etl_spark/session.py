@@ -14,13 +14,21 @@ The settings below are the ones that matter at 100 TB:
   fixing UTC keeps parity with the DuckDB oracle.
 - Arrow enabled: every Pandas-UDF operator (similarity, multimodal)
   rides Arrow batches, never row-at-a-time pickling.
+
+:func:`local_frame` is the one way the package turns driver-side rows
+into a DataFrame: it ships them as an Arrow table that the JVM decodes,
+so no Python worker ever runs to read them.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -101,3 +109,70 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+# the column types local_frame converts values for; each Python value
+# maps to exactly one Arrow value (no widening, no truncation)
+_LOCAL_FRAME_TYPES = (
+    T.LongType(),
+    T.IntegerType(),
+    T.DoubleType(),
+    T.StringType(),
+    T.ArrayType(T.LongType(), True),
+)
+
+
+def local_frame(
+    spark: SparkSession,
+    rows: Iterable[Sequence],
+    schema: str | T.StructType,
+) -> DataFrame:
+    """``spark.createDataFrame(rows, schema)`` for driver-side rows,
+    built from a ``pyarrow.Table`` so the JVM decodes it.
+
+    ``createDataFrame(<list>)`` wraps the rows in a ``PythonRDD``: every
+    job that reads the frame (a broadcast of 8 rows of file stats
+    included) starts Python workers to unpickle them: ~0.3 s per job on
+    4 vCPUs, plus the workers' memory. The JVM parallelizes the Arrow
+    table itself (a ``ParallelCollectionRDD``), with Arrow on or off.
+
+    ``rows`` are tuples or lists in ``schema`` order (a DDL string or a
+    ``StructType``). Each row passes PySpark's own type verifier first,
+    so what ``createDataFrame`` refuses (a float in a bigint, an int
+    out of range, a NULL in a non-nullable field) raises the same error
+    here. Columns that carry values must be bigint, int, double, string
+    or array<bigint>; any other type raises ``TypeError`` rather than
+    guess a conversion. An empty frame may have any Arrow-typed schema.
+    """
+    struct = (
+        schema
+        if isinstance(schema, T.StructType)
+        else T._parse_datatype_string(schema)
+    )
+    rows = list(rows)
+    if rows:
+        odd = [
+            f"{f.name} {f.dataType.simpleString()}"
+            for f in struct.fields
+            if f.dataType not in _LOCAL_FRAME_TYPES
+        ]
+        if odd:
+            raise TypeError(
+                f"local_frame has no value conversion for {odd}; "
+                "supported: bigint, int, double, string, array<bigint>"
+            )
+        verify = T._make_type_verifier(struct)
+        for r in rows:
+            if type(r) not in (tuple, list):
+                raise TypeError(
+                    f"local_frame rows are positional tuples or lists, "
+                    f"got {type(r).__name__}"
+                )
+            verify(r)
+    arrow = to_arrow_schema(struct)
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, struct)

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 
 # Root-level reader sentinel marking one partition mid-swap. Leading
 # underscore: Spark's file index ignores it, so it never pollutes a
@@ -239,8 +241,8 @@ class LakeTable:
         # affected partitions are scanned (literals coerce to the
         # column's inferred type, keeping pruning intact)
         df = self.read(spark).filter(F.col(pcol).isin(list(plan)))
-        targets = spark.createDataFrame(
-            [(v, n) for v, n in plan.items()], "_pv string, _groups int"
+        targets = local_frame(
+            spark, [(v, n) for v, n in plan.items()], "_pv string, _groups int"
         )
         data_cols = [c for c in df.columns if c != pcol]
         grouped = (

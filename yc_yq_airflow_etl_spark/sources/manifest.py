@@ -76,6 +76,8 @@ from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
+
 _MANIFEST_RE = re.compile(r"^v(\d+)\.json$")
 
 
@@ -247,7 +249,7 @@ def _stats_sql_type(bounds) -> str:
     non-null one: a manifest whose recorded bounds mix int and float
     across files (reachable only via hand-edited/legacy manifests,
     which merge elsewhere explicitly tolerates) widens to double
-    instead of aborting on createDataFrame's per-row type check; a
+    instead of aborting on local_frame's per-row type check; a
     str/numeric mix has no common ordering and raises a clear error.
     All-null columns (bucket-only files record no range) default to
     bigint — any type works there since every comparison against NULL
@@ -2393,7 +2395,7 @@ class ManifestTable:
         for c in bucket_cols:
             schema_parts.append(f"{c}_n_buckets int")
         schema_parts.append("dv_rows int")
-        return spark.createDataFrame(rows, ", ".join(schema_parts))
+        return local_frame(spark, rows, ", ".join(schema_parts))
 
     def _count(self, spark: SparkSession, files: list[str]) -> int:
         if not files:
@@ -2794,7 +2796,8 @@ class ManifestTable:
                         widened.append((f, vals[0], vals[1], bs))
                 provable = widened
         if provable:
-            files_df = spark.createDataFrame(
+            files_df = local_frame(
+                spark,
                 provable,
                 f"_f string, _mn {bound_t}, _mx {bound_t}, _bs array<bigint>",
             )
@@ -2974,9 +2977,7 @@ class ManifestTable:
                 # find scan runs or anything is staged
                 self._conform_to_schema(
                     transform(
-                        spark.createDataFrame(
-                            [], _schema_from_json(m["schema"])
-                        )
+                        local_frame(spark, [], _schema_from_json(m["schema"]))
                     ),
                     m,
                     "update assignments",

@@ -68,6 +68,11 @@ from wall_budget import (  # noqa: E402
 )
 
 from yc_yq_airflow_etl_spark.hostcanary import machine_canary_sec  # noqa: E402
+from yc_yq_airflow_etl_spark.operators.checkpoints import (  # noqa: E402
+    cache,
+    persisted_rdd_ids,
+    scope,
+)
 from yc_yq_airflow_etl_spark.plans import analytics as _an  # noqa: E402
 from yc_yq_airflow_etl_spark.plans import llm_queries as _lq  # noqa: E402
 
@@ -301,32 +306,35 @@ def main() -> None:
         "timing_policy": _TIMING_POLICY,
         "sf": float(sf) if sf else None,
         "setup_sec": {},
+        "persisted_rdds_left": {},
     }
     setup = out["setup_sec"]
     # warm the JVM/file-listing path once so per-query walls measure
     # query execution, not first-touch initialization
-    _, setup["warm_first_query"] = _count(qs, names[0], spark, sf_dir)
+    _, setup["warm_first_query"], _ = _count(qs, names[0], spark, sf_dir)
     for label, fn in SETUP:
         _, setup[label] = _timed(fn, spark, sf_dir)
 
     meter = _StageMeter(spark)
     for name in names:
         meter.start()
-        n, t = _count(qs, name, spark, sf_dir)
+        n, t, left = _count(qs, name, spark, sf_dir)
         _record(out, name, t)
         s = out["structure"][name] = meter.finish()
+        out["persisted_rdds_left"][name] = left
         _log(
             f"{name}: {n} rows in {t}s (stages={s['stages']}, "
-            f"shuf_w={s['shuffle_write_bytes']})"
+            f"shuf_w={s['shuffle_write_bytes']}, rdds_left={left})"
         )
     for name in _steady_names(names, qs, out, prev):
         first = out["queries"][name]
-        _, t = _count(qs, name, spark, sf_dir)
+        _, t, _ = _count(qs, name, spark, sf_dir)
         _record(out, name, first, t)
         _log(f"steady {name}: {t}s (first run {first}s)")
 
     workdir = tempfile.mkdtemp(prefix="bench_refscale_")
-    ref_setup, ref_walls = _reference_scale(spark, workdir)
+    with scope():  # the in-memory hot side goes when the phase ends
+        ref_setup, ref_walls = _reference_scale(spark, workdir)
     setup.update(ref_setup)
     for wall in ref_walls:
         _record(out, *wall)
@@ -346,7 +354,7 @@ def main() -> None:
     )
     out["value"] = round(sum(out["queries"].values()), 3)
     if os.environ.get("SPARK_GRAFT_SCALE_CHECK", "1") != "0":
-        out.update(_scale_check(qs, spark, sf_dir, workdir, out, prev, batch))
+        out.update(_scale_check(qs, spark, sf_dir, workdir, out, batch))
     out.update(_wall_budget(out, prev, round(time.time() - t_main0, 3)))
     _emit(out)
     spark.stop()
@@ -360,8 +368,14 @@ def _timed(fn, *args):
 
 
 def _count(qs, name, spark, data_dir):
-    """``(row count, wall)`` of one registry query, plan to count."""
-    return _timed(lambda: qs[name](spark, data_dir).count())
+    """``(row count, wall, persisted RDDs left)`` of one registry query,
+    plan to count, run in its own scope: what the query materialized
+    is freed when it ends, and the RDDs still persisted after that
+    (outside the wall) are what it left behind."""
+    before = persisted_rdd_ids(spark)
+    with scope():
+        n, t = _timed(lambda: qs[name](spark, data_dir).count())
+    return n, t, len(persisted_rdd_ids(spark) - before)
 
 
 def _log(msg: str) -> None:
@@ -434,6 +448,7 @@ def _reference_scale(spark, workdir):
     from datetime import datetime
 
     from pyspark.sql import functions as F
+    from pyspark.storagelevel import StorageLevel
 
     from yc_yq_airflow_etl_spark.plans.cooling import load_year, reconcile_year
     from yc_yq_airflow_etl_spark.plans.federation import (
@@ -445,7 +460,10 @@ def _reference_scale(spark, workdir):
     def export():
         payments = generate_payments(spark, minutes=2675520)
         boundary = F.lit("2023-01-01").cast("timestamp")
-        hot = payments.filter(F.col("payment_date") >= boundary).cache()
+        hot = cache(
+            payments.filter(F.col("payment_date") >= boundary),
+            StorageLevel.MEMORY_AND_DISK_DESER,
+        )
         hot.count()
         (
             payments.filter(F.col("payment_date") < boundary)
@@ -664,7 +682,7 @@ def _candidate_attribution(qs, spark, name, sf_dir, scale_dir) -> dict:
 
     rec: dict = {}
     for tag, d in (("1x", sf_dir), ("10x", scale_dir)):
-        rec[f"pairs_{tag}"] = qs[name](spark, d).count()
+        rec[f"pairs_{tag}"] = _count(qs, name, spark, d)[0]
         rec[f"candidates_{tag}"] = getattr(dedup, ATTRIBUTED[name])
     cand = rec["candidates_10x"] / max(rec["candidates_1x"], 1)
     pairs = rec["pairs_10x"] / max(rec["pairs_1x"], 1)
@@ -678,7 +696,7 @@ def _candidate_attribution(qs, spark, name, sf_dir, scale_dir) -> dict:
     return rec
 
 
-def _scale_check(qs, spark, sf_dir, workdir, out, prev, batch) -> dict:
+def _scale_check(qs, spark, sf_dir, workdir, out, batch) -> dict:
     """The 10x datapoint: every ``SCALE_QUERIES`` wall against its 1x
     wall, the steady ``CEILINGS`` ratios, the CC round count, the
     candidate attribution and the merge-mode compare at 10x data with
@@ -696,7 +714,7 @@ def _scale_check(qs, spark, sf_dir, workdir, out, prev, batch) -> dict:
     _lq.ensure_simhash_artifacts(spark, scale_dir)
     scale: dict[str, dict] = {}
     for name in SCALE_QUERIES:
-        n, t = _count(qs, name, spark, scale_dir)
+        n, t, _ = _count(qs, name, spark, scale_dir)
         base = out["queries"].get(name)
         scale[name] = {
             "t_10x": t,
@@ -713,7 +731,7 @@ def _scale_check(qs, spark, sf_dir, workdir, out, prev, batch) -> dict:
             )
         _log(f"scale10x {name}: {n} rows in {t}s")
     for name, ceiling in CEILINGS.items():
-        _, t = _count(qs, name, spark, scale_dir)
+        _, t, _ = _count(qs, name, spark, scale_dir)
         t1 = out["steady_state"][name]
         ratio = round(t / max(t1, 1e-9), 2)
         scale[name].update(
@@ -724,30 +742,6 @@ def _scale_check(qs, spark, sf_dir, workdir, out, prev, batch) -> dict:
             steady_ratio_within_ceiling=ratio <= ceiling,
         )
         _log(f"scale10x {name} steady: {t}s (ratio {ratio}, ceiling {ceiling})")
-    # incremental_dedup_new_batch's steady ratio drifts with its 1x
-    # denominator: both walls sit on a fixed ~1 s index-read + job-
-    # dispatch floor at this fixture size. Recorded per run so the
-    # next drift self-triages against the committed structure.
-    idb = "incremental_dedup_new_batch"
-    prev_idb = (
-        prev.get("scale_check", {}).get("queries", {}) or {}
-    ).get(idb, {})
-    prev_struct = (prev.get("structure") or {}).get(idb)
-    cur_struct = out["structure"].get(idb)
-    scale[idb]["attribution"] = {
-        "structure_unchanged_vs_committed": (
-            prev_struct == cur_struct if prev_struct and cur_struct else None
-        ),
-        "prev_t_1x_steady": prev_idb.get("t_1x_steady"),
-        "prev_t_10x_steady": prev_idb.get("t_10x_steady"),
-        "note": (
-            "ratio drift is denominator-driven: plan structure is "
-            "unchanged vs the committed sidecar and the 10x steady "
-            "wall is flat-or-falling; the 1x steady wall sits on a "
-            "~1s fixed index-read/job-dispatch floor, so the "
-            "steady ratio amplifies 1x noise, not scaling"
-        ),
-    }
     for name in ATTRIBUTED:
         scale[name]["attribution"] = _candidate_attribution(
             qs, spark, name, sf_dir, scale_dir

@@ -29,6 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from yc_yq_airflow_etl_spark.catalog import load_testdata
+from yc_yq_airflow_etl_spark.operators.checkpoints import release
 from yc_yq_airflow_etl_spark.operators.dedup import (
     append_to_minhash_index,
     minhash_lsh_pairs,
@@ -52,7 +53,7 @@ def main() -> None:
     t0 = time.time()
     boot_pairs = minhash_lsh_pairs(corpus)
     n_boot = boot_pairs.count()
-    boot_pairs.unpersist()
+    release(boot_pairs)  # a checkpoint: unpersist() would not free it
     write_minhash_index(corpus, idx)
     print(
         f"day 0 bootstrap: {corpus.count()} docs, {n_boot} near-dup pairs; "
@@ -78,7 +79,7 @@ def main() -> None:
             f"({links.count()} links, {time.time() - t0:.2f}s — "
             f"batch-only hashing, corpus text untouched)"
         )
-        links.unpersist()
+        release(links)
 
     from yc_yq_airflow_etl_spark.operators.dedup import _index_table
 

@@ -6,6 +6,9 @@ import time
 
 import pytest
 
+from yc_yq_airflow_etl_spark.operators.checkpoints import (  # noqa: F401
+    persisted_rdd_ids,  # the leak-check reader the tests import from here
+)
 from yc_yq_airflow_etl_spark.session import build_session
 
 SF_DIR = "/root/testdata/sf0.001"

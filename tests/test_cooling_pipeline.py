@@ -18,6 +18,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import persisted_rdd_ids
+
 from yc_yq_airflow_etl_spark.plans.cooling import (
     CoolingPipeline,
     ReconciliationError,
@@ -119,13 +121,6 @@ def test_corruption_blocks_retirement(spark, payments, tmp_path):
     assert pipe.window()[0].year == 2020
 
 
-def _persisted_rdd_ids(spark) -> set[int]:
-    return {
-        int(i)
-        for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-    }
-
-
 def test_reconcile_year_job_budget(spark, tmp_path):
     """One reconciliation is at most 3 jobs: the lake read's schema
     inference plus exclusion_diff_count's grouped shuffle and result
@@ -138,7 +133,7 @@ def test_reconcile_year_job_budget(spark, tmp_path):
     lo, hi = datetime(2020, 1, 1), datetime(2021, 1, 1)
     load_year(small, lake, lo, hi)
     assert reconcile_year(spark, small, lake, lo, hi) == 0  # warm-up
-    before = _persisted_rdd_ids(spark)
+    before = persisted_rdd_ids(spark)
     sc = spark.sparkContext
     sc.setJobGroup("reconcile_year_jobs", "reconcile_year jobs")
     try:
@@ -150,7 +145,7 @@ def test_reconcile_year_job_budget(spark, tmp_path):
         sc.setJobGroup("", "")
     assert diff == 0
     assert n_jobs <= 3, f"reconcile_year ran {n_jobs} jobs"
-    assert _persisted_rdd_ids(spark) == before
+    assert persisted_rdd_ids(spark) == before
 
 
 def test_rerun_idempotent(spark, payments, tmp_path):

@@ -7,6 +7,8 @@ from datetime import datetime
 
 from pyspark.sql import functions as F
 
+from conftest import persisted_rdd_ids
+
 from yc_yq_airflow_etl_spark.operators import asof_join, range_join
 
 
@@ -270,13 +272,6 @@ def test_exclusion_join_strategies_agree_under_hot_keys(spark):
     assert exclusion_diff_count(left, right, ["k"]) == 10_005
 
 
-def _persisted_rdd_ids(spark) -> set[int]:
-    return {
-        int(i)
-        for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-    }
-
-
 def test_exclusion_diff_count_two_jobs_nothing_persisted(spark):
     """The count is one grouped shuffle (map job) plus one result job
     carrying the observed sum — the NULL-keyed rows ride the same
@@ -298,7 +293,7 @@ def test_exclusion_diff_count_two_jobs_nothing_persisted(spark):
         "id % 400 AS k", "IF(id % 89 = 0, NULL, CAST(id % 7 AS DOUBLE)) AS v"
     )
     expected = exclusion_join(left, right, ["k", "v"]).count()
-    before = _persisted_rdd_ids(spark)
+    before = persisted_rdd_ids(spark)
     sc = spark.sparkContext
     sc.setJobGroup("exclusion_diff_count_jobs", "exclusion_diff_count jobs")
     try:
@@ -310,13 +305,13 @@ def test_exclusion_diff_count_two_jobs_nothing_persisted(spark):
         sc.setJobGroup("", "")
     assert got == expected > 0
     assert n_jobs <= 2, f"exclusion_diff_count ran {n_jobs} jobs"
-    assert _persisted_rdd_ids(spark) == before
+    assert persisted_rdd_ids(spark) == before
 
     with _pytest.raises(AnalysisException):
         exclusion_diff_count(left, right.drop("v"), ["k", "v"])
     with _pytest.raises(AnalysisException):
         exclusion_diff_count(left.drop("v"), right, ["k", "v"])
-    assert _persisted_rdd_ids(spark) == before
+    assert persisted_rdd_ids(spark) == before
 
 
 def test_salted_join_matches_plain_join_under_skew(spark):

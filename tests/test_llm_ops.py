@@ -9,6 +9,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import persisted_rdd_ids
+
 from yc_yq_airflow_etl_spark.operators.dedup import (
     embedding_cosine_dupes,
     exact_dedup,
@@ -1077,21 +1079,17 @@ def test_ensure_simhash_artifacts_cached_per_session_and_consistent(spark):
         checkpointed_rdd_id,
     )
 
-    def persisted() -> set[int]:
-        jsc = spark.sparkContext._jsc
-        return {int(i) for i in jsc.getPersistentRDDs().keySet().toArray()}
-
     sf = "/root/testdata/sf0.001"
-    before = persisted()
+    before = persisted_rdd_ids(spark)
     p1, a1 = ensure_simhash_artifacts(spark, sf)
-    first = persisted()
+    first = persisted_rdd_ids(spark)
     p2, a2 = ensure_simhash_artifacts(spark, sf)
     assert p1 is p2 and a1 is a2  # memoized, not rebuilt
     # the two artifacts' checkpoints are all the first call keeps (none
     # when an earlier call in this session built them); a repeat call
     # keeps nothing
     assert first - before <= {checkpointed_rdd_id(p1), checkpointed_rdd_id(a1)}
-    assert persisted() == first
+    assert persisted_rdd_ids(spark) == first
 
     docs = load_testdata(spark, sf)["documents"]
     fresh_pairs = {

@@ -12,6 +12,8 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import persisted_rdd_ids
+
 from yc_yq_airflow_etl_spark.sources.manifest import (
     ManifestTable,
     WapRacedVacuumError,
@@ -2438,13 +2440,6 @@ def test_apply_cdc_batch_fold_property(
     assert got == model, (changes, got, model)
 
 
-def _persisted_rdd_ids(spark) -> set[int]:
-    return {
-        int(i)
-        for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-    }
-
-
 @pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
 def test_cdc_sinks_leave_no_persisted_rdds(spark, tmp_path, mode):
     """Every materialization a CDC micro-batch makes (the collapsed
@@ -2466,10 +2461,10 @@ def test_cdc_sinks_leave_no_persisted_rdds(spark, tmp_path, mode):
         )
     )
     schema = "id long, v long, seq long, op string"
-    before = _persisted_rdd_ids(spark)
+    before = persisted_rdd_ids(spark)
 
     def leaked() -> set[int]:
-        return _persisted_rdd_ids(spark) - before
+        return persisted_rdd_ids(spark) - before
 
     batch = spark.createDataFrame(
         [(1, 111, 1, "U"), (2, 0, 1, "D"), (9, 900, 1, "I")], schema
@@ -2498,14 +2493,16 @@ def test_cdc_sinks_leave_no_persisted_rdds(spark, tmp_path, mode):
 def _tie_rejected(spark, rows) -> bool:
     """Whether the last-change collapse rejects ``rows`` of
     ``(id, seq)`` as tied."""
+    from yc_yq_airflow_etl_spark.operators.checkpoints import scope
     from yc_yq_airflow_etl_spark.streaming.manifest_sink import (
         _collapse_last_change,
     )
 
     batch = spark.createDataFrame(rows, "id long, seq long")
     try:
-        with _collapse_last_change(batch, 1, "id", "seq"):
-            return False
+        with scope():
+            _collapse_last_change(batch, 1, "id", "seq")
+        return False
     except ValueError as e:
         assert "tied" in str(e)
         return True
@@ -4588,10 +4585,10 @@ def test_row_change_frees_materializations_and_keeps_job_budget(
     rejected call — and runs no more Spark jobs than the ceiling."""
     t = _row_change_fixture(spark, str(tmp_path / "t"))
     sc = spark.sparkContext
-    before = _persisted_rdd_ids(spark)
+    before = persisted_rdd_ids(spark)
     with pytest.raises(Exception):
         _run_row_change(spark, t, op, mode, rejected=True)
-    assert _persisted_rdd_ids(spark) == before
+    assert persisted_rdd_ids(spark) == before
     assert t.current_version(spark) == 0
 
     group = f"row_change_{op}_{mode}"
@@ -4602,7 +4599,7 @@ def test_row_change_frees_materializations_and_keeps_job_budget(
     finally:
         sc.setJobGroup("", "")
     assert v == 1
-    assert _persisted_rdd_ids(spark) == before
+    assert persisted_rdd_ids(spark) == before
     assert jobs <= _ROW_CHANGE_JOB_CEILING[(op, mode)], jobs
     want = {
         "merge": 20_500,
@@ -4803,7 +4800,7 @@ def test_cdc_merge_on_read_batch_job_budget(spark, tmp_path):
     t = ManifestTable(str(tmp_path / "t"), stat_cols=("id",))
     t.overwrite(_df(spark, 0, 20_000).repartition(8))
     sc = spark.sparkContext
-    before = _persisted_rdd_ids(spark)
+    before = persisted_rdd_ids(spark)
     for b in (1, 2):
         group = f"cdc_mor_batch_{b}"
         sc.setJobGroup(group, group)
@@ -4815,7 +4812,7 @@ def test_cdc_merge_on_read_batch_job_budget(spark, tmp_path):
         finally:
             sc.setJobGroup("", "")
         assert jobs <= 12, (b, jobs)
-        assert _persisted_rdd_ids(spark) == before
+        assert persisted_rdd_ids(spark) == before
     assert t.read(spark).count() == 20_000  # 200 deleted, 200 inserted
 
 

@@ -11,9 +11,10 @@ import pytest
 
 sys.path.insert(0, "/root/repo/tools")
 
-from plan_audit import EXPECTATIONS, MIN_SF, SF_DIR  # noqa: E402
+from plan_audit import EXPECTATIONS, MIN_SF, SF_DIR, audit_frame  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
+from conftest import SF_DIR as FIXTURE_DIR  # noqa: E402
 
 
 @pytest.mark.parametrize("name", sorted(EXPECTATIONS))
@@ -25,7 +26,7 @@ def test_plan_properties(spark, name):
             "at sf0.01"
         )
     qs = entrymod.queries()
-    df = qs[name](spark, "/root/testdata/sf0.001")
+    df = audit_frame(qs, name, spark, FIXTURE_DIR)
     plan = spark._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )

@@ -9,6 +9,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import persisted_rdd_ids
+
 from yc_yq_airflow_etl_spark.schemas import EVENTS
 from yc_yq_airflow_etl_spark.sources.generator import generate_payments
 from yc_yq_airflow_etl_spark.sources.lake import LakeTable
@@ -412,22 +414,14 @@ def test_spend_alert_staging_frees_its_checkpoint(spark):
     pin: the persistent-RDD set after the builder returns is exactly
     the set before it."""
 
-    def persisted_ids():
-        jm = spark.sparkContext._jsc.getPersistentRDDs()
-        it = jm.keySet().iterator()
-        ids = set()
-        while it.hasNext():
-            ids.add(int(str(it.next())))
-        return ids
-
     from yc_yq_airflow_etl_spark.plans.streaming_queries import (
         stateful_spend_alerts,
     )
 
-    before = persisted_ids()
+    before = persisted_rdd_ids(spark)
     df = stateful_spend_alerts(spark, "/root/testdata/sf0.001")
     assert df.count() > 0  # the query itself still works end-to-end
-    leaked = persisted_ids() - before
+    leaked = persisted_rdd_ids(spark) - before
     assert not leaked, f"staging leaked persistent RDD blocks: {leaked}"
 
 
@@ -439,23 +433,15 @@ def test_stream_demo_staging_frees_checkpoints(spark):
     once their last consumer ran, same contract as the spend-alert
     staging."""
 
-    def persisted_ids():
-        jm = spark.sparkContext._jsc.getPersistentRDDs()
-        it = jm.keySet().iterator()
-        ids = set()
-        while it.hasNext():
-            ids.add(int(str(it.next())))
-        return ids
-
     from yc_yq_airflow_etl_spark.plans.streaming_queries import (
         stream_exact_dedup,
         stream_static_enrichment,
     )
 
     for builder in (stream_exact_dedup, stream_static_enrichment):
-        before = persisted_ids()
+        before = persisted_rdd_ids(spark)
         assert builder(spark, "/root/testdata/sf0.001").count() > 0
-        leaked = persisted_ids() - before
+        leaked = persisted_rdd_ids(spark) - before
         assert not leaked, f"{builder.__name__} leaked blocks: {leaked}"
 
 
@@ -946,13 +932,6 @@ def test_cooling_batch_null_year_reconciles_instead_of_poison_pill(
     assert cold.filter(F.col("payment_year").isNull()).count() == 1
 
 
-def _persisted_rdd_ids(spark) -> set[int]:
-    return {
-        int(i)
-        for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-    }
-
-
 def test_cooling_foreach_batch_job_budget(spark, tmp_path):
     """One non-empty micro-batch through the cooling step is at most 4
     jobs: the observed partition write, the lake read's schema
@@ -975,7 +954,7 @@ def test_cooling_foreach_batch_job_budget(spark, tmp_path):
     diffs: list[tuple[int, int]] = []
     body = cooling_foreach_batch(lake, on_diff=lambda b, d: diffs.append((b, d)))
     body(batch, 0)  # warm-up: the lake exists from here on
-    before = _persisted_rdd_ids(spark)
+    before = persisted_rdd_ids(spark)
     sc = spark.sparkContext
     sc.setJobGroup("cooling_batch_jobs", "cooling micro-batch jobs")
     try:
@@ -985,7 +964,7 @@ def test_cooling_foreach_batch_job_budget(spark, tmp_path):
         sc.setJobGroup("", "")
     assert diffs == [(0, 0), (1, 0)]
     assert n_jobs <= 4, f"the micro-batch body ran {n_jobs} jobs"
-    assert _persisted_rdd_ids(spark) == before
+    assert persisted_rdd_ids(spark) == before
     per_year = {
         r.payment_year: r.c
         for r in lake.read(spark).groupBy("payment_year")

@@ -58,6 +58,7 @@ def main() -> int:
         print("FAIL  spec-drift:", p)
 
     import __spark_entry__ as entrymod
+    from yc_yq_airflow_etl_spark.operators.checkpoints import scope
     from yc_yq_airflow_etl_spark.session import build_session
 
     qs = entrymod.queries()
@@ -78,10 +79,11 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir)
-            scols = [f.name for f in sdf.schema.fields]
-            stypes = [f.dataType.simpleString() for f in sdf.schema.fields]
-            srows = [tuple(r) for r in sdf.collect()]
+            with scope():  # what the query materialized goes with it
+                sdf = fn(spark, sf_dir)
+                scols = [f.name for f in sdf.schema.fields]
+                stypes = [f.dataType.simpleString() for f in sdf.schema.fields]
+                srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
             failures.append(f"{name}: SPARK ERROR {type(e).__name__}: {e}")
             print(f"FAIL  {name:32s} spark error: {str(e)[:200]}")

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions.scalar import round6
 from ..functions.text import normalize_text, word_shingles
+from .checkpoints import cache, materialize, release, scope
 
 
 def _normalize_py(text: str) -> str:
@@ -306,107 +307,90 @@ def minhash_lsh_pairs(
     # measured ~60ms/doc of CPU vs ~1ms/doc vectorized. Identical
     # algorithm either way (functions/text.py pins both and the DuckDB
     # oracle replays it).
-    from pyspark import StorageLevel
-
-    sig = _signatures_pandas(
-        _spread(df, id_col), id_col, text_col, shingle_k, num_hashes
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    # Materialize the cache NOW: the three downstream branches (band
-    # explode + both verify-join sides) otherwise run as concurrent
-    # stages of one job, each recomputing the full hash plan before
-    # any of them has populated the cache.
-    n_sig = sig.count()
-
-    # narrow band table: (id, band, bucket) only — keeps the explode,
-    # the bucket-size aggregation, and the candidate self-join free of
-    # the wide shingle/signature payloads
-    banded = _band_explode(sig, bands, r)
-
-    # skew guard: cap bucket size before the quadratic self-join
-    bucket_sizes = banded.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("_n"))
-    capped = banded.join(
-        bucket_sizes.filter(F.col("_n") <= max_bucket), ["band", "bucket"]
-    )
-
-    cand = (
-        capped.select("band", "bucket", F.col("_id").alias("id_a"))
-        .join(
-            capped.select("band", "bucket", F.col("_id").alias("id_b")),
-            ["band", "bucket"],
+    with scope() as s:
+        sig = cache(
+            _signatures_pandas(
+                _spread(df, id_col), id_col, text_col, shingle_k, num_hashes
+            )
         )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    cand_obs = Observation()
-    cand = cand.observe(cand_obs, F.count(F.lit(1)).alias("n"))
+        # Fill the cache NOW: the three downstream branches (band explode
+        # + both verify-join sides) otherwise run as concurrent stages of
+        # one job, each recomputing the full hash plan before any of them
+        # has populated the cache.
+        n_sig = sig.count()
 
-    # verification join: candidates (small) back to the persisted
-    # signature table for exact Jaccard + signature-agreement estimate
-    pairs = cand.join(
-        sig.select(
-            F.col("_id").alias("id_a"),
-            F.col("_sh").alias("sh_a"),
-            F.col("_sig").alias("sig_a"),
-        ),
-        "id_a",
-    ).join(
-        sig.select(
-            F.col("_id").alias("id_b"),
-            F.col("_sh").alias("sh_b"),
-            F.col("_sig").alias("sig_b"),
-        ),
-        "id_b",
-    )
+        # narrow band table: (id, band, bucket) only — keeps the explode,
+        # the bucket-size aggregation, and the candidate self-join free of
+        # the wide shingle/signature payloads
+        banded = _band_explode(sig, bands, r)
 
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    est = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda a, b: a == b),
-            lambda x: x,
+        # skew guard: cap bucket size before the quadratic self-join
+        bucket_sizes = banded.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("_n"))
+        capped = banded.join(
+            bucket_sizes.filter(F.col("_n") <= max_bucket), ["band", "bucket"]
         )
-    ) / F.lit(num_hashes)
-    out = _finish_pairs(
-        pairs.select(
+
+        cand = (
+            capped.select("band", "bucket", F.col("_id").alias("id_a"))
+            .join(
+                capped.select("band", "bucket", F.col("_id").alias("id_b")),
+                ["band", "bucket"],
+            )
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b")
+            .dropDuplicates(["id_a", "id_b"])
+        )
+        cand_obs = Observation()
+        cand = cand.observe(cand_obs, F.count(F.lit(1)).alias("n"))
+
+        # verification join: candidates (small) back to the persisted
+        # signature table for exact Jaccard + signature-agreement estimate
+        pairs = cand.join(
+            sig.select(
+                F.col("_id").alias("id_a"),
+                F.col("_sh").alias("sh_a"),
+                F.col("_sig").alias("sig_a"),
+            ),
             "id_a",
+        ).join(
+            sig.select(
+                F.col("_id").alias("id_b"),
+                F.col("_sh").alias("sh_b"),
+                F.col("_sig").alias("sig_b"),
+            ),
             "id_b",
-            round6(est).alias("est_jaccard"),
-            # union=0 is impossible for banded candidates (a signature
-            # implies >=1 shingle) but ANSI divide-by-zero would kill
-            # the job if parity ever broke - degrade to 0.0 instead
-            F.when(union > 0, round6(inter.cast("double") / union))
-            .otherwise(F.lit(0.0))
-            .alias("jaccard"),
-        ).filter(F.col("jaccard") >= jaccard_threshold),
-        sig,
-    )
-    global LAST_MINHASH_CANDIDATES
-    # an empty signature table lets AQE prune the verify joins, and the
-    # observed candidate frame under them, before they run (no count
-    # is reported): no signature, no candidate
-    LAST_MINHASH_CANDIDATES = int(cand_obs.get["n"]) if n_sig else 0
-    return out
+        )
 
-
-def _finish_pairs(out: DataFrame, scratch: DataFrame) -> DataFrame:
-    """Materialize the (small) pair output and release the (large)
-    fingerprint/signature cache.
-
-    The heavy intermediate feeds several branches of ``out``'s plan,
-    so it must stay cached until ``out`` is computed — but holding it
-    for the session lifetime is an executor-memory leak when the
-    operator runs repeatedly inside a pipeline. The pair set is
-    bounded by the duplicate rate (orders of magnitude smaller than
-    the corpus), so persisting it and forcing evaluation now lets the
-    scratch cache drop immediately. Callers may ``.unpersist()`` the
-    returned frame when finished."""
-    from pyspark import StorageLevel
-
-    out = out.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    scratch.unpersist(blocking=False)
-    return out
+        inter = F.size(F.array_intersect("sh_a", "sh_b"))
+        union = F.size(F.array_union("sh_a", "sh_b"))
+        est = F.size(
+            F.filter(
+                F.zip_with("sig_a", "sig_b", lambda a, b: a == b),
+                lambda x: x,
+            )
+        ) / F.lit(num_hashes)
+        # the (small) pair output materialized, so the (large) signature
+        # cache can go with this scope
+        out = materialize(
+            pairs.select(
+                "id_a",
+                "id_b",
+                round6(est).alias("est_jaccard"),
+                # union=0 is impossible for banded candidates (a signature
+                # implies >=1 shingle) but ANSI divide-by-zero would kill
+                # the job if parity ever broke - degrade to 0.0 instead
+                F.when(union > 0, round6(inter.cast("double") / union))
+                .otherwise(F.lit(0.0))
+                .alias("jaccard"),
+            ).filter(F.col("jaccard") >= jaccard_threshold),
+            "minhash_lsh_pairs: verified pairs",
+        )
+        global LAST_MINHASH_CANDIDATES
+        # an empty signature table lets AQE prune the verify joins, and the
+        # observed candidate frame under them, before they run (no count
+        # is reported): no signature, no candidate
+        LAST_MINHASH_CANDIDATES = int(cand_obs.get["n"]) if n_sig else 0
+        return s.keep(out)
 
 
 def _probe_sig_pairs(
@@ -600,25 +584,26 @@ def probe_minhash_index(
     against the post-append files (every appended batch doc matching
     its own fingerprint). Checkpointing makes the probe's answer
     immutable no matter what the caller does to the index next."""
-    from pyspark import StorageLevel
-
-    # snapshot-isolated read (r15): the file list comes from ONE
-    # committed manifest — an append landing mid-probe can neither
-    # tear the scan nor leak its half-landed fingerprints in
-    sig_i = _index_table(path).read(spark).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    sig_b = _signatures_pandas(
-        _spread(batch, id_col), id_col, text_col, shingle_k, num_hashes
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    sig_i.count()
-    sig_b.count()
-    out = _probe_sig_pairs(
-        sig_i, sig_b, num_hashes, bands, jaccard_threshold, max_bucket
-    ).localCheckpoint()  # eager: snapshot, lineage to `path` severed
-    sig_i.unpersist(blocking=False)
-    sig_b.unpersist(blocking=False)
-    return out
+    with scope() as s:
+        # snapshot-isolated read (r15): the file list comes from ONE
+        # committed manifest — an append landing mid-probe can neither
+        # tear the scan nor leak its half-landed fingerprints in
+        sig_i = materialize(
+            _index_table(path).read(spark), "probe_minhash_index: index"
+        )
+        sig_b = materialize(
+            _signatures_pandas(
+                _spread(batch, id_col), id_col, text_col, shingle_k, num_hashes
+            ),
+            "probe_minhash_index: batch signatures",
+        )
+        out = materialize(  # a snapshot: lineage to `path` severed
+            _probe_sig_pairs(
+                sig_i, sig_b, num_hashes, bands, jaccard_threshold, max_bucket
+            ),
+            "probe_minhash_index: pairs",
+        )
+        return s.keep(out)
 
 
 def incremental_minhash_dedup(
@@ -664,23 +649,26 @@ def incremental_minhash_dedup(
     or above ``jaccard_threshold``; new docs absent from the output
     are admitted as novel.
     """
-    from pyspark import StorageLevel
-
-    sig_i = _signatures_pandas(
-        _spread(index, id_col), id_col, text_col, shingle_k, num_hashes
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    sig_b = _signatures_pandas(
-        _spread(batch, id_col), id_col, text_col, shingle_k, num_hashes
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    sig_i.count()
-    sig_b.count()
-    out = _probe_sig_pairs(
-        sig_i, sig_b, num_hashes, bands, jaccard_threshold, max_bucket
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    sig_i.unpersist(blocking=False)
-    sig_b.unpersist(blocking=False)
-    return out
+    with scope() as s:
+        sig_i = materialize(
+            _signatures_pandas(
+                _spread(index, id_col), id_col, text_col, shingle_k, num_hashes
+            ),
+            "incremental_minhash_dedup: index signatures",
+        )
+        sig_b = materialize(
+            _signatures_pandas(
+                _spread(batch, id_col), id_col, text_col, shingle_k, num_hashes
+            ),
+            "incremental_minhash_dedup: batch signatures",
+        )
+        out = materialize(
+            _probe_sig_pairs(
+                sig_i, sig_b, num_hashes, bands, jaccard_threshold, max_bucket
+            ),
+            "incremental_minhash_dedup: pairs",
+        )
+        return s.keep(out)
 
 
 def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -744,7 +732,7 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
 # attributed — candidates growing with the data is a FIXTURE property
 # (denser buckets), candidates outgrowing the output pairs would be a
 # plan regression. Observed on the candidate frame (DataFrame.observe)
-# and collected by _finish_pairs' materialization: no extra job.
+# and collected by the pair output's materialization: no extra job.
 LAST_SIMHASH_CANDIDATES: int | None = None
 LAST_MINHASH_CANDIDATES: int | None = None
 
@@ -764,59 +752,60 @@ def simhash_dup_pairs(
     ``max_bucket`` caps degenerate band buckets before the quadratic
     self-join (same skew guard as minhash_lsh_pairs).
     """
-    from pyspark import StorageLevel
-
     # Same rationale as minhash_lsh_pairs: the fingerprint stage (the
     # Python-side hashing) feeds three branches (bucket-size agg + both
-    # sides of the candidate self-join); persist it once or Spark
-    # recomputes the mapInPandas per branch. A fingerprint row is 16
-    # bytes — negligible even at 100 TB of input docs.
-    fp = simhash(df, text_col, id_col).persist(StorageLevel.MEMORY_AND_DISK)
-    fp.count()  # materialize before the concurrent downstream stages
-    banded = fp.select(
-        F.col(id_col),
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(F.col("simhash"), b * 16)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("val"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("_b"),
-    ).select(F.col(id_col), "simhash", "_b.band", "_b.val")
-    sizes = banded.groupBy("band", "val").agg(F.count(F.lit(1)).alias("_n"))
-    banded = banded.join(sizes.filter(F.col("_n") <= max_bucket), ["band", "val"]).drop(
-        "_n"
-    )
-    a = banded.select(
-        "band", "val", F.col(id_col).alias("id_a"), F.col("simhash").alias("h_a")
-    )
-    b = banded.select(
-        "band", "val", F.col(id_col).alias("id_b"), F.col("simhash").alias("h_b")
-    )
-    cand = (
-        a.join(b, ["band", "val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    cand_obs = Observation()
-    cand = cand.observe(cand_obs, F.count(F.lit(1)).alias("n"))
-    hamming = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-    out = _finish_pairs(
-        cand.select("id_a", "id_b", hamming.alias("hamming")).filter(
-            F.col("hamming") <= max_hamming
-        ),
-        fp,
-    )
-    global LAST_SIMHASH_CANDIDATES
-    LAST_SIMHASH_CANDIDATES = int(cand_obs.get["n"])
-    return out
+    # sides of the candidate self-join); materialize it once, before
+    # the concurrent downstream stages, or Spark recomputes the
+    # mapInPandas per branch. A fingerprint row is 16 bytes —
+    # negligible even at 100 TB of input docs.
+    with scope() as s:
+        fp = materialize(
+            simhash(df, text_col, id_col), "simhash_dup_pairs: fingerprints"
+        )
+        banded = fp.select(
+            F.col(id_col),
+            "simhash",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(b).alias("band"),
+                            F.shiftright(F.col("simhash"), b * 16)
+                            .bitwiseAND(F.lit(0xFFFF))
+                            .alias("val"),
+                        )
+                        for b in range(4)
+                    ]
+                )
+            ).alias("_b"),
+        ).select(F.col(id_col), "simhash", "_b.band", "_b.val")
+        sizes = banded.groupBy("band", "val").agg(F.count(F.lit(1)).alias("_n"))
+        banded = banded.join(sizes.filter(F.col("_n") <= max_bucket), ["band", "val"]).drop(
+            "_n"
+        )
+        a = banded.select(
+            "band", "val", F.col(id_col).alias("id_a"), F.col("simhash").alias("h_a")
+        )
+        b = banded.select(
+            "band", "val", F.col(id_col).alias("id_b"), F.col("simhash").alias("h_b")
+        )
+        cand = (
+            a.join(b, ["band", "val"])
+            .filter(F.col("id_a") < F.col("id_b"))
+            .dropDuplicates(["id_a", "id_b"])
+        )
+        cand_obs = Observation()
+        cand = cand.observe(cand_obs, F.count(F.lit(1)).alias("n"))
+        hamming = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
+        out = materialize(
+            cand.select("id_a", "id_b", hamming.alias("hamming")).filter(
+                F.col("hamming") <= max_hamming
+            ),
+            "simhash_dup_pairs: verified pairs",
+        )
+        global LAST_SIMHASH_CANDIDATES
+        LAST_SIMHASH_CANDIDATES = int(cand_obs.get["n"])
+        return s.keep(out)
 
 
 def ngram_jaccard_pairs(
@@ -872,29 +861,31 @@ def embedding_cosine_dupes(
 
     # sign sketch as an int bitmask (vectorized Pandas UDF; see
     # similarity.sign_sketch) — pairs agreeing on the full sketch are
-    # candidates
-    from pyspark import StorageLevel
-
-    sk = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        sign_sketch(F.col(vec_col), planes, seed).alias("_sketch"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    sk.count()  # materialize before the self-join branches (cache race)
-    a = sk.select(
-        F.col("_sketch"), F.col("_id").alias("id_a"), F.col("_v").alias("v_a")
-    )
-    b = sk.select(
-        F.col("_sketch"), F.col("_id").alias("id_b"), F.col("_v").alias("v_b")
-    )
-    cand = a.join(b, "_sketch").filter(F.col("id_a") < F.col("id_b"))
-    cos = cosine_pairs_vectorized(F.col("v_a"), F.col("v_b"))
-    return _finish_pairs(
-        cand.select("id_a", "id_b", round6(cos).alias("cosine")).filter(
-            F.col("cosine") >= threshold
-        ),
-        sk,
-    )
+    # candidates; materialized before the self-join branches read it
+    with scope() as s:
+        sk = materialize(
+            df.select(
+                F.col(id_col).alias("_id"),
+                F.col(vec_col).alias("_v"),
+                sign_sketch(F.col(vec_col), planes, seed).alias("_sketch"),
+            ),
+            "embedding_cosine_dupes: sketches",
+        )
+        a = sk.select(
+            F.col("_sketch"), F.col("_id").alias("id_a"), F.col("_v").alias("v_a")
+        )
+        b = sk.select(
+            F.col("_sketch"), F.col("_id").alias("id_b"), F.col("_v").alias("v_b")
+        )
+        cand = a.join(b, "_sketch").filter(F.col("id_a") < F.col("id_b"))
+        cos = cosine_pairs_vectorized(F.col("v_a"), F.col("v_b"))
+        out = materialize(
+            cand.select("id_a", "id_b", round6(cos).alias("cosine")).filter(
+                F.col("cosine") >= threshold
+            ),
+            "embedding_cosine_dupes: verified pairs",
+        )
+        return s.keep(out)
 
 
 # Diagnostic: rounds used by the most recent connected_components call
@@ -954,31 +945,14 @@ def connected_components(
     eager ``localCheckpoint``, so the checkpoint's materialization
     scan computes it for free (zero extra passes over the labels).
 
-    Storage hygiene: checkpoint blocks are NOT freed by
-    ``DataFrame.unpersist()`` (the data lives in the checkpointed
-    RDD's storage, outside the CacheManager), so each round frees the
-    *previous* round's blocks by unpersisting the checkpointed RDD —
-    only AFTER the convergence check, which is the last reader of the
-    old generation. The RDD is identified EXACTLY by reading it off
-    the checkpointed frame's own ``LogicalRDD`` plan node (not by
-    diffing the context-global ``getPersistentRDDs`` set, which would
-    mis-attribute — and irrecoverably free — an RDD a concurrent job
-    happened to persist inside the same window). Freed checkpoint
-    blocks are unrecoverable by design, hence the strict generation
-    handoff; without this, ``max_iter`` generations of (id, label)
-    state would stay pinned in executor storage for the loop's
-    duration.
+    Storage hygiene: each round releases the *previous* round's
+    checkpoint once the next one exists — the joins that built it were
+    the old generation's last read. Without this handoff, ``max_iter``
+    generations of (id, label) state would stay pinned in executor
+    storage for the loop's duration (see operators/checkpoints.py for
+    why checkpoint blocks are freed by the RDD id on their own plan
+    node).
     """
-    from pyspark import StorageLevel
-
-    from .checkpoints import checkpointed_rdd_id as _ckpt_id
-    from .checkpoints import free_checkpoint
-
-    spark = pairs.sparkSession
-
-    def _free(rdd_id: int | None) -> None:
-        free_checkpoint(spark, rdd_id)
-
     # NULL-id pairs are NON-EDGES (r15 degenerate-input sweep): NULL
     # labels escape the DECIMAL label sum (sum ignores NULL), so a
     # NULL vertex's label moving NULL→b INCREASES the sum and breaks
@@ -989,47 +963,38 @@ def connected_components(
     pairs = pairs.filter(
         F.col(id_a).isNotNull() & F.col(id_b).isNotNull()
     )
-    # Persist the DIRECTED pair list before symmetrizing: the union's
-    # two branches would otherwise each evaluate the caller's pair
-    # pipeline (for LSH-derived graphs, the whole banding/verify
-    # chain) — the column-swapped branch is a different plan, so
-    # exchange reuse never kicks in.
-    e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    edges = (
-        e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # Convergence sums ride the checkpoint's own materialization job
-    # via DataFrame.observe (r17): the eager localCheckpoint already
-    # scans every (id, label) row, so attaching the monotone-sum
-    # metric there removes the per-round `.agg().first()` job — one
-    # fewer full O(V) pass per round (and per-round job-submission
-    # latency), with the identical DECIMAL(38,0) overflow-safe sum.
-    _label_sum = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-    obs0 = Observation()
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .observe(obs0, _label_sum)
-        .localCheckpoint()
-    )
-    # the eager checkpoint above materialized edges; the directed
-    # scratch copy has served both branches and can go now
-    e.unpersist(blocking=False)
-    label_id = _ckpt_id(labels)
-    prev_sum = obs0.get["s"]
-    global LAST_CC_ROUNDS
-    LAST_CC_ROUNDS = 0
-    # try/finally like pagerank: a mid-iteration failure must not
-    # leak the persisted loop invariants (the symmetrized edge list —
-    # O(edges), the largest persisted object here) for the session
-    # lifetime. The RETURNED labels checkpoint stays (the caller reads
-    # it); only failure paths free it.
-    try:
+    with scope() as s:
+        # Persist the DIRECTED pair list before symmetrizing: the union's
+        # two branches would otherwise each evaluate the caller's pair
+        # pipeline (for LSH-derived graphs, the whole banding/verify
+        # chain) — the column-swapped branch is a different plan, so
+        # exchange reuse never kicks in.
+        e = cache(pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")))
+        edges = cache(
+            e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+            .distinct()
+        )
+        # Convergence sums ride the checkpoint's own materialization job
+        # via DataFrame.observe (r17): the eager localCheckpoint already
+        # scans every (id, label) row, so attaching the monotone-sum
+        # metric there removes the per-round `.agg().first()` job — one
+        # fewer full O(V) pass per round (and per-round job-submission
+        # latency), with the identical DECIMAL(38,0) overflow-safe sum.
+        _label_sum = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
+        obs0 = Observation()
+        labels = materialize(
+            edges.select(F.col("src").alias("id"))
+            .distinct()
+            .withColumn("label", F.col("id"))
+            .observe(obs0, _label_sum),
+            "connected_components: initial labels",
+        )
+        # the eager checkpoint above materialized edges; the directed
+        # scratch copy has served both branches and can go now
+        release(e)
+        prev_sum = obs0.get["s"]
+        global LAST_CC_ROUNDS
+        LAST_CC_ROUNDS = 0
         for _ in range(max_iter):
             LAST_CC_ROUNDS += 1
             incoming = edges.join(
@@ -1045,29 +1010,25 @@ def connected_components(
                 F.col("id").alias("_lid"), F.col("label").alias("_llabel")
             )
             obs = Observation()
-            new_labels = (
+            new_labels = materialize(  # truncates the plan
                 merged.join(lookup, merged["label"] == lookup["_lid"])
                 .select("id", F.least("label", "_llabel").alias("label"))
-                .observe(obs, _label_sum)
-                .localCheckpoint()  # eager: truncates plan AND materializes
+                .observe(obs, _label_sum),
+                f"connected_components: round {LAST_CC_ROUNDS}",
             )
-            new_id = _ckpt_id(new_labels)
             # monotone-sum convergence: labels never increase, so an
             # unchanged sum IS "no vertex changed" — read off the
             # checkpoint job's own observation (no extra scan/job)
             new_sum = obs.get["s"]
-            _free(label_id)  # previous generation: the joins above
+            release(labels)  # previous generation: the joins above
             # were its last read (the check reads only new_labels)
-            labels, label_id = new_labels, new_id
+            labels = new_labels
             if new_sum == prev_sum:
                 break
             prev_sum = new_sum
-    except BaseException:
-        _free(label_id)
-        raise
-    finally:
-        edges.unpersist(blocking=False)
-    return labels
+        # the last generation is the caller's; the edge list (and, on a
+        # failure, every generation) goes with this scope
+        return s.keep(labels)
 
 
 def dedup_cluster_assignments(
@@ -1080,17 +1041,9 @@ def dedup_cluster_assignments(
     to a multi-document cluster. Downstream, the dedup decision is
     ``keep iff doc_id == keeper_id`` — singletons (absent here) are
     kept implicitly, so the output stays bounded by the duplicate
-    rate, not the corpus size."""
-    return cluster_assignments(
-        connected_components(pairs, max_iter=25), id_col
-    )
-
-
-def cluster_assignments(comp: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """:func:`dedup_cluster_assignments` from the (id, label) frame
-    :func:`connected_components` returned — for a caller that
-    materializes the assignments and then frees that frame's
-    checkpoint."""
+    rate, not the corpus size. The components' labels checkpoint
+    belongs to the caller's scope, which frees it when it closes."""
+    comp = connected_components(pairs, max_iter=25)
     sizes = comp.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
     # no forced broadcast: the cluster table scales with the duplicate
     # rate; AQE picks broadcast when it is in fact small

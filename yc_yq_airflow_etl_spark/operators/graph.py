@@ -41,10 +41,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.storagelevel import StorageLevel
 
 from ..session import local_frame
-from .checkpoints import checkpointed_rdd_id, free_checkpoint
+from .checkpoints import cache, materialize, release, scope
 
 
 def pagerank(
@@ -73,24 +72,18 @@ def pagerank(
     pairs = pairs.filter(
         F.col(id_a).isNotNull() & F.col(id_b).isNotNull()
     )
-    edges = (
-        pairs.select(
-            F.col(id_a).alias("src"), F.col(id_b).alias("dst")
+    with scope() as s:
+        edges = cache(
+            pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+            .unionAll(
+                pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
+            )
+            .distinct()
         )
-        .unionAll(
-            pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-        )
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    # One row per edge with the source's out-degree attached; this is
-    # the loop-invariant operand, so pay its join exactly once.
-    edges_deg = (
-        edges.join(deg, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    try:
+        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
+        # One row per edge with the source's out-degree attached; this
+        # is the loop-invariant operand, so pay its join exactly once.
+        edges_deg = cache(edges.join(deg, "src"))
         n_vertices = deg.count()  # also materializes edges
         if n_vertices == 0:
             # empty-graph schema must match the non-empty one: the id
@@ -109,48 +102,38 @@ def pagerank(
             )
 
         teleport = (1.0 - damping) / n_vertices
-        spark = pairs.sparkSession
-        ranks = deg.select(
-            F.col("src").alias("id"),
-            F.lit(1.0 / n_vertices).alias("rank"),
-        ).localCheckpoint()
-        rank_id = checkpointed_rdd_id(ranks)
-
-        try:
-            for _ in range(iterations):
-                contribs = (
-                    edges_deg.join(ranks, edges_deg["src"] == ranks["id"])
-                    .select(
-                        F.col("dst").alias("id"),
-                        (F.col("rank") / F.col("out_deg")).alias("c"),
-                    )
-                    .groupBy("id")
-                    .agg(F.sum("c").alias("in_mass"))
+        ranks = materialize(
+            deg.select(
+                F.col("src").alias("id"),
+                F.lit(1.0 / n_vertices).alias("rank"),
+            ),
+            "pagerank: initial ranks",
+        )
+        for i in range(iterations):
+            contribs = (
+                edges_deg.join(ranks, edges_deg["src"] == ranks["id"])
+                .select(
+                    F.col("dst").alias("id"),
+                    (F.col("rank") / F.col("out_deg")).alias("c"),
                 )
-                # Symmetrized graph ⇒ every vertex has in-edges, so the
-                # inner aggregate covers the whole vertex set — no
-                # outer-join top-up.
-                new_ranks = contribs.select(
+                .groupBy("id")
+                .agg(F.sum("c").alias("in_mass"))
+            )
+            # Symmetrized graph ⇒ every vertex has in-edges, so the
+            # inner aggregate covers the whole vertex set — no
+            # outer-join top-up.
+            new_ranks = materialize(  # truncates the plan
+                contribs.select(
                     "id",
                     (
                         F.lit(teleport) + F.lit(damping) * F.col("in_mass")
                     ).alias("rank"),
-                ).localCheckpoint()  # eager: truncates plan AND materializes
-                # the new generation is materialized; free the superseded
-                # one (checkpoint blocks outlive DataFrame dereference —
-                # see operators/checkpoints.py)
-                free_checkpoint(spark, rank_id)
-                ranks, rank_id = new_ranks, checkpointed_rdd_id(new_ranks)
-            return ranks
-        except BaseException:
-            # a mid-iteration failure must free the last live rank
-            # generation too (the finally below only covers the loop
-            # invariants); on success the returned frame keeps its
-            # checkpoint — the caller owns it
-            free_checkpoint(spark, rank_id)
-            raise
-    finally:
-        # executor memory is a shared resource: a mid-iteration failure
-        # must not leak the persisted loop invariants
-        edges.unpersist(blocking=False)
-        edges_deg.unpersist(blocking=False)
+                ),
+                f"pagerank: round {i + 1}",
+            )
+            # the new generation exists: free the superseded one
+            release(ranks)
+            ranks = new_ranks
+        # the last generation is the caller's; the loop invariants
+        # (and, on a failure, every generation) go with this scope
+        return s.keep(ranks)

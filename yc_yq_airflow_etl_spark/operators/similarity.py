@@ -424,58 +424,8 @@ def train_ivf_centroids(
     import pandas as pd
     from pyspark.sql import types as T
 
-    from pyspark import StorageLevel
+    from .checkpoints import cache, materialize, release, scope
 
-    # NULL embeddings are excluded from training (a NULL _v would
-    # poison both the init collect and the per-cluster mean); persist
-    # the quantized base ONCE — the loop otherwise re-runs the source
-    # scan + quantize projection twice per iteration (assignment pass
-    # + mean pass), the dominant wasted cost at table scale.
-    base = df.select(
-        F.col(id_col).alias("_id"), quantize_vec(F.col(vec_col)).alias("_v")
-    ).filter(F.col("_v").isNotNull()).persist(StorageLevel.MEMORY_AND_DISK)
-    # dimension contract (r14): train on the dimension of the
-    # lowest-id vector (deterministic) and EXCLUDE vectors of any
-    # other length — a single wrong-dim row (the corruption
-    # embedding_norm_audit exists to find) otherwise poisons the init
-    # collect with a ragged centroid matrix and kills every
-    # assignment matmul downstream.
-    first = base.orderBy("_id").select(F.size("_v").alias("_d")).first()
-    if first is None:
-        base.unpersist(blocking=False)
-        raise ValueError(
-            "train_ivf_centroids: no non-NULL vectors to train on"
-        )
-    dim0 = int(first._d)
-    # re-persist the dim-pruned frame ONLY when wrong-dim rows exist:
-    # the clean-data probe is a limit(1) short-circuit scan, vs the
-    # full re-persist + count the dead `is not` identity check used to
-    # pay on every training call (r15, ADVICE — DataFrame.filter
-    # always returns a new object, so the old fast path never fired)
-    has_wrong_dim = (
-        base.filter(F.size("_v") != dim0).limit(1).count() > 0
-    )
-    if has_wrong_dim:
-        pruned = base.filter(F.size("_v") == dim0).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        pruned.count()
-        base.unpersist(blocking=False)
-        base = pruned
-    centroids = [
-        [int(x) for x in r._v]
-        for r in base.orderBy("_id").limit(k_clusters).collect()
-    ]
-    if not centroids:
-        base.unpersist(blocking=False)
-        raise ValueError(
-            "train_ivf_centroids: no non-NULL vectors to train on"
-        )
-    if len(centroids) < k_clusters:
-        # fewer vectors than requested clusters: train what the data
-        # supports instead of an IndexError at the first empty-cluster
-        # fallback (centroids[c] out of range)
-        k_clusters = len(centroids)
     mean_schema = T.StructType(
         [
             T.StructField("_c", T.IntegerType(), False),
@@ -494,7 +444,57 @@ def train_ivf_centroids(
             {"_c": [int(pdf["_c"].iloc[0])], "_v": [newc.tolist()]}
         )
 
-    try:
+    with scope():
+        # NULL embeddings are excluded from training (a NULL _v would
+        # poison both the init collect and the per-cluster mean); persist
+        # the quantized base ONCE — the loop otherwise re-runs the source
+        # scan + quantize projection twice per iteration (assignment pass
+        # + mean pass), the dominant wasted cost at table scale.
+        base = cache(
+            df.select(
+                F.col(id_col).alias("_id"), quantize_vec(F.col(vec_col)).alias("_v")
+            ).filter(F.col("_v").isNotNull())
+        )
+        # dimension contract (r14): train on the dimension of the
+        # lowest-id vector (deterministic) and EXCLUDE vectors of any
+        # other length — a single wrong-dim row (the corruption
+        # embedding_norm_audit exists to find) otherwise poisons the init
+        # collect with a ragged centroid matrix and kills every
+        # assignment matmul downstream.
+        first = base.orderBy("_id").select(F.size("_v").alias("_d")).first()
+        if first is None:
+            raise ValueError(
+                "train_ivf_centroids: no non-NULL vectors to train on"
+            )
+        dim0 = int(first._d)
+        # re-persist the dim-pruned frame ONLY when wrong-dim rows exist:
+        # the clean-data probe is a limit(1) short-circuit scan, vs the
+        # full re-persist + count the dead `is not` identity check used to
+        # pay on every training call (r15, ADVICE — DataFrame.filter
+        # always returns a new object, so the old fast path never fired)
+        has_wrong_dim = (
+            base.filter(F.size("_v") != dim0).limit(1).count() > 0
+        )
+        if has_wrong_dim:
+            pruned = materialize(
+                base.filter(F.size("_v") == dim0),
+                "train_ivf_centroids: dim-pruned base",
+            )
+            release(base)
+            base = pruned
+        centroids = [
+            [int(x) for x in r._v]
+            for r in base.orderBy("_id").limit(k_clusters).collect()
+        ]
+        if not centroids:
+            raise ValueError(
+                "train_ivf_centroids: no non-NULL vectors to train on"
+            )
+        if len(centroids) < k_clusters:
+            # fewer vectors than requested clusters: train what the data
+            # supports instead of an IndexError at the first empty-cluster
+            # fallback (centroids[c] out of range)
+            k_clusters = len(centroids)
         for _ in range(iters):
             assigned = base.withColumn(
                 "_c", _nearest_centroid(F.col("_v"), centroids)
@@ -512,9 +512,7 @@ def train_ivf_centroids(
             got = {r._c: [int(x) for x in r._v] for r in new}
             # empty clusters keep their previous centroid
             centroids = [got.get(c, centroids[c]) for c in range(k_clusters)]
-    finally:
-        base.unpersist(blocking=False)
-    return centroids
+        return centroids
 
 
 def _nearest_centroid(v: Column, centroids: list[list[int]]) -> Column:

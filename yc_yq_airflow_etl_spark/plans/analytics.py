@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..functions.scalar import round6
 from ..catalog import data_tag, load_testdata
+from ..operators.checkpoints import materialize
 from ..schemas import EVENT_PROPS
 from ..session import local_frame
 
@@ -340,7 +341,7 @@ def histogram_quantile_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     # total. (A collect + local re-create was measured SLOWER at bench
     # SF — the driver round-trip beat five warm 150k-row scans — while
     # the checkpoint wins both locally and at scale.)
-    merged = merge_histograms(per_year).coalesce(1).localCheckpoint()
+    merged = materialize(merge_histograms(per_year).coalesce(1), "merged histogram")
     # deepened pins (r13): merge LINEARITY as data — the merged
     # histogram's total mass (a lost or double-merged year's sheet
     # moves it even where the three quantile bins survive) and its
@@ -3202,7 +3203,7 @@ def scd2_customer_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical. (scd2_point_in_time_revenue measured NO win from the
     # same change — its dimension derives from an already-checkpointed
     # users frame, so the re-expansion was cheap — and stays lazy.)
-    dim = dim.localCheckpoint()
+    dim = materialize(dim, "scd2 first batch")
     dim = scd2_apply(dim, u2, "c_custkey", ["segment"])
     return (
         dim.groupBy("c_custkey")
@@ -6316,7 +6317,7 @@ def scd2_point_in_time_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full events scan + distinct. Materialized once, the per-apply
     # validation becomes metadata-scale (the kmv sketch builder's
     # precedent for small multiply-referenced derived frames).
-    users = t["events"].select("user_id").distinct().localCheckpoint()
+    users = materialize(t["events"].select("user_id").distinct(), "scd2 users")
     base_seg = F.concat(F.lit("tier"), (F.col("user_id") % 3).cast("string"))
     dim = users.select(
         F.col("user_id").alias("u_key"),
@@ -6416,23 +6417,24 @@ def kmv_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # intersection join — reads that; the semantics are unchanged
     # (count over the null-filtered distinct frame IS count_distinct,
     # and NULL keys never matched the inner intersection join).
-    dok = (
-        t["orders"]
-        .select(F.col("o_custkey").alias("key"))
-        .filter(F.col("key").isNotNull())
-        .distinct()
-        .localCheckpoint()
+    def keys(df: DataFrame, col: str) -> DataFrame:
+        return materialize(
+            df.select(F.col(col).alias("key")).filter(F.col("key").isNotNull())
+            .distinct(), f"kmv_join_cardinality: {col} keys",
+        )
+
+    def sketch(d: DataFrame, col: str) -> DataFrame:
+        return materialize(
+            kmv_sketch(d, "key", k, assume_distinct=True),
+            f"kmv_join_cardinality: {col} sketch",
+        )
+
+    dok, dck = keys(t["orders"], "o_custkey"), keys(regional, "c_custkey")
+    os_, cs = sketch(dok, "o_custkey"), sketch(dck, "c_custkey")
+    us = materialize(
+        os_.unionAll(cs).distinct().orderBy("h").limit(k),
+        "kmv_join_cardinality: union sketch",
     )
-    dck = (
-        regional
-        .select(F.col("c_custkey").alias("key"))
-        .filter(F.col("key").isNotNull())
-        .distinct()
-        .localCheckpoint()
-    )
-    os_ = kmv_sketch(dok, "key", k, assume_distinct=True).localCheckpoint()
-    cs = kmv_sketch(dck, "key", k, assume_distinct=True).localCheckpoint()
-    us = os_.unionAll(cs).distinct().orderBy("h").limit(k).localCheckpoint()
     oa = os_.agg(F.count("h").alias("n_o"), F.max("h").alias("hk_o"))
     ca = cs.agg(F.count("h").alias("n_c"), F.max("h").alias("hk_c"))
     ua = us.agg(

@@ -19,8 +19,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from ..functions.text import chunk_documents, normalize_text, token_count
+from ..operators.checkpoints import cache, scope
 from ..operators.dedup import minhash_lsh_pairs
 from ..sources.lake import LakeTable
 
@@ -91,28 +93,21 @@ def build_training_corpus(
     # The MinHash/LSH lineage above `deduped` is the expensive part of
     # the pipeline; persist it once so the count, the chunk explode and
     # the landed write all reuse the materialized survivors instead of
-    # replaying the signature computation three times.
-    deduped = drop_near_duplicates(filtered).persist()
-    try:
+    # replaying the signature computation three times. Both caches go
+    # with the scope, a failed landing write included. Both keep
+    # DataFrame.persist()'s own deserialized level.
+    level = StorageLevel.MEMORY_AND_DISK_DESER
+    with scope():
+        deduped = cache(drop_near_duplicates(filtered), level)
         n_deduped = deduped.count()
-        chunks = chunk_documents(deduped).join(
-            deduped.select("doc_id", "lang"), "doc_id"
-        ).persist()
+        kept = deduped.select("doc_id", "lang")
+        chunks = cache(chunk_documents(deduped).join(kept, "doc_id"), level)
         # Count the chunks we are landing, not the lake path: dynamic
         # partition overwrite only replaces partitions present in this
         # write, so a whole-path count would include stale partitions
         # from earlier runs with a different surviving-language set.
-        try:
-            n_chunks = chunks.count()
-            corpus_lake.overwrite_partitions(
-                chunks, sort_by=("doc_id", "chunk_id")
-            )
-        finally:
-            # on the failure path too — a failed landing write must
-            # not pin the chunk cache for the session lifetime
-            chunks.unpersist(blocking=False)
-    finally:
-        deduped.unpersist(blocking=False)
+        n_chunks = chunks.count()
+        corpus_lake.overwrite_partitions(chunks, sort_by=("doc_id", "chunk_id"))
     return {
         "total_docs": total,
         "after_quality_filter": n_filtered,

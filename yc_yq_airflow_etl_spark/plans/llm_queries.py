@@ -10,6 +10,8 @@ get rows-only checks plus property tests in tests/test_llm_ops.py.
 
 from __future__ import annotations
 
+import contextvars
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -24,6 +26,7 @@ from ..functions.text import (
     token_count,
     tokenize,
 )
+from ..operators.checkpoints import materialize, scope
 from ..operators.dedup import (
     embedding_cosine_dupes,
     exact_dedup,
@@ -211,24 +214,29 @@ def ensure_simhash_artifacts(
     keeper_id, cluster_size) for clustered docs. bench.py calls this
     in its untimed setup block (same pattern as the ANN index and
     manifest demos) so the downstream queries time their own logic."""
-    from ..operators.checkpoints import checkpointed_rdd_id, free_checkpoint
-    from ..operators.dedup import cluster_assignments, connected_components
-
     key = (spark.sparkContext.applicationId, data_tag(sf_dir, "documents"))
-    hit = _SIMHASH_ARTIFACT_CACHE.get(key)
-    if hit is not None:
-        return hit
-    docs = load_testdata(spark, sf_dir)["documents"]
-    found = simhash_dup_pairs(docs, max_hamming=SIMHASH_MAX_HAMMING)
-    pairs = found.select("id_a", "id_b").localCheckpoint()
-    # each checkpoint holds its artifact: free what the operators kept
-    # for their callers (the persisted pair frame, the labels)
-    found.unpersist(blocking=False)
-    comp = connected_components(pairs, max_iter=25)
-    assign = cluster_assignments(comp).localCheckpoint()
-    free_checkpoint(spark, checkpointed_rdd_id(comp))
-    _SIMHASH_ARTIFACT_CACHE[key] = (pairs, assign)
-    return pairs, assign
+    if key not in _SIMHASH_ARTIFACT_CACHE:
+        # built in a fresh context, where no scope is open: the
+        # artifacts belong to the session even when the first caller
+        # sits inside a scope
+        _SIMHASH_ARTIFACT_CACHE[key] = contextvars.Context().run(
+            _build_simhash_artifacts, load_testdata(spark, sf_dir)["documents"]
+        )
+    return _SIMHASH_ARTIFACT_CACHE[key]
+
+
+def _build_simhash_artifacts(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The two artifacts, materialized; what the operators returned
+    on the way (the verified pairs, the labels) goes with the scope."""
+    from ..operators.dedup import dedup_cluster_assignments
+
+    with scope() as s:
+        found = simhash_dup_pairs(docs, max_hamming=SIMHASH_MAX_HAMMING)
+        pairs = materialize(found.select("id_a", "id_b"), "simhash pairs")
+        assign = materialize(
+            dedup_cluster_assignments(docs, pairs), "simhash clusters"
+        )
+        return s.keep(pairs), s.keep(assign)
 
 
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3069,14 +3077,17 @@ def cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ^[a-z]{4,}$ gate, so the intersect subsumes the rlike filter),
     # explode, materialize — the multiset equals the r17 broadcast
     # join of toks against the vocab by construction
-    vt = d.select(
-        "doc_id",
-        F.explode(
-            F.array_intersect(
-                F.array_distinct(tokenize("text")), F.lit(vocab_terms)
-            )
-        ).alias("term"),
-    ).localCheckpoint()
+    vt = materialize(
+        d.select(
+            "doc_id",
+            F.explode(
+                F.array_intersect(
+                    F.array_distinct(tokenize("text")), F.lit(vocab_terms)
+                )
+            ).alias("term"),
+        ),
+        "cooccurrence_pmi: vocab tokens",
+    )
     co = (
         vt.select("doc_id", F.col("term").alias("term_a"))
         .join(

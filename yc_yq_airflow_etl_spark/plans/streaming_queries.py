@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_testdata
+from ..operators.checkpoints import materialize, scope
 from ..streaming.windows import (
     session_window_stats,
     sliding_window_counts,
@@ -273,37 +274,28 @@ def stateful_spend_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = tempfile.mkdtemp(prefix="spend_src_")
     # (ts, event_id) is a total order — ties on ts alone would split
     # a user's equal-ts events across files nondeterministically.
-    # localCheckpoint: both half-writes read the SAME materialized
-    # ntile frame — without it each filter re-runs the global sort.
-    # The checkpoint blocks are explicitly FREED once the staging
-    # writes land (r18, ADVICE): unpersist() does not release
-    # checkpoint storage, so each invocation would otherwise leak the
-    # purchase frame's blocks for the session lifetime — the same
-    # hygiene contract as operators/dedup's iterative loops.
-    from ..operators.checkpoints import checkpointed_rdd_id, free_checkpoint
-
-    ev = (
-        t["events"]
-        .filter(F.col("event_type") == "purchase")
-        .withColumn("_q", F.ntile(2).over(Window.orderBy("ts", "event_id")))
-        .localCheckpoint()
-    )
-    ev_rdd_id = checkpointed_rdd_id(ev)
-    try:
+    # Materialized: both half-writes read the SAME ntile frame —
+    # without it each filter re-runs the global sort. The scope frees
+    # the checkpoint once the query has stopped, so no invocation
+    # leaves the purchase frame's blocks behind for the session.
+    name = "spend_alerts_" + uuid.uuid4().hex[:8]
+    with scope(), _no_data_batches_off(spark):
+        ev = materialize(
+            t["events"]
+            .filter(F.col("event_type") == "purchase")
+            .withColumn("_q", F.ntile(2).over(Window.orderBy("ts", "event_id"))),
+            "stateful_spend_alerts: staging",
+        )
         for i in range(1, 3):
             ev.filter(F.col("_q") == i).drop("_q").coalesce(1).write.mode(
                 "append"
             ).parquet(src)
             time.sleep(0.05)  # distinct mod-times → stable replay order
-    finally:
-        free_checkpoint(spark, ev_rdd_id)
-    stream = (
-        spark.readStream.schema(t["events"].schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    name = "spend_alerts_" + uuid.uuid4().hex[:8]
-    with _no_data_batches_off(spark):
+        stream = (
+            spark.readStream.schema(t["events"].schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
         q = (
             user_spend_alerts(stream, threshold_cents=20_000)
             .writeStream.format("memory")
@@ -360,41 +352,8 @@ def stream_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time
     import uuid
 
-    from ..operators.checkpoints import checkpointed_rdd_id, free_checkpoint
-
     t = load_testdata(spark, sf_dir)
-    # staging slice materialized ONCE (r18, guide §5.3): the two
-    # staged files used to grow three separate events scans (base ∪
-    # in-batch dupes, then the replay slice); the 1/25 slice is tiny,
-    # so checkpoint it, derive both files from the checkpoint, and
-    # free the blocks once the files land (same hygiene as the
-    # spend-alert staging).
-    base = (
-        t["events"]
-        .filter(F.col("event_id") % 25 == 0)
-        .select("event_id", "user_id", "ts", "event_type", "value")
-        .localCheckpoint()
-    )
-    base_rdd_id = checkpointed_rdd_id(base)
-    dup_in_batch = base.filter(F.col("event_id") % 50 == 0)
-    replay_next_batch = base.filter(F.col("event_id") % 50 == 25)
-
     src = tempfile.mkdtemp(prefix="sdedup_src_")
-    try:
-        base.unionAll(dup_in_batch).coalesce(1).write.mode("append").parquet(
-            src
-        )
-        time.sleep(0.05)  # distinct mod-times → stable file replay order
-        replay_next_batch.coalesce(1).write.mode("append").parquet(src)
-    finally:
-        free_checkpoint(spark, base_rdd_id)
-
-    stream = (
-        spark.readStream.schema(base.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    deduped = stream.withWatermark("ts", "30 days").dropDuplicates(["event_id"])
     name = "stream_dedup_" + uuid.uuid4().hex[:8]
     # The r17 full-bench "regression" of this query (2.92 → 3.45 s in
     # both r17 runs) was bisected in r18 full-bench A/B runs and
@@ -404,7 +363,32 @@ def stream_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the scoping-ON first run beat the scoping-OFF first run (4.28 vs
     # 5.13 s, steady 2.47 s) — the first-vs-steady gap dwarfs any
     # scoping delta. Scoping kept (see OPTIMIZATION_r18.md).
-    with _no_data_batches_off(spark):
+    with scope(), _no_data_batches_off(spark):
+        # staging slice materialized ONCE (r18, guide §5.3): the two
+        # staged files used to grow three separate events scans (base
+        # ∪ in-batch dupes, then the replay slice); the 1/25 slice is
+        # tiny, so checkpoint it and derive both files from it
+        base = materialize(
+            t["events"]
+            .filter(F.col("event_id") % 25 == 0)
+            .select("event_id", "user_id", "ts", "event_type", "value"),
+            "stream_exact_dedup: staging",
+        )
+        dup_in_batch = base.filter(F.col("event_id") % 50 == 0)
+        replay_next_batch = base.filter(F.col("event_id") % 50 == 25)
+        base.unionAll(dup_in_batch).coalesce(1).write.mode("append").parquet(
+            src
+        )
+        time.sleep(0.05)  # distinct mod-times → stable file replay order
+        replay_next_batch.coalesce(1).write.mode("append").parquet(src)
+        stream = (
+            spark.readStream.schema(base.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        deduped = stream.withWatermark("ts", "30 days").dropDuplicates(
+            ["event_id"]
+        )
         q = (
             deduped.writeStream.format("memory")
             .queryName(name)
@@ -456,8 +440,6 @@ def stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time
     import uuid
 
-    from ..operators.checkpoints import checkpointed_rdd_id, free_checkpoint
-
     t = load_testdata(spark, sf_dir)
     # staging slice materialized ONCE (r18, guide §5.3): the 1/10
     # slice used to be re-scanned from events for EACH half-file write
@@ -465,16 +447,15 @@ def stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-evaluates per micro-batch (the static side is re-broadcast
     # every trigger, so an un-materialized dimension re-reads the base
     # table once per batch). The checkpoint makes staging and every
-    # per-batch tier derivation read the tiny slice; freed only after
-    # the stream stops (the live query is its last consumer).
-    base = (
-        t["events"]
-        .filter(F.col("event_id") % 10 == 0)
-        .select("event_id", "user_id", "ts", "value")
-        .localCheckpoint()
-    )
-    base_rdd_id = checkpointed_rdd_id(base)
-    try:
+    # per-batch tier derivation read the tiny slice; the scope frees it
+    # after the stream stops (the live query is its last consumer).
+    with scope():
+        base = materialize(
+            t["events"]
+            .filter(F.col("event_id") % 10 == 0)
+            .select("event_id", "user_id", "ts", "value"),
+            "stream_static_enrichment: staging",
+        )
         tiers = (
             base.select("user_id")
             .distinct()
@@ -519,8 +500,6 @@ def stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.processAllAvailable()
             q.stop()
             q.awaitTermination(60)
-    finally:
-        free_checkpoint(spark, base_rdd_id)
     return spark.table(name).orderBy("tier")
 
 

@@ -2567,16 +2567,10 @@ class ManifestTable:
         cannot silently drop a concurrent commit's rows (append
         commutes and keeps its automatic rebase instead)."""
         from pyspark.sql import functions as F
-        from pyspark.storagelevel import StorageLevel
+
+        from ..operators.checkpoints import cache, scope
 
         spark = updates.sparkSession
-        lvl = updates.storageLevel
-        # a collapsed batch is a materialization already
-        ours = not (
-            _collapsed or lvl.useMemory or lvl.useDisk or lvl.useOffHeap
-        )
-        if ours:
-            updates = updates.persist(StorageLevel.MEMORY_AND_DISK)
 
         def prepare(base: int, m: dict) -> _RowChange:
             # one schema contract for BOTH modes: unknown columns always
@@ -2637,13 +2631,17 @@ class ManifestTable:
                 images=lambda found: ups,
             )
 
-        try:
+        lvl = updates.storageLevel
+        with scope():
+            # a collapsed batch is a materialization already; a batch
+            # the caller cached stays the caller's
+            if not (
+                _collapsed or lvl.useMemory or lvl.useDisk or lvl.useOffHeap
+            ):
+                cache(updates)  # in place: the next job reading it fills it
             return self._row_change(
                 spark, "merge", mode, expected_version, prepare, batch_id
             )
-        finally:
-            if ours:
-                updates.unpersist(blocking=False)
 
     def _merge_probe(
         self,
@@ -3035,10 +3033,7 @@ class ManifestTable:
           without a schema record or the flag was already set."""
         from pyspark.sql import functions as F
 
-        from ..operators.checkpoints import (
-            checkpointed_rdd_id,
-            free_checkpoint,
-        )
+        from ..operators.checkpoints import materialize, scope
 
         if mode not in ("copy-on-write", "merge-on-read"):
             raise ValueError(
@@ -3054,7 +3049,7 @@ class ManifestTable:
         # replay is skipped (one commit per batch)
         last = int(m.get("last_batch_id", -1))
         hwm = last if batch_id is None else max(last, int(batch_id))
-        raw = found = rdd = None
+        raw = found = None
         if ch.candidates and (mor or ch.tally):
             raw = self._reader_for(spark, m).parquet(
                 *[f"{self.path}/data/{f}" for f in ch.candidates]
@@ -3067,15 +3062,14 @@ class ManifestTable:
                 *[_qcol(c) for c in raw.columns],
             )
             found = ch.match(self._live_positions(tagged, m, ch.candidates))
-            if mor:
-                found = found.localCheckpoint()
-                rdd = checkpointed_rdd_id(found)
         new_files: list[str] = []
         parts: list[str] = []
         # pre-publish no-orphan window: whatever landed by failure time
         # (DV parts, data files) is deleted with the failure
         with self._staged_cleanup(spark, new_files, parts):
-            try:
+            with scope():
+                if mor and found is not None:
+                    found = materialize(found, f"{op}: find")
                 hits = {} if found is None else {
                     r["__dv_f"]: int(r["n"])
                     for r in found.groupBy("__dv_f")
@@ -3113,8 +3107,6 @@ class ManifestTable:
                     if not written:
                         self._abandon_files(spark, staged)
                         new_files.clear()
-            finally:
-                free_checkpoint(spark, rdd)
             if not (removed or dead or new_files) and hwm == last:
                 return base  # nothing changed: no commit
             new_stats = self._file_stats(spark, new_files)

@@ -19,14 +19,11 @@ engine's own primitives.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from .._reserved import reserve_tags
-from ..operators.checkpoints import checkpointed_rdd_id, free_checkpoint
+from ..operators.checkpoints import materialize, scope
 from ..sources.manifest import ManifestTable
 
 
@@ -56,19 +53,18 @@ def stream_to_manifest_table(
     )
 
 
-@contextmanager
 def _collapse_last_change(
     batch_df: DataFrame,
     batch_id: int,
     key: str,
     order_col: str,
     op_col: str | None = None,
-) -> Iterator[DataFrame]:
+) -> DataFrame:
     """Shared CDC-batch preparation for :func:`upsert_batch` and
     :func:`apply_cdc_batch`: collapse the batch to each key's LAST
-    change by ``order_col`` and validate it, yielding the collapsed
-    batch MATERIALIZED ONCE (``localCheckpoint``) and freeing it when
-    the block exits, normally or by exception.
+    change by ``order_col`` and validate it, returning the collapsed
+    batch MATERIALIZED ONCE, owned by the caller's scope (which frees
+    it when the batch is done, normally or by exception).
 
     One materialization does everything: the ``row_number`` window
     that picks the last change also flags ties — equal ``order_col``
@@ -101,7 +97,7 @@ def _collapse_last_change(
         else F.lit(0)
     )
     obs = Observation()
-    last = (
+    last = materialize(
         batch_df.withColumn("_rn", F.row_number().over(w))
         .withColumn(
             "_tie",
@@ -114,25 +110,21 @@ def _collapse_last_change(
             null_ops.alias("null_ops"),
         )
         .filter(F.col("_rn") == 1)
-        .drop("_rn", "_tie")
-        .localCheckpoint()
+        .drop("_rn", "_tie"),
+        f"micro-batch {batch_id}: last-change collapse",
     )
-    rdd_id = checkpointed_rdd_id(last)
-    try:
-        chk = obs.get
-        if int(chk["ties"] or 0) > 0:
-            raise ValueError(
-                f"micro-batch {batch_id} has tied ({key}, {order_col}) rows — "
-                "last-change collapse would be nondeterministic"
-            )
-        if int(chk["null_ops"] or 0) > 0:
-            raise ValueError(
-                f"micro-batch {batch_id} has rows with NULL {op_col!r} — "
-                "every change must carry an operation"
-            )
-        yield last
-    finally:
-        free_checkpoint(batch_df.sparkSession, rdd_id)
+    chk = obs.get
+    if int(chk["ties"] or 0) > 0:
+        raise ValueError(
+            f"micro-batch {batch_id} has tied ({key}, {order_col}) rows — "
+            "last-change collapse would be nondeterministic"
+        )
+    if int(chk["null_ops"] or 0) > 0:
+        raise ValueError(
+            f"micro-batch {batch_id} has rows with NULL {op_col!r} — "
+            "every change must carry an operation"
+        )
+    return last
 
 
 def upsert_batch(
@@ -162,7 +154,8 @@ def upsert_batch(
     spark = batch_df.sparkSession
     if batch_id <= table.last_batch_id(spark):
         return False
-    with _collapse_last_change(batch_df, batch_id, key, order_col) as last:
+    with scope():
+        last = _collapse_last_change(batch_df, batch_id, key, order_col)
         table.merge(last, key, batch_id=batch_id, mode=mode)
     return True
 
@@ -204,9 +197,10 @@ def apply_cdc_batch(
     spark = batch_df.sparkSession
     if batch_id <= table.last_batch_id(spark):
         return False
-    with _collapse_last_change(
-        batch_df, batch_id, key, order_col, op_col=op_col
-    ) as last:
+    with scope():
+        last = _collapse_last_change(
+            batch_df, batch_id, key, order_col, op_col=op_col
+        )
         deletes = last.filter(F.col(op_col) == delete_value).select(key)
         upserts = (
             last.filter(F.col(op_col) != delete_value).drop(op_col, order_col)

@@ -1448,18 +1448,18 @@ def test_minhash_index_concurrent_appends_lose_nothing(spark, tmp_path, monkeypa
     pre_snapshot = _index_table(idx).read(spark)
     n_pre = pre_snapshot.count()
 
-    orig_pub = ManifestTable._publish_cleanly
+    orig_pub = ManifestTable._publish
     fired = []
 
-    def rival_append_in_window(self, spark_, op, rebase, data_files, dv_parts=None):
+    def rival_append_in_window(self, spark_, op, build, **kw):
         if op == "append" and not fired and self.path.endswith("mh_idx"):
             fired.append(True)
             append_to_minhash_index(
                 docs.filter(SF.col("doc_id") % 3 == 1), idx
             )
-        return orig_pub(self, spark_, op, rebase, data_files, dv_parts)
+        return orig_pub(self, spark_, op, build, **kw)
 
-    monkeypatch.setattr(ManifestTable, "_publish_cleanly", rival_append_in_window)
+    monkeypatch.setattr(ManifestTable, "_publish", rival_append_in_window)
     append_to_minhash_index(docs.filter(SF.col("doc_id") % 3 == 2), idx)
     assert fired
     got = {

@@ -164,16 +164,16 @@ def test_vacuum_racing_live_append_does_not_brick_commit(
     table) — verified red before this landed."""
     table.overwrite(_df(spark, 0, 10))
     maintenance = ManifestTable(table.path)  # "another process"
-    real_publish = ManifestTable._publish_cleanly
+    real_publish = ManifestTable._publish
     fired = []
 
-    def vacuum_in_window(self, spark_, op, rebase, data_files, dv_parts=None):
+    def vacuum_in_window(self, spark_, op, build, **kw):
         if op == "append" and not fired:
             fired.append(True)
             maintenance.vacuum(spark_, keep_versions=1)
-        return real_publish(self, spark_, op, rebase, data_files, dv_parts)
+        return real_publish(self, spark_, op, build, **kw)
 
-    monkeypatch.setattr(ManifestTable, "_publish_cleanly", vacuum_in_window)
+    monkeypatch.setattr(ManifestTable, "_publish", vacuum_in_window)
     table.append(_df(spark, 100, 150))
     assert fired  # the race really interleaved
     assert table.read(spark).count() == 60  # snapshot complete, readable
@@ -192,18 +192,18 @@ def test_concurrent_evolving_append_merges_schema_at_rebase(
 
     table.overwrite(_df(spark, 0, 10))
     writer_b = ManifestTable(table.path)
-    real_publish = ManifestTable._publish_cleanly
+    real_publish = ManifestTable._publish
     fired = []
 
-    def b_lands_first(self, spark_, op, rebase, data_files, dv_parts=None):
+    def b_lands_first(self, spark_, op, build, **kw):
         if op == "append" and not fired and self is not writer_b:
             fired.append(True)
             writer_b.append(
                 _df(spark_, 100, 105).withColumn("extra", F.lit("b"))
             )
-        return real_publish(self, spark_, op, rebase, data_files, dv_parts)
+        return real_publish(self, spark_, op, build, **kw)
 
-    monkeypatch.setattr(ManifestTable, "_publish_cleanly", b_lands_first)
+    monkeypatch.setattr(ManifestTable, "_publish", b_lands_first)
     table.append(_df(spark, 200, 203))  # plain schema, races B
     assert fired
     out = table.read(spark)
@@ -224,9 +224,9 @@ def test_concurrent_evolving_append_merges_schema_at_rebase(
 def test_concurrent_type_change_flags_evolved_and_reads_fail_loudly(
     spark, table, monkeypatch
 ):
-    """The documented last-resort path (manifest._append_rebase): a
+    """The documented last-resort path (manifest._append_build): a
     CONCURRENT overwrite changes a column's TYPE between an append's
-    entry-conformance check and its rebase. The append must commit
+    entry-conformance check and its commit-time build. The append must commit
     with the evolved flag — never silently adopt either schema — and
     a plain read over the mixed physical types must fail LOUDLY via
     mergeSchema instead of nondeterministically picking a footer."""
@@ -235,21 +235,21 @@ def test_concurrent_type_change_flags_evolved_and_reads_fail_loudly(
 
     table.overwrite(_df(spark, 0, 10).withColumn("v", F.lit("s")))
     writer_b = ManifestTable(table.path)
-    real_publish = ManifestTable._publish_cleanly
+    real_publish = ManifestTable._publish
     fired = []
 
     def b_overwrites_with_new_type(
-        self, spark_, op, rebase, data_files, dv_parts=None
+        self, spark_, op, build, **kw
     ):
         if op == "append" and not fired and self is not writer_b:
             fired.append(True)
             writer_b.overwrite(
                 _df(spark_, 100, 105).withColumn("v", F.lit(7).cast("long"))
             )
-        return real_publish(self, spark_, op, rebase, data_files, dv_parts)
+        return real_publish(self, spark_, op, build, **kw)
 
     monkeypatch.setattr(
-        ManifestTable, "_publish_cleanly", b_overwrites_with_new_type
+        ManifestTable, "_publish", b_overwrites_with_new_type
     )
     table.append(_df(spark, 200, 203).withColumn("v", F.lit("a")))
     assert fired
@@ -281,7 +281,7 @@ def test_restore_racing_vacuum_prepublish_refuses_loudly(
     restore that trusted its entry-time existence check would then
     commit a live snapshot pointing at deleted files (a bricked
     table; reproduced red on the pre-r14 single-check code). The
-    per-attempt recheck inside the rebase hook must refuse pre-put:
+    per-attempt recheck inside the publish build must refuse pre-put:
     loud FileNotFoundError, NOTHING committed, live table intact."""
     import pytest as _pytest
 
@@ -291,11 +291,11 @@ def test_restore_racing_vacuum_prepublish_refuses_loudly(
     orig = ManifestTable._publish
     fired = []
 
-    def vacuum_in_window(self, spark_, files, rows, op, extra=None, rebase=None):
+    def vacuum_in_window(self, spark_, op, build, **kw):
         if op == "restore" and not fired:
             fired.append(True)
             maintenance.vacuum(spark_, keep_versions=1)
-        return orig(self, spark_, files, rows, op, extra, rebase)
+        return orig(self, spark_, op, build, **kw)
 
     monkeypatch.setattr(ManifestTable, "_publish", vacuum_in_window)
     pre = table.current_version(spark)
@@ -329,8 +329,8 @@ def test_restore_racing_vacuum_postpublish_heals_and_raises(
     orig = ManifestTable._publish
     fired = []
 
-    def late_delete(self, spark_, files, rows, op, extra=None, rebase=None):
-        v = orig(self, spark_, files, rows, op, extra, rebase)
+    def late_delete(self, spark_, op, build, **kw):
+        v = orig(self, spark_, op, build, **kw)
         # a racing vacuum whose scan predated our commit fires its
         # delete loop now: v0's files go, the restore manifest stays
         if op == "restore" and not fired:
@@ -370,18 +370,18 @@ def test_wap_audit_outliving_grace_survives_vacuum_via_stage_marker(
     from yc_yq_airflow_etl_spark.operators.expectations import Rule
 
     table.overwrite(_df(spark, 0, 50))
-    orig = ManifestTable._publish_cleanly
+    orig = ManifestTable._publish
     fired = []
 
-    def vacuum_in_window(self, spark_, op, rebase, data_files, dv_parts=None):
+    def vacuum_in_window(self, spark_, op, build, **kw):
         if op == "wap" and not fired:
             fired.append(True)
             ManifestTable(self.path).vacuum(
                 spark_, keep_versions=1, orphan_grace_seconds=0
             )
-        return orig(self, spark_, op, rebase, data_files, dv_parts)
+        return orig(self, spark_, op, build, **kw)
 
-    monkeypatch.setattr(ManifestTable, "_publish_cleanly", vacuum_in_window)
+    monkeypatch.setattr(ManifestTable, "_publish", vacuum_in_window)
     v, report = table.write_audit_publish(
         _df(spark, 100, 150), [Rule("v_even", F.col("v") % 2 == 0)]
     )
@@ -545,13 +545,13 @@ def test_wap_audit_on_vanished_stage_fails_loud_never_partial(
     # an audit that validated a partial stage has already broken the
     # WAP contract even if a later layer saves the manifest
     publish_attempts: list[str] = []
-    orig_publish = ManifestTable._publish_cleanly
+    orig_publish = ManifestTable._publish
 
     def record_publish(self, *a, **kw):
         publish_attempts.append("hit")
         return orig_publish(self, *a, **kw)
 
-    monkeypatch.setattr(ManifestTable, "_publish_cleanly", record_publish)
+    monkeypatch.setattr(ManifestTable, "_publish", record_publish)
     old = spark.conf.get("spark.sql.files.ignoreMissingFiles")
     spark.conf.set("spark.sql.files.ignoreMissingFiles", "true")
     try:
@@ -656,6 +656,121 @@ def test_ambiguous_commit_that_landed_is_skipped_on_streaming_replay(
     # and the NEXT batch proceeds normally
     assert commit_batch(table, _df(spark, 150, 160), batch_id=8) is True
     assert table.read(spark).count() == 70
+
+
+def test_overwrite_keeps_stream_high_water_mark(spark, table):
+    """An overwrite carries the streaming high-water mark like every
+    other commit: batch 4 committed before the overwrite stays
+    committed, so its replay is skipped instead of landing a second
+    time on top of the overwritten snapshot."""
+    from yc_yq_airflow_etl_spark.streaming.manifest_sink import commit_batch
+
+    batch = _df(spark, 0, 10)
+    table.append(batch, batch_id=4)
+    table.overwrite(_df(spark, 100, 105))
+    assert table.last_batch_id(spark) == 4
+    assert commit_batch(table, batch, 4) is False  # the replay is skipped
+    assert table.read(spark).count() == 5
+    assert table.last_batch_id(spark) == 4
+
+
+def test_restore_put_that_raises_is_commit_ambiguous(
+    spark, table, monkeypatch
+):
+    """restore commits through the same path as every op, so a
+    manifest put that lands and then raises client-side (on S3A the
+    close() that raised IS the PUT) surfaces as CommitAmbiguousError,
+    not as the store's raw exception; the landed restore is then in
+    history() for the caller to reconcile against."""
+    import pytest as _pytest
+
+    from yc_yq_airflow_etl_spark.sources.manifest import (
+        CommitAmbiguousError,
+    )
+
+    table.overwrite(_df(spark, 0, 10))  # v0
+    table.overwrite(_df(spark, 100, 150))  # v1
+    orig = ManifestTable._write_text_atomic
+    fired = []
+
+    def lands_then_raises(self, spark_, content, *parts):
+        ok = orig(self, spark_, content, *parts)
+        if parts[0] == "_manifests" and not fired:
+            fired.append(True)
+            raise IOError("synthetic: connection reset AFTER the put landed")
+        return ok
+
+    monkeypatch.setattr(ManifestTable, "_write_text_atomic", lands_then_raises)
+    with _pytest.raises(CommitAmbiguousError, match="restore commit outcome"):
+        table.restore(spark, 0)
+    monkeypatch.undo()
+    assert fired
+    top = table.history(spark)[0]
+    assert top["version"] == 2
+    assert top["op"] == "restore" and top["restored_from"] == 0
+    assert table.read(spark).count() == 10
+
+
+def test_commit_rules_live_only_in_publish():
+    """Spark-free: ``ManifestTable._publish`` is the one place a
+    commit record is decided. In ``sources/manifest.py`` no other
+    function raises ConcurrentWriteError or CommitAmbiguousError, and
+    none but ``_publish`` sets the ``last_batch_id`` key — apart from
+    ``_heal``, whose WAP heal rolls the mark back to the candidate's
+    own."""
+    import ast
+
+    import yc_yq_airflow_etl_spark.sources.manifest as mmod
+
+    with open(mmod.__file__) as fh:
+        tree = ast.parse(fh.read())
+    owner: dict[int, str] = {}
+    for fn in ast.walk(tree):
+        if isinstance(fn, ast.FunctionDef):
+            for node in ast.walk(fn):
+                owner.setdefault(id(node), fn.name)  # outermost wins
+
+    def is_mark(node) -> bool:
+        return isinstance(node, ast.Constant) and node.value == "last_batch_id"
+
+    raises, marks = [], []
+    for node in ast.walk(tree):
+        where = (owner.get(id(node)), node.lineno) if hasattr(
+            node, "lineno"
+        ) else None
+        if (
+            isinstance(node, ast.Raise)
+            and isinstance(node.exc, ast.Call)
+            and isinstance(node.exc.func, ast.Name)
+            and node.exc.func.id
+            in ("ConcurrentWriteError", "CommitAmbiguousError")
+        ):
+            raises.append((node.exc.func.id, *where))
+        if isinstance(node, ast.Dict) and any(map(is_mark, node.keys)):
+            marks.append(where)
+        if (
+            isinstance(node, ast.Subscript)
+            and not isinstance(node.ctx, ast.Load)
+            and is_mark(node.slice)
+        ):
+            marks.append(where)
+        if isinstance(node, ast.Call) and (
+            any(k.arg == "last_batch_id" for k in node.keywords)
+            or (
+                isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("setdefault", "update", "__setitem__")
+                and node.args
+                and is_mark(node.args[0])
+            )
+        ):
+            marks.append(where)
+    assert raises and all(r[1] == "_publish" for r in raises), raises
+    assert {r[0] for r in raises} == {
+        "ConcurrentWriteError",
+        "CommitAmbiguousError",
+    }
+    assert marks and {m[0] for m in marks} <= {"_publish", "_heal"}, marks
+    assert [m[0] for m in marks].count("_heal") == 1, marks
 
 
 def test_streaming_into_manifest_table_exactly_once(spark, testdata, tmp_path):
@@ -2030,7 +2145,7 @@ def test_compact_conflicts_with_concurrent_append(spark, table):
     # force the race: advance the snapshot after compact has read v by
     # intercepting the version check order — simplest deterministic
     # interleaving is to run compact against a base we then move. The
-    # rebase closure re-reads current_version at publish time, so an
+    # publish re-reads the current version at commit time, so an
     # append issued before publish is equivalent; emulate by wrapping
     # _write_files to append mid-compact.
     orig_write = type(table)._write_files
@@ -3590,7 +3705,7 @@ def test_append_type_conflict_race_fallback_sets_evolved(spark, tmp_path):
     """append() rejects type drift at entry (see
     test_append_widens_and_rejects_drift_before_any_file_lands), so a
     conflicting commit can only arise from a CONCURRENT type change
-    between that check and the rebase. Drive the rebase directly to
+    between that check and the build. Drive the build directly to
     pin the fallback: the manifest carries the evolved flag and NO
     schema record — reads fail loudly in mergeSchema instead of
     adopting one file's footer nondeterministically."""
@@ -3600,11 +3715,10 @@ def test_append_type_conflict_race_fallback_sets_evolved(spark, tmp_path):
         F.col("id"), (F.col("id") * 0.5).alias("v")  # v: double
     )
     files, _, _n = t._write_files(drifted)
-    rebase = t._append_rebase(
-        spark, files, sorted(drifted.columns), {}, None,
-        new_schema=drifted.schema,
+    build = t._append_build(
+        spark, files, sorted(drifted.columns), {}, _n, drifted.schema
     )
-    t._publish(spark, [], 0, "append", rebase=rebase)
+    t._publish(spark, "append", build)
     m = t._manifest(spark, t.current_version(spark))
     assert "schema" not in m  # never records a conflicted union
     assert m.get("evolved") is True
@@ -3835,8 +3949,8 @@ def test_grandfathered_dotted_table_stays_compactable(spark, tmp_path):
     # simulate the pre-contract table: land files + manifest directly
     files, _, _n = t._write_files(dotted)
     t._publish(
-        spark, files, 10, "overwrite",
-        {"columns": sorted(dotted.columns)},
+        spark, "overwrite",
+        lambda *_: (files, 10, {"columns": sorted(dotted.columns)}),
     )
     assert set(t.read(spark).columns) == {"id", "a.b"}
     v = t.compact(spark, target_files=1)  # repair path works
@@ -3855,7 +3969,10 @@ def test_overwrite_rebaseline_open_for_grandfathered_dotted_table(
     t = ManifestTable(str(tmp_path / "mt"))
     dotted = spark.range(0, 5).select("id", F.lit("k").alias("a.b")).coalesce(1)
     files, _, _n = t._write_files(dotted)
-    t._publish(spark, files, 5, "overwrite", {"columns": sorted(dotted.columns)})
+    t._publish(
+        spark, "overwrite",
+        lambda *_: (files, 5, {"columns": sorted(dotted.columns)}),
+    )
     # re-baseline with the SAME grandfathered name: allowed
     t.overwrite(t.read(spark))
     assert t.read(spark).count() == 5
@@ -3988,10 +4105,10 @@ def test_publish_failure_cleanup_classified_by_provability(
     t.overwrite(_df(spark, 0, 5))
     n_before = len(list((tmp_path / "mt" / "data").glob("*.parquet")))
 
-    def exhausted(*a, **k):
-        raise PublishContentionError("synthetic: lost every race")
+    def exhausted(self, spark_, content, *parts):
+        return False  # the put loses every race: nothing lands
 
-    monkeypatch.setattr(ManifestTable, "_publish", exhausted)
+    monkeypatch.setattr(ManifestTable, "_write_text_atomic", exhausted)
     with pytest.raises(PublishContentionError):
         t.append(_df(spark, 5, 8))
     assert (
@@ -4004,10 +4121,10 @@ def test_publish_failure_cleanup_classified_by_provability(
     )
     monkeypatch.undo()
 
-    def ambiguous(*a, **k):
+    def ambiguous(self, spark_, content, *parts):
         raise IOError("synthetic: connection reset during put")
 
-    monkeypatch.setattr(ManifestTable, "_publish", ambiguous)
+    monkeypatch.setattr(ManifestTable, "_write_text_atomic", ambiguous)
     from yc_yq_airflow_etl_spark.sources.manifest import CommitAmbiguousError
 
     with pytest.raises(CommitAmbiguousError, match="outcome UNKNOWN"):
@@ -4030,7 +4147,7 @@ def test_publish_failure_cleanup_classified_by_provability(
 def test_overwrite_commit_time_recheck_catches_renamed_away_name(
     spark, tmp_path, monkeypatch
 ):
-    """The overwrite rebase re-checks the identifier contract against
+    """The overwrite's build re-checks the identifier contract against
     the COMMIT-TIME base: entry-checks against a grandfathered name,
     then a concurrent clean overwrite lands before publish — the
     racing writer must NOT re-introduce the dotted name, and its
@@ -4040,7 +4157,10 @@ def test_overwrite_commit_time_recheck_catches_renamed_away_name(
     t = ManifestTable(str(tmp_path / "mt"))
     dotted = spark.range(0, 5).select("id", F.lit("k").alias("a.b")).coalesce(1)
     files0, _, _n = t._write_files(dotted)
-    t._publish(spark, files0, 5, "overwrite", {"columns": sorted(dotted.columns)})
+    t._publish(
+        spark, "overwrite",
+        lambda *_: (files0, 5, {"columns": sorted(dotted.columns)}),
+    )
 
     clean = spark.range(0, 5).select("id", F.lit(1).alias("ab")).coalesce(1)
     orig_write = ManifestTable._write_files
@@ -4053,9 +4173,11 @@ def test_overwrite_commit_time_recheck_catches_renamed_away_name(
             # concurrent writer: a CLEAN overwrite lands (metadata
             # only — empty file list keeps the simulation cheap)
             self._publish(
-                spark, [], 0, "overwrite",
-                {"columns": ["ab", "id"],
-                 "schema": mmod._schema_json(clean.schema)},
+                spark, "overwrite",
+                lambda *_: ([], 0, {
+                    "columns": ["ab", "id"],
+                    "schema": mmod._schema_json(clean.schema),
+                }),
             )
         return out
 
@@ -4185,17 +4307,17 @@ def test_wap_marker_refresh_after_audit_restores_vacuum_protection(
                 _backdate_days(os.path.join(table.path, "data", f), 8)
         return orig_audit(staged, rules)
 
-    orig_pub = ManifestTable._publish_cleanly
+    orig_pub = ManifestTable._publish
 
-    def vacuum_then_publish(self, spark_, op, rebase, data_files, dv_parts=None):
+    def vacuum_then_publish(self, spark_, op, build, **kw):
         if op == "wap":
             # default TTL (7 d) and grace (1 h): the 8-day-old stage is
             # protected ONLY by the just-refreshed marker
             ManifestTable(self.path).vacuum(spark_, keep_versions=1)
-        return orig_pub(self, spark_, op, rebase, data_files, dv_parts)
+        return orig_pub(self, spark_, op, build, **kw)
 
     monkeypatch.setattr(_exp, "audit", age_the_audit)
-    monkeypatch.setattr(ManifestTable, "_publish_cleanly", vacuum_then_publish)
+    monkeypatch.setattr(ManifestTable, "_publish", vacuum_then_publish)
     v, _report = table.write_audit_publish(
         _df(spark, 100, 150), [Rule("v_even", F.col("v") % 2 == 0)]
     )
@@ -4222,17 +4344,17 @@ def test_wap_preput_recheck_refuses_vacuumed_stage_loudly(
     from yc_yq_airflow_etl_spark.operators.expectations import Rule
 
     table.overwrite(_df(spark, 0, 50))
-    orig_pub = ManifestTable._publish_cleanly
+    orig_pub = ManifestTable._publish
 
-    def vacuum_won_the_window(self, spark_, op, rebase, data_files, dv_parts=None):
+    def vacuum_won_the_window(self, spark_, op, build, **kw):
         if op == "wap":
             # simulate the pre-refresh-scan vacuum's delete loop
             # landing now: the staged data files vanish
-            for f in data_files:
+            for f in kw["staged"]:
                 os.remove(os.path.join(self.path, "data", f))
-        return orig_pub(self, spark_, op, rebase, data_files, dv_parts)
+        return orig_pub(self, spark_, op, build, **kw)
 
-    monkeypatch.setattr(ManifestTable, "_publish_cleanly", vacuum_won_the_window)
+    monkeypatch.setattr(ManifestTable, "_publish", vacuum_won_the_window)
     with _pytest.raises(FileNotFoundError, match="concurrent vacuum"):
         table.write_audit_publish(
             _df(spark, 100, 150), [Rule("v_even", F.col("v") % 2 == 0)]
@@ -4265,8 +4387,8 @@ def test_wap_postput_vacuum_heals_and_batch_replay_lands(
 
     fired = []
 
-    def put_then_vacuum_deletes(self, spark_, files, rows, op, extra=None, rebase=None):
-        v = orig_publish(self, spark_, files, rows, op, extra=extra, rebase=rebase)
+    def put_then_vacuum_deletes(self, spark_, op, build, **kw):
+        v = orig_publish(self, spark_, op, build, **kw)
         if op == "wap" and not fired:
             fired.append(True)
             m = self._manifest(spark_, v)
@@ -4297,35 +4419,35 @@ def test_compact_racing_delete_where_never_resurrects_rows(
 ):
     """r15 verdict item 4: a compact whose rewrite was READ before a
     concurrent row-level delete landed must not resurrect the deleted
-    rows. The compact's rebase CAS refuses (ConcurrentWriteError) and
+    rows. The compact's CAS refuses (ConcurrentWriteError) and
     the retry on the new base materializes the delete. Both delete
     modes stressed — merge-on-read is the dangerous shape: the
     compact's rewritten files physically CONTAIN the rows the DV
-    killed. Mutation-verified: with compact's rebase CAS stripped the
+    killed. Mutation-verified: with compact's CAS stripped the
     pre-delete rewrite commits and ids < 20 come back from the dead
     (count 100, not 80)."""
     import pytest as _pytest
 
     from yc_yq_airflow_etl_spark.sources.manifest import ConcurrentWriteError
 
-    orig_pub = ManifestTable._publish_cleanly
+    orig_pub = ManifestTable._publish
     for mode in ("merge-on-read", "copy-on-write"):
         t = ManifestTable(f"{table.path}_cvd_{mode[:3]}")
         t.overwrite(_df(spark, 0, 100).repartition(4))  # v0, 4 files
         fired = []
 
         def delete_in_window(
-            self, spark_, op, rebase, data_files, dv_parts=None,
-            _t=t, _mode=mode, _fired=fired,
+            self, spark_, op, build, *, _t=t, _mode=mode, _fired=fired,
+            **kw,
         ):
             if op == "compact" and not _fired:
                 _fired.append(True)
                 ManifestTable(_t.path).delete_where(
                     spark_, "id < 20", mode=_mode
                 )
-            return orig_pub(self, spark_, op, rebase, data_files, dv_parts)
+            return orig_pub(self, spark_, op, build, **kw)
 
-        monkeypatch.setattr(ManifestTable, "_publish_cleanly", delete_in_window)
+        monkeypatch.setattr(ManifestTable, "_publish", delete_in_window)
         with _pytest.raises(ConcurrentWriteError, match="compact"):
             t.compact(spark, target_files=2)
         assert fired
@@ -4343,14 +4465,14 @@ def test_compact_racing_delete_where_never_resurrects_rows(
         assert got2.agg(F.sum("v")).first()[0] == sum(
             2 * i for i in range(20, 100)
         )
-        monkeypatch.setattr(ManifestTable, "_publish_cleanly", orig_pub)
+        monkeypatch.setattr(ManifestTable, "_publish", orig_pub)
 
 
 def test_delete_where_racing_compact_refuses_and_lands_on_retry(
     spark, table, monkeypatch
 ):
     """The reverse interleaving: a delete computed against v0 while a
-    compact lands first. The delete's rebase CAS must refuse — a
+    compact lands first. The delete's CAS must refuse — a
     committed delete manifest would otherwise reference v0's
     pre-compact file list, silently undoing the compaction (and, once
     vacuum retires those files, bricking the table). The retry on the
@@ -4360,23 +4482,22 @@ def test_delete_where_racing_compact_refuses_and_lands_on_retry(
 
     from yc_yq_airflow_etl_spark.sources.manifest import ConcurrentWriteError
 
-    orig_pub = ManifestTable._publish_cleanly
+    orig_pub = ManifestTable._publish
     for mode in ("merge-on-read", "copy-on-write"):
         t = ManifestTable(f"{table.path}_dvc_{mode[:3]}")
         t.overwrite(_df(spark, 0, 100).repartition(4))
         fired = []
 
         def compact_in_window(
-            self, spark_, op, rebase, data_files, dv_parts=None,
-            _t=t, _fired=fired,
+            self, spark_, op, build, *, _t=t, _fired=fired, **kw,
         ):
             if op == "delete" and not _fired:
                 _fired.append(True)
                 ManifestTable(_t.path).compact(spark_, target_files=2)
-            return orig_pub(self, spark_, op, rebase, data_files, dv_parts)
+            return orig_pub(self, spark_, op, build, **kw)
 
         monkeypatch.setattr(
-            ManifestTable, "_publish_cleanly", compact_in_window
+            ManifestTable, "_publish", compact_in_window
         )
         with _pytest.raises(ConcurrentWriteError, match="delete"):
             t.delete_where(spark, "id < 20", mode=mode)
@@ -4389,7 +4510,7 @@ def test_delete_where_racing_compact_refuses_and_lands_on_retry(
         assert got.count() == 80 and got.agg(F.min("id")).first()[0] == 20
         m = t._manifest(spark, t.current_version(spark))
         assert set(m.get("dvs", {})) <= set(m["files"])
-        monkeypatch.setattr(ManifestTable, "_publish_cleanly", orig_pub)
+        monkeypatch.setattr(ManifestTable, "_publish", orig_pub)
 
 
 def test_wap_heal_skips_commits_stacked_on_the_torn_snapshot(
@@ -4404,7 +4525,7 @@ def test_wap_heal_skips_commits_stacked_on_the_torn_snapshot(
     half-readable. (Same roll-back-to-materializable contract as
     restore's heal; the append's own files survive on disk for manual
     recovery until vacuumed.) The materializability guard is layered —
-    the candidate-loop filter AND the heal rebase's pre-put recheck;
+    the candidate-loop filter AND the heal build's pre-put recheck;
     mutation-verified red with BOTH stripped (stripping only the loop
     filter is absorbed by the recheck, by design)."""
     import pytest as _pytest
@@ -4416,8 +4537,8 @@ def test_wap_heal_skips_commits_stacked_on_the_torn_snapshot(
     orig_publish = ManifestTable._publish
     fired = []
 
-    def put_stack_then_vacuum(self, spark_, files, rows, op, extra=None, rebase=None):
-        v = orig_publish(self, spark_, files, rows, op, extra=extra, rebase=rebase)
+    def put_stack_then_vacuum(self, spark_, op, build, **kw):
+        v = orig_publish(self, spark_, op, build, **kw)
         if op == "wap" and not fired:
             fired.append(True)
             m = self._manifest(spark_, v)

@@ -564,15 +564,22 @@ class ManifestTable:
             return None
         return m
 
+    def _newest(self, spark: SparkSession, names: list[int]) -> tuple[int | None, dict]:
+        """``(version, manifest)`` of the newest VALID manifest among
+        the claimed version ``names`` — ``(None, {})`` when none is.
+        Scans from the top so the common case (no torn manifests)
+        costs one read."""
+        for v in reversed(names):
+            m = self._try_manifest(spark, v)
+            if m is not None:
+                return v, m
+        return None, {}
+
     def current_version(self, spark: SparkSession) -> int | None:
         """Highest VALID manifest version — the valid manifest FILE is
         the commit record; no separate pointer object to keep
-        consistent with it. Scans from the top so the common case
-        (no torn manifests) costs one read."""
-        for v in reversed(self._name_versions(spark)):
-            if self._try_manifest(spark, v) is not None:
-                return v
-        return None
+        consistent with it."""
+        return self._newest(spark, self._name_versions(spark))[0]
 
     def _manifest(self, spark: SparkSession, version: int) -> dict:
         m = self._try_manifest(spark, version)
@@ -675,16 +682,20 @@ class ManifestTable:
         return names, spark, n_rows
 
     def _abandon_files(
-        self, spark: SparkSession, files: list[str], subdir: str = "data"
+        self, spark: SparkSession, files, dv_parts=()
     ) -> None:
-        """Delete staged files whose commit attempt is KNOWN dead —
-        only call when no put could have landed: a pre-publish
-        rejection, or a publish failure proven pre-put (see
-        :meth:`_publish_cleanly`'s classification). An ambiguous put
-        failure must NEVER reach this (see CommitAmbiguousError)."""
+        """Delete a stage — data ``files`` and deletion-vector
+        ``dv_parts`` — whose commit attempt is KNOWN dead: only call
+        when no put could have landed (a pre-publish rejection, or a
+        publish failure :meth:`_publish` proves pre-put). An ambiguous
+        put failure must NEVER reach this (see CommitAmbiguousError)."""
+        if not files and not dv_parts:
+            return
         jvm, fs = self._fs(spark)
         for f in files:
-            fs.delete(self._jp(jvm, subdir, f), False)
+            fs.delete(self._jp(jvm, "data", f), False)
+        for p in dv_parts:
+            fs.delete(self._jp(jvm, "deletes", p), False)
 
     def _write_stage_marker(
         self, spark: SparkSession, files: list[str]
@@ -719,7 +730,7 @@ class ManifestTable:
             fs.delete(p, False)
 
     @contextmanager
-    def _staged_cleanup(self, spark: SparkSession, data_files, dv_parts=None):
+    def _staged_cleanup(self, spark: SparkSession, data_files, dv_parts=()):
         """PRE-PUBLISH no-orphan window: any exception between staging
         and the first publish attempt (a stats/count job, a second
         staging write, a validation) provably precedes every put, so
@@ -727,7 +738,7 @@ class ManifestTable:
         captured BY REFERENCE — append names to them as staging
         proceeds and whatever has landed by failure time is cleaned.
         The publish call itself must sit OUTSIDE this window (its
-        failures need the classification _publish_cleanly applies —
+        failures need the classification :meth:`_publish` applies —
         an ambiguous put may have landed). BaseException, not
         Exception, for consistency with _write_files' own cleanup —
         a KeyboardInterrupt during the stats/count window must not
@@ -735,50 +746,8 @@ class ManifestTable:
         try:
             yield
         except BaseException:
-            self._abandon_files(spark, list(data_files), "data")
-            if dv_parts:
-                self._abandon_files(spark, list(dv_parts), "deletes")
+            self._abandon_files(spark, list(data_files), list(dv_parts))
             raise
-
-    def _publish_cleanly(
-        self,
-        spark: SparkSession,
-        op: str,
-        rebase,
-        data_files: list[str],
-        dv_parts: list[str] | None = None,
-    ) -> int:
-        """_publish plus the no-orphan discipline every staged-file
-        writer shares. Classification is POSITIONAL, not type-based:
-        _publish tags every exception raised before the put attempt
-        (listing, rebase, serialization — whatever its type), and
-        retry exhaustion (PublishContentionError) means every put
-        provably returned False. Those delete the stage and re-raise
-        — ConcurrentWriteError is ROUTINE under the streaming sink
-        and must never accrete orphan debt (maybe_compact's retry
-        loop would otherwise stage up to three orphaned table copies
-        per invocation). An exception from the put ITSELF is an
-        AMBIGUOUS commit: the stage stays on disk (a late-landing
-        manifest may reference it; vacuum reclaims it if not) and the
-        error surfaces as CommitAmbiguousError so a caller cannot
-        mistake maybe-landed for failed and blind-retry a
-        non-idempotent operation into a double-apply."""
-        try:
-            return self._publish(spark, [], 0, op, rebase=rebase)
-        except Exception as exc:
-            if getattr(exc, "_spark_graft_pre_put", False) or isinstance(
-                exc, PublishContentionError
-            ):
-                self._abandon_files(spark, list(data_files), "data")
-                if dv_parts:
-                    self._abandon_files(spark, list(dv_parts), "deletes")
-                raise
-            raise CommitAmbiguousError(
-                f"{op} commit outcome UNKNOWN at {self.path}: the "
-                "manifest put raised mid-flight and may have landed "
-                "server-side — check current_version()/history() "
-                "before retrying; staged files left for vacuum"
-            ) from exc
 
     def _file_stats(
         self, spark: SparkSession, files: list[str]
@@ -1144,24 +1113,50 @@ class ManifestTable:
     def _publish(
         self,
         spark: SparkSession,
-        files: list[str],
-        rows: int,
         op: str,
-        extra: dict | None = None,
-        rebase=None,
+        build: Callable,
+        *,
+        expected: int | None = None,
+        batch_id: int | None = None,
+        staged=(),
+        dv_parts=(),
     ) -> int:
-        """Optimistic-concurrency commit loop. ``rebase`` (for ops whose
-        content depends on the previous snapshot, i.e. append) is
-        re-evaluated on EVERY attempt, AFTER the target name is chosen:
-        losing the putIfAbsent race means the base snapshot moved, so
-        the commit content must be rebuilt on the new base — retrying
-        with the stale file list would silently drop the winner's rows
-        (the lost-update anomaly Delta/Iceberg commit loops re-check
-        for). Ordering matters: list names → rebase → put. A commit
-        landing after the listing claims our target name and fails our
-        put; one landing before it is seen by the rebase — either way
-        no commit is ever based on a snapshot older than the one it
-        replaces."""
+        """The ONE commit path: every manifest is decided here. Each
+        attempt takes one listing of ``_manifests/``; it names the
+        target version (above every CLAIMED name — a torn one's number
+        is burned, never reused, else a slow torn writer finishing
+        late could overwrite a real commit) and the base (the newest
+        VALID manifest, read once). Then, in order:
+
+        - compare-and-swap: ``expected`` pins the base version the
+          caller computed against; a moved base raises
+          :class:`ConcurrentWriteError` (rewritten files computed
+          against a stale base would silently drop the winner's rows);
+        - ``build(base_version, base_manifest)`` returns the op's
+          ``(files, rows, extra)``; the base manifest is ``{}`` on a
+          table with no commit yet;
+        - the record is stamped with version, op, committed_at and
+          the streaming high-water mark ``max(base mark, batch_id)``,
+          so the mark survives every commit (the WAP heal alone sets
+          its own, see :meth:`_heal`);
+        - put. A lost race (the put returns False) means the base
+          moved, so the next attempt lists and builds again: list →
+          build → put, and no commit is ever based on a snapshot older
+          than the one it replaces (a commit landing after the listing
+          claims our name and fails our put; one landing before it is
+          our base).
+
+        Failures are classified by POSITION, not type: anything raised
+        before the put (listing, CAS, build, serialization) and retry
+        exhaustion (:class:`PublishContentionError`: every put provably
+        did not land) delete the stage — ``staged`` data files and
+        ``dv_parts`` — and re-raise, so routine ConcurrentWriteErrors
+        never accrete orphan debt. An exception from the put ITSELF is
+        an AMBIGUOUS commit: the stage stays on disk (a late-landing
+        manifest may reference it; vacuum reclaims it if not) and the
+        error surfaces as :class:`CommitAmbiguousError`, so a caller
+        cannot mistake maybe-landed for failed and blind-retry a
+        non-idempotent operation into a double-apply."""
         put = (
             self._put_if_absent
             if self.publish_mode == "conditional-create"
@@ -1172,147 +1167,133 @@ class ManifestTable:
         # implementation bug), not normal operation — fail loudly.
         for _ in range(1000):
             try:
-                # next version = above every CLAIMED name (even torn
-                # ones: their number is burned, never reused — else a
-                # slow torn writer finishing late could overwrite a
-                # real commit)
                 names = self._name_versions(spark)
                 version = names[-1] + 1 if names else 0
-                if rebase is not None:
-                    files, rows, extra = rebase()
-                manifest = {
+                base_v, base = self._newest(spark, names)
+                if expected is not None and base_v != expected:
+                    raise ConcurrentWriteError(
+                        f"{op} computed against v{expected} but the "
+                        f"snapshot is now v{base_v} — re-run the {op} on "
+                        "the new base"
+                    )
+                files, rows, extra = build(base_v, base)
+                record = {
                     "version": version,
                     "files": files,
                     "rows": rows,
                     "op": op,
                     "committed_at": time.time(),
-                    **(extra or {}),
+                    "last_batch_id": max(
+                        int(base.get("last_batch_id", -1)),
+                        -1 if batch_id is None else int(batch_id),
+                    ),
+                    **extra,
                 }
-                body = json.dumps(manifest)
-            except BaseException as e:
-                # POSITIONAL pre-put proof: anything raised before the
-                # put (listing, rebase, serialization) cannot have
-                # committed — tag it so cleanup is exact, whatever the
-                # exception type (a transient store error in rebase is
-                # just as provably pre-put as ConcurrentWriteError)
-                try:
-                    e._spark_graft_pre_put = True
-                except Exception:
-                    pass
+                if record["last_batch_id"] < 0:
+                    del record["last_batch_id"]  # no batch committed yet
+                body = json.dumps(record)
+            except BaseException:
+                self._abandon_files(spark, list(staged), list(dv_parts))
                 raise
-            if put(spark, body, "_manifests", f"v{version}.json"):
+            try:
+                landed = put(spark, body, "_manifests", f"v{version}.json")
+            except Exception as exc:
+                raise CommitAmbiguousError(
+                    f"{op} commit outcome UNKNOWN at {self.path}: the "
+                    "manifest put raised mid-flight and may have landed "
+                    "server-side — check current_version()/history() "
+                    "before retrying; staged files left for vacuum"
+                ) from exc
+            if landed:
                 return version
-            # publish race lost: re-resolve, rebase, try the next version
+        self._abandon_files(spark, list(staged), list(dv_parts))
         raise PublishContentionError(
             "manifest publish lost 1000 consecutive commit races — "
             "pathological contention or a broken conditional-create store"
         )
 
-    def overwrite(self, df: DataFrame) -> int:
-        """Commit df as a full-replacement snapshot."""
-        # identifier contract on names ENTERING the table only: a
-        # grandfathered dotted column must keep its overwrite
-        # re-baseline path (the type-change escape hatch) open
-        cur = self.current_version(df.sparkSession)
-        prev_cols = (
-            set(self._manifest(df.sparkSession, cur).get("columns") or [])
-            if cur is not None
-            else set()
-        )
-        _check_new_names(set(df.columns) - prev_cols, "overwrite")
-        files, spark, wrote_rows = self._write_files(df)
-        # pre-publish no-orphan window: a stats/count job failure here
-        # provably precedes every put, so the stage deletes safely
-        with self._staged_cleanup(spark, files):
-            extra: dict = {
-                "columns": sorted(df.columns),
-                "schema": _schema_json(df.schema),
-            }
+    def _rewrite(
+        self,
+        df: DataFrame,
+        op: str,
+        expected: int | None = None,
+        check: Callable | None = None,
+    ) -> int:
+        """The rewrite tail ``overwrite``, ``compact`` and ``cluster``
+        share: land ``df`` as fresh files, take their stats, publish
+        them as the whole snapshot. A rewrite passes every row through
+        one homogeneous schema, so columns and schema re-baseline (the
+        evolved/read_merged flags and every deletion vector drop with
+        the old files); ``check(base)`` vets the commit-time base."""
+        files, spark, rows = self._write_files(df)
+        with self._staged_cleanup(spark, files):  # pre-publish window
             stats = self._file_stats(spark, files)
-            if stats:
-                extra["stats"] = stats
-            rows = wrote_rows  # observed on the write job itself
+        extra: dict = {
+            "columns": sorted(df.columns),
+            "schema": _schema_json(df.schema),
+        }
+        if stats:
+            extra["stats"] = stats
 
-            def rebase() -> tuple[list[str], int, dict]:
-                # re-check the identifier contract against the
-                # COMMIT-TIME base (same race as append's rebase
-                # re-check: a concurrent overwrite may have renamed a
-                # grandfathered name away, and this commit must not
-                # silently re-introduce it)
-                prev2 = self.current_version(spark)
-                pc = (
-                    set(self._manifest(spark, prev2).get("columns") or [])
-                    if prev2 is not None
-                    else set()
-                )
-                _check_new_names(set(df.columns) - pc, "overwrite")
-                return files, rows, extra
+        def build(base_v: int | None, base: dict):
+            if check is not None:
+                check(base)
+            return files, rows, extra  # rows observed on the write job
 
-        return self._publish_cleanly(spark, "overwrite", rebase, files)
+        return self._publish(spark, op, build, expected=expected, staged=files)
 
-    def _append_rebase(
+    def overwrite(self, df: DataFrame) -> int:
+        """Commit df as a full-replacement snapshot. Like every commit
+        it carries the streaming high-water mark, so a replayed batch
+        id stays skipped after an overwrite."""
+        spark = df.sparkSession
+
+        def check(base: dict) -> None:
+            # identifier contract on names ENTERING the table only: a
+            # grandfathered dotted column must keep its overwrite
+            # re-baseline path (the type-change escape hatch) open
+            _check_new_names(
+                set(df.columns) - set(base.get("columns") or []),
+                "overwrite",
+            )
+
+        check(self._newest(spark, self._name_versions(spark))[1])
+        # re-checked against the COMMIT-TIME base too: a concurrent
+        # overwrite may have renamed a grandfathered name away, and
+        # this commit must not silently re-introduce it
+        return self._rewrite(df, "overwrite", check=check)
+
+    def _append_build(
         self,
         spark: SparkSession,
         new_files: list[str],
         new_cols: list[str],
         new_stats: dict,
-        batch_id: int | None,
-        new_schema=None,
-        new_rows_known: int | None = None,
-    ):
-        """The append-family rebase closure: stack pre-written files
-        on whatever snapshot is current AT COMMIT TIME (re-resolved on
-        every attempt — a concurrent commit winning the race moves the
-        base, and this commit's file list must sit on top of THAT, not
-        the one read before the race). Shared by ``append`` and
-        ``write_audit_publish``.
+        new_rows: int,
+        new_schema,
+    ) -> Callable:
+        """The append-family build: stack pre-written files on the
+        commit-time base :meth:`_publish` hands it (a concurrent commit
+        winning the race moves the base, and this commit's file list
+        must sit on top of THAT, not the one read before the race).
+        Shared by ``append`` and ``write_audit_publish``.
 
         The per-attempt work is METADATA-ONLY: the new files' row
-        count is a one-time scan paid here, and the base snapshot's
-        count comes from its manifest's recorded ``rows`` — so losing
-        a commit race costs one listing + one manifest read, never a
-        Spark job. (Recounting everything per attempt would make the
-        commit loop O(table) under contention — exactly when it
-        retries most.) The new files' count itself comes from
-        ``new_rows_known`` (observed on the write job itself — r17;
-        threaded through WAP too in r18, so no commit path recounts
-        freshly-written files) or the just-computed per-file stats;
-        the ``_rows_of`` fallback remains only as the legacy-manifest
-        safety net."""
-        new_rows = (
-            new_rows_known
-            if new_rows_known is not None
-            else self._rows_of(spark, new_stats, new_files)
-        )
+        count was observed on their write job, and the base's comes
+        from its manifest — so losing a commit race costs one listing
+        and one manifest read, never a Spark job (recounting per
+        attempt would make the commit loop O(table) under contention,
+        exactly when it retries most)."""
 
-        def rebase() -> tuple[list[str], int, dict]:
-            prev = self.current_version(spark)
-            old_manifest = self._manifest(spark, prev) if prev is not None else {}
-            old_files = old_manifest.get("files", [])
-            allf = old_files + new_files
-            prev_rows = old_manifest.get("rows")
-            if prev_rows is None and old_files:
-                prev_rows = self._rows_of(
-                    spark, old_manifest.get("stats", {}), old_files
-                )
-            rows = int(prev_rows or 0) + new_rows
+        def build(base_v: int | None, base: dict):
             extra: dict = {}
-            # the high-water mark survives EVERY append, batch-tagged
-            # or not — a plain append dropping it would let a replayed
-            # micro-batch re-land afterwards (same rule as merge/compact)
-            hwm = max(
-                int(old_manifest.get("last_batch_id", -1)),
-                -1 if batch_id is None else int(batch_id),
-            )
-            if hwm >= 0:
-                extra["last_batch_id"] = hwm
-            if old_manifest.get("dvs"):
+            if base.get("dvs"):
                 # appended files are new — existing deletion vectors
                 # carry forward untouched
-                extra["dvs"] = old_manifest["dvs"]
+                extra["dvs"] = base["dvs"]
             # schema-evolution check at commit time: compare the new
             # data's column set against the snapshot schema recorded
-            old_cols = old_manifest.get("columns", new_cols)
+            old_cols = base.get("columns", new_cols)
             # re-check the identifier contract against the COMMIT-TIME
             # base (race-free): the entry check ran against the base
             # read before the publish race, and a concurrent overwrite
@@ -1321,51 +1302,47 @@ class ManifestTable:
             # default of new_cols would make the difference empty and
             # skip the check on a columns-less base
             _check_new_names(
-                set(new_cols) - set(old_manifest.get("columns") or []),
-                "append",
+                set(new_cols) - set(base.get("columns") or []), "append"
             )
             extra["columns"] = sorted(set(new_cols) | set(old_cols))
-            if old_manifest.get("evolved") or new_cols != old_cols:
+            if base.get("evolved") or new_cols != old_cols:
                 extra["evolved"] = True
-            if new_schema is not None:
-                # appends are the ONLY evolution entry point, so the
-                # logical schema resolves here once, from metadata;
-                # None (legacy chain) records nothing and readers fall
-                # back to mergeSchema
-                sj = _merged_schema_json(old_manifest, new_schema)
-                if sj is _SCHEMA_CONFLICT:
-                    # append()'s entry conformance makes this all but
-                    # unreachable (drift raises before files land);
-                    # only a CONCURRENT commit changing a column's
-                    # type between that check and this rebase lands
-                    # here. Last resort: carry neither schema record
-                    # nor a silent adoption — the evolved flag routes
-                    # reads through mergeSchema, which fails LOUDLY on
-                    # the incompatible types (never nondeterministic)
-                    extra["evolved"] = True
-                elif sj is not None:
-                    extra["schema"] = sj
-                elif old_manifest:
-                    # legacy chain without a schema record: file
-                    # homogeneity is unprovable from metadata, and
-                    # entry conformance had nothing to check against —
-                    # a same-named type drift would otherwise commit
-                    # with neither schema nor evolved and plain reads
-                    # would adopt one footer nondeterministically.
-                    # read_merged (NOT evolved — that would silently
-                    # relax merge's missing-column strictness) keeps
-                    # every read on mergeSchema until a
-                    # compact/overwrite re-baselines the record.
-                    extra["read_merged"] = True
-            if new_stats or old_manifest.get("stats"):
+            # appends are the ONLY evolution entry point, so the
+            # logical schema resolves here once, from metadata; None
+            # (legacy chain) records nothing and readers fall back to
+            # mergeSchema
+            sj = _merged_schema_json(base, new_schema)
+            if sj is _SCHEMA_CONFLICT:
+                # append()'s entry conformance makes this all but
+                # unreachable (drift raises before files land); only a
+                # CONCURRENT commit changing a column's type between
+                # that check and this build lands here. Last resort:
+                # carry neither schema record nor a silent adoption —
+                # the evolved flag routes reads through mergeSchema,
+                # which fails LOUDLY on the incompatible types (never
+                # nondeterministic)
+                extra["evolved"] = True
+            elif sj is not None:
+                extra["schema"] = sj
+            elif base:
+                # legacy chain without a schema record: file
+                # homogeneity is unprovable from metadata, and entry
+                # conformance had nothing to check against — a
+                # same-named type drift would otherwise commit with
+                # neither schema nor evolved and plain reads would
+                # adopt one footer nondeterministically. read_merged
+                # (NOT evolved — that would silently relax merge's
+                # missing-column strictness) keeps every read on
+                # mergeSchema until a compact/overwrite re-baselines
+                # the record.
+                extra["read_merged"] = True
+            if new_stats or base.get("stats"):
                 # carried files keep their recorded stats untouched
-                extra["stats"] = {
-                    **old_manifest.get("stats", {}),
-                    **new_stats,
-                }
-            return allf, rows, extra
+                extra["stats"] = {**base.get("stats", {}), **new_stats}
+            rows = self._effective_rows(spark, base) + new_rows
+            return base.get("files", []) + new_files, rows, extra
 
-        return rebase
+        return build
 
     def append(self, df: DataFrame, batch_id: int | None = None) -> int:
         """Commit df's rows on top of the current snapshot: new files
@@ -1392,8 +1369,7 @@ class ManifestTable:
         df = self._conform_to_current(df, "append")
         new_files, spark, wrote_rows = self._write_files(df)
         if not wrote_rows:
-            base = self.current_version(spark)
-            m = self._manifest(spark, base) if base is not None else {}
+            base, m = self._newest(spark, self._name_versions(spark))
             if base is not None and set(df.columns) <= set(
                 m.get("columns") or []
             ):
@@ -1401,16 +1377,23 @@ class ManifestTable:
                 # so land no file (the row-change core's no-op rule)
                 self._abandon_files(spark, new_files)
                 return self._record_batch(spark, base, m, batch_id)
-        # pre-publish no-orphan window (stats job + rebase build);
-        # publish failures get _publish_cleanly's classification
-        with self._staged_cleanup(spark, new_files):
-            new_cols = sorted(df.columns)
+        with self._staged_cleanup(spark, new_files):  # pre-publish window
             new_stats = self._file_stats(spark, new_files)
-            rebase = self._append_rebase(
-                spark, new_files, new_cols, new_stats, batch_id,
-                new_schema=df.schema, new_rows_known=wrote_rows,
-            )
-        return self._publish_cleanly(spark, "append", rebase, new_files)
+        build = self._append_build(
+            spark, new_files, sorted(df.columns), new_stats, wrote_rows,
+            df.schema,
+        )
+        return self._publish(
+            spark, "append", build, batch_id=batch_id, staged=new_files
+        )
+
+    @staticmethod
+    def _raises_mark(m: dict, batch_id: int | None) -> bool:
+        """Whether committing ``batch_id`` on snapshot ``m`` raises its
+        streaming high-water mark."""
+        return batch_id is not None and int(batch_id) > int(
+            m.get("last_batch_id", -1)
+        )
 
     def _record_batch(
         self, spark: SparkSession, base: int, m: dict, batch_id: int | None
@@ -1420,22 +1403,96 @@ class ManifestTable:
         unchanged. A no-op returning ``base`` (snapshot ``m``) unless
         ``batch_id`` raises the mark, so an empty micro-batch commits
         once and its replay is skipped."""
-        if batch_id is None or int(batch_id) <= int(
-            m.get("last_batch_id", -1)
-        ):
+        if not self._raises_mark(m, batch_id):
             return base
+        return self._publish(
+            spark, "append", self._republish(spark), batch_id=batch_id
+        )
 
-        def rebase() -> tuple[list[str], int, dict]:
-            # re-resolved per attempt: a commit winning the race moves
-            # the content this one carries
-            cur = self._manifest(spark, self.current_version(spark))
-            extra = {k: cur[k] for k in _CONTENT_KEYS if k in cur}
-            extra["last_batch_id"] = max(
-                int(cur.get("last_batch_id", -1)), int(batch_id)
+    def _republish(
+        self,
+        spark: SparkSession,
+        src_v: int | None = None,
+        src: dict | None = None,
+        **tags,
+    ) -> Callable:
+        """The build that re-publishes one snapshot's content — files,
+        rows and the ``_CONTENT_KEYS`` — plus ``tags``: snapshot
+        ``src`` (version ``src_v``; restore and the heals), or the
+        commit-time base itself when None (a batch-id-only append). A
+        ``src``'s files are re-checked on every attempt: restore and
+        heal resurrect files whose only other referents may be retired
+        manifests — exactly what a concurrent vacuum deletes regardless
+        of age — and a check that raises pre-put provably commits
+        nothing."""
+
+        def build(base_v: int | None, base: dict):
+            m = base if src is None else src
+            gone = [] if src is None else self._missing(spark, src)
+            if gone:
+                raise FileNotFoundError(
+                    f"v{src_v} lost {len(gone)} file(s) to a concurrent "
+                    f"vacuum (e.g. {gone[0]}) before the publish"
+                )
+            content = {k: m[k] for k in _CONTENT_KEYS if k in m}
+            return m["files"], self._effective_rows(spark, m), {
+                **content,
+                **tags,
+            }
+
+        return build
+
+    def _missing(self, spark: SparkSession, m: dict) -> list[str]:
+        """The data files and deletion-vector parts (``deletes/``-
+        prefixed) that snapshot ``m`` references and that no longer
+        exist."""
+        jvm, fs = self._fs(spark)
+        gone = [
+            f for f in m.get("files", [])
+            if not fs.exists(self._jp(jvm, "data", f))
+        ]
+        gone += [
+            f"deletes/{p}"
+            for p in sorted(
+                {p for e in m.get("dvs", {}).values() for p in e["parts"]}
             )
-            return cur["files"], self._effective_rows(spark, cur), extra
+            if not fs.exists(self._jp(jvm, "deletes", p))
+        ]
+        return gone
 
-        return self._publish_cleanly(spark, "append", rebase, [])
+    def _heal(self, spark: SparkSession, torn: int, op: str) -> int | None:
+        """Re-publish the newest snapshot whose files all still exist,
+        skipping version ``torn`` (and any snapshot stacked on its
+        vanished files — those fail the existence check naturally):
+        the one repair after a vacuum tore a committed ``restore`` or
+        ``write_audit_publish``. The two differ only in the record and
+        the mark. A restore heal (``op="restore"``) is a restore of the
+        candidate and carries the current mark, as every commit does.
+        A WAP heal (``op="heal"``) rolls the mark back to the
+        CANDIDATE's own: rolling data back without rolling the mark
+        back would make a batch_id-keyed replay of the lost batch a
+        silent no-op (r15). Returns the healed version, or None when
+        nothing is materializable."""
+        for v in reversed(self._name_versions(spark)):
+            if v == torn:
+                continue
+            m = self._try_manifest(spark, v)
+            if m is None or self._missing(spark, m):
+                continue
+            if op == "restore":
+                tags = {"restored_from": v, "healed_from_torn_restore": torn}
+            else:
+                tags = {
+                    "healed_from_torn_wap": torn,
+                    "last_batch_id": int(m.get("last_batch_id", -1)),
+                }
+            try:
+                return self._publish(
+                    spark, op, self._republish(spark, v, m, **tags)
+                )
+            except FileNotFoundError:
+                continue  # a further vacuum got this candidate too
+        return None
 
     def write_audit_publish(
         self, df: DataFrame, rules, batch_id: int | None = None
@@ -1477,8 +1534,8 @@ class ManifestTable:
 
         def _abandon() -> None:
             # pre-publish rejections only: no put ran, a blind delete
-            # is safe (publish failures go through _publish_cleanly's
-            # positional classification)
+            # is safe (publish failures get _publish's positional
+            # classification)
             self._abandon_files(spark, new_files)
             _drop_marker()
 
@@ -1526,31 +1583,18 @@ class ManifestTable:
             fresh_marker = self._write_stage_marker(spark, new_files)
             self._drop_stage_marker(spark, marker)
             marker = fresh_marker
-        jvm, fs = self._fs(spark)
-
-        def _gone_staged() -> list[str]:
-            return [
-                f
-                for f in new_files
-                if not fs.exists(self._jp(jvm, "data", f))
-            ]
-
+        staged_only = {"files": new_files}
         try:
             with self._staged_cleanup(spark, new_files):
                 new_stats = self._file_stats(spark, new_files)
-                inner_rebase = self._append_rebase(
-                    spark, new_files, new_cols, new_stats, batch_id,
-                    new_schema=staged.schema,
-                    # observed on the write job (r18): without it a
-                    # stats-less WAP table paid a THIRD read of the
-                    # staged files (after the write and the audit)
-                    # purely to count rows for the commit record
-                    new_rows_known=wrote_rows,
-                )
+            append = self._append_build(
+                spark, new_files, new_cols, new_stats, wrote_rows,
+                staged.schema,
+            )
 
-            def rebase() -> tuple[list[str], int, dict]:
-                out = inner_rebase()
-                gone = _gone_staged()
+            def build(base_v: int | None, base: dict):
+                out = append(base_v, base)
+                gone = self._missing(spark, staged_only)
                 if gone:
                     raise FileNotFoundError(
                         f"write_audit_publish lost {len(gone)} staged "
@@ -1561,10 +1605,12 @@ class ManifestTable:
                     )
                 return out
 
-            # publish failures classified by _publish_cleanly: proven
-            # pre-put → stage deleted; ambiguous put → stage left for
-            # vacuum (a late-landing manifest may reference it)
-            version = self._publish_cleanly(spark, "wap", rebase, new_files)
+            # proven pre-put failures delete the stage; an ambiguous
+            # put leaves it for vacuum (a late-landing manifest may
+            # reference it)
+            version = self._publish(
+                spark, "wap", build, batch_id=batch_id, staged=new_files
+            )
         except CommitAmbiguousError:
             raise  # marker STAYS: the manifest may land late; the
             # vacuum marker TTL reclaims it if it never does
@@ -1576,9 +1622,9 @@ class ManifestTable:
         # the committed manifest is then a torn tombstone. Heal to the
         # newest materializable snapshot (with ITS high-water mark, so
         # the lost batch replays) and fail loudly.
-        gone = _gone_staged()
+        gone = self._missing(spark, staged_only)
         if gone:
-            healed_to = self._heal_to_materializable(spark, version)
+            healed_to = self._heal(spark, version, "heal")
             _drop_marker()
             raise WapRacedVacuumError(
                 f"write_audit_publish committed v{version}, but a "
@@ -1596,62 +1642,6 @@ class ManifestTable:
             )
         _drop_marker()  # files are manifest-referenced from here on
         return version, report
-
-    def _heal_to_materializable(
-        self, spark: SparkSession, torn_version: int
-    ) -> int | None:
-        """Re-publish the newest snapshot whose files all still exist,
-        skipping ``torn_version`` (and any snapshot stacked on its
-        vanished files — those fail the existence check naturally).
-        The healed commit carries the CANDIDATE's own streaming
-        high-water mark, never the torn commit's: rolling data back
-        without rolling the HWM back would make a batch_id-keyed
-        replay of the lost batch a silent no-op (r15). Returns the
-        healed version, or None when nothing is materializable."""
-        jvm, fs = self._fs(spark)
-
-        def _missing_of(m: dict) -> list[str]:
-            gone = [
-                f
-                for f in m.get("files", [])
-                if not fs.exists(self._jp(jvm, "data", f))
-            ]
-            gone += [
-                f"deletes/{p}"
-                for p in sorted(
-                    {p for e in m.get("dvs", {}).values() for p in e["parts"]}
-                )
-                if not fs.exists(self._jp(jvm, "deletes", p))
-            ]
-            return gone
-
-        for v in reversed(self._name_versions(spark)):
-            if v == torn_version:
-                continue
-            m = self._try_manifest(spark, v)
-            if m is None or _missing_of(m):
-                continue
-            extra_base = {k: m[k] for k in _CONTENT_KEYS if k in m}
-
-            def rebase() -> tuple[list[str], int, dict]:
-                extra = dict(extra_base)
-                hwm = int(m.get("last_batch_id", -1))
-                if hwm >= 0:
-                    extra["last_batch_id"] = hwm
-                extra["healed_from_torn_wap"] = torn_version
-                gone = _missing_of(m)
-                if gone:
-                    raise FileNotFoundError(
-                        f"heal candidate v{v} lost {len(gone)} file(s) "
-                        f"to a further vacuum (e.g. {gone[0]})"
-                    )
-                return m.get("files", []), int(m.get("rows", 0)), extra
-
-            try:
-                return self._publish(spark, [], 0, "heal", rebase=rebase)
-            except FileNotFoundError:
-                continue  # a further vacuum got this candidate too
-        return None
 
     def last_batch_id(self, spark: SparkSession) -> int:
         """High-water mark of committed streaming batch ids (-1 if
@@ -1678,36 +1668,11 @@ class ManifestTable:
         Raises :class:`ConcurrentWriteError` instead;
         :meth:`maybe_compact` retries on the new base."""
         v = self.current_version(spark)
-        df = self.read(spark, version=v).coalesce(target_files)
-        files, _, wrote_rows = self._write_files(df)
-        # compaction rewrites every row through one homogeneous schema,
-        # so the evolved flag resets and columns/schema re-baseline
-        with self._staged_cleanup(spark, files):  # pre-publish window
-            extra: dict = {
-                "columns": sorted(df.columns),
-                "schema": _schema_json(df.schema),
-            }
-            # ...but the streaming high-water mark is NOT
-            # content-derived: it must survive the rewrite or replay
-            # protection is lost
-            hwm = int(self._manifest(spark, v).get("last_batch_id", -1))
-            if hwm >= 0:
-                extra["last_batch_id"] = hwm
-            stats = self._file_stats(spark, files)
-            if stats:
-                extra["stats"] = stats
-            rows = wrote_rows  # observed on the write job itself
-
-            def rebase() -> tuple[list[str], int, dict]:
-                cur = self.current_version(spark)
-                if cur != v:
-                    raise ConcurrentWriteError(
-                        f"compact computed against v{v} but the snapshot "
-                        f"is now v{cur} — re-run compaction on the new base"
-                    )
-                return files, rows, extra
-
-        return self._publish_cleanly(spark, "compact", rebase, files)
+        return self._rewrite(
+            self.read(spark, version=v).coalesce(target_files),
+            "compact",
+            expected=v,
+        )
 
     def cluster(
         self,
@@ -1810,30 +1775,7 @@ class ManifestTable:
             df = snap.repartitionByRange(n_out, *cols).sortWithinPartitions(
                 *cols
             )
-        files, _, wrote_rows = self._write_files(df)
-        with self._staged_cleanup(spark, files):  # pre-publish window
-            extra: dict = {
-                "columns": sorted(df.columns),
-                "schema": _schema_json(df.schema),  # rewrite re-baselines
-            }
-            hwm = int(m.get("last_batch_id", -1))
-            if hwm >= 0:
-                extra["last_batch_id"] = hwm
-            stats = self._file_stats(spark, files)
-            if stats:
-                extra["stats"] = stats
-            rows = wrote_rows  # observed on the write job itself
-
-            def rebase() -> tuple[list[str], int, dict]:
-                cur = self.current_version(spark)
-                if cur != v:
-                    raise ConcurrentWriteError(
-                        f"cluster computed against v{v} but the snapshot "
-                        f"is now v{cur} — re-run clustering on the new base"
-                    )
-                return files, rows, extra
-
-        return self._publish_cleanly(spark, "cluster", rebase, files)
+        return self._rewrite(df, "cluster", expected=v)
 
     def restore(self, spark: SparkSession, version: int) -> int:
         """RESTORE: commit a NEW version whose content is snapshot
@@ -1856,9 +1798,9 @@ class ManifestTable:
           and the restore refused LOUDLY rather than committing a
           snapshot that cannot be read.
 
-        Concurrency: the HWM is re-resolved per commit attempt via the
-        rebase hook, so losing a publish race can never resurrect a
-        stale high-water mark. The existence check ALSO re-runs per
+        Concurrency: the HWM is stamped from each attempt's base by
+        :meth:`_publish`, so losing a publish race can never resurrect
+        a stale high-water mark. The existence check ALSO re-runs per
         attempt, and the committed snapshot is verified AFTER the
         publish: a restore uniquely references files whose only other
         referents are retired manifests — exactly what a concurrent
@@ -1868,26 +1810,10 @@ class ManifestTable:
         table, found r14 by the interleaving stress test). When the
         post-publish verify finds the race hit, the table is healed by
         re-publishing the newest still-materializable snapshot and
-        :class:`RestoreRacedVacuumError` is raised."""
+        :class:`RestoreRacedVacuumError` is raised. A put that raises
+        surfaces as :class:`CommitAmbiguousError`, as for every commit."""
         target = self._manifest(spark, version)  # raises if missing
-        jvm, fs = self._fs(spark)
-
-        def _missing_of(m: dict) -> list[str]:
-            gone = [
-                f
-                for f in m.get("files", [])
-                if not fs.exists(self._jp(jvm, "data", f))
-            ]
-            gone += [
-                f"deletes/{p}"
-                for p in sorted(
-                    {p for e in m.get("dvs", {}).values() for p in e["parts"]}
-                )
-                if not fs.exists(self._jp(jvm, "deletes", p))
-            ]
-            return gone
-
-        missing = _missing_of(target)
+        missing = self._missing(spark, target)
         if missing:
             raise FileNotFoundError(
                 f"cannot restore v{version}: {len(missing)} of its data "
@@ -1895,56 +1821,18 @@ class ManifestTable:
                 f"{missing[0]}) — the snapshot is no longer "
                 "materializable"
             )
-
-        def _content_publish(src: dict, src_version: int, extra2: dict) -> int:
-            extra_base = {k: src[k] for k in _CONTENT_KEYS if k in src}
-
-            def rebase() -> tuple[list[str], int, dict]:
-                extra = dict(extra_base)
-                cur = self.current_version(spark)
-                hwm = (
-                    int(self._manifest(spark, cur).get("last_batch_id", -1))
-                    if cur is not None
-                    else -1
-                )
-                if hwm >= 0:
-                    extra["last_batch_id"] = hwm
-                extra["restored_from"] = src_version
-                extra.update(extra2)
-                # per-attempt recheck: raised pre-put, so it provably
-                # commits nothing (the positional pre-put proof)
-                gone = _missing_of(src)
-                if gone:
-                    raise FileNotFoundError(
-                        f"restore target v{src_version} lost "
-                        f"{len(gone)} file(s) to a concurrent vacuum "
-                        f"(e.g. {gone[0]}) before the publish"
-                    )
-                return src.get("files", []), int(src.get("rows", 0)), extra
-
-            return self._publish(spark, [], 0, "restore", rebase=rebase)
-
-        new_v = _content_publish(target, version, {})
+        new_v = self._publish(
+            spark,
+            "restore",
+            self._republish(spark, version, target, restored_from=version),
+        )
         # Post-publish verify: a vacuum that scanned before our commit
         # may delete the target's files after it. Residual pure-CAS
         # window — detect it, heal, and fail loudly.
-        missing = _missing_of(target)
+        missing = self._missing(spark, target)
         if not missing:
             return new_v
-        healed_to = None
-        for v in reversed(self._name_versions(spark)):
-            if v == new_v:
-                continue
-            m = self._try_manifest(spark, v)
-            if m is None or _missing_of(m):
-                continue
-            try:
-                healed_to = _content_publish(
-                    m, v, {"healed_from_torn_restore": new_v}
-                )
-            except FileNotFoundError:
-                continue  # a further vacuum got this candidate too
-            break
+        healed_to = self._heal(spark, new_v, "restore")
         raise RestoreRacedVacuumError(
             f"restore of v{version} committed v{new_v}, but a concurrent "
             f"vacuum deleted {len(missing)} of its file(s) (e.g. "
@@ -3028,9 +2916,11 @@ class ManifestTable:
           whose find matched nothing is a no-op. Rows are accounted
           from metadata: effective rows − live rows of rewritten files
           − new dead positions + rows written. The record carries
-          columns, schema, the evolved flag and the high-water mark;
-          it flags ``read_merged`` when files were added to a chain
-          without a schema record or the flag was already set."""
+          columns, schema and the evolved flag (:meth:`_publish`
+          stamps the high-water mark and checks the base is still the
+          one found against); it flags ``read_merged`` when files were
+          added to a chain without a schema record or the flag was
+          already set."""
         from pyspark.sql import functions as F
 
         from ..operators.checkpoints import materialize, scope
@@ -3044,11 +2934,6 @@ class ManifestTable:
         base, m = self._snapshot(spark, expected_version)
         ch = prepare(base, m)
         stats = m.get("stats", {})
-        # the streaming high-water mark survives every commit; a batch
-        # that raises it commits even when it changes no row, so its
-        # replay is skipped (one commit per batch)
-        last = int(m.get("last_batch_id", -1))
-        hwm = last if batch_id is None else max(last, int(batch_id))
         raw = found = None
         if ch.candidates and (mor or ch.tally):
             raw = self._reader_for(spark, m).parquet(
@@ -3107,7 +2992,12 @@ class ManifestTable:
                     if not written:
                         self._abandon_files(spark, staged)
                         new_files.clear()
-            if not (removed or dead or new_files) and hwm == last:
+            # a batch that raises the streaming high-water mark commits
+            # even when it changes no row, so its replay is skipped
+            # (one commit per batch)
+            if not (
+                removed or dead or new_files or self._raises_mark(m, batch_id)
+            ):
                 return base  # nothing changed: no commit
             new_stats = self._file_stats(spark, new_files)
             removed_live = self._rows_of(
@@ -3136,8 +3026,6 @@ class ManifestTable:
             # same-named type drift is undetectable, so homogeneity
             # stays unprovable and reads keep merging footers
             extra["read_merged"] = True
-        if hwm >= 0:
-            extra["last_batch_id"] = hwm
         carried = {f: s for f, s in stats.items() if f not in gone}
         if carried or new_stats:
             extra["stats"] = {**carried, **new_stats}
@@ -3151,16 +3039,15 @@ class ManifestTable:
         if dvs:
             extra["dvs"] = dvs
 
-        def rebase() -> tuple[list[str], int, dict]:
-            cur = self.current_version(spark)
-            if cur != base:
-                raise ConcurrentWriteError(
-                    f"{op} computed against v{base} but the snapshot is "
-                    f"now v{cur} — re-run the {op} on the new base"
-                )
-            return kept + new_files, rows, extra
-
-        return self._publish_cleanly(spark, op, rebase, new_files, parts)
+        return self._publish(
+            spark,
+            op,
+            lambda base_v, base_m: (kept + new_files, rows, extra),
+            expected=base,
+            batch_id=batch_id,
+            staged=new_files,
+            dv_parts=parts,
+        )
 
     # -- maintenance -----------------------------------------------------
 

@@ -1,14 +1,17 @@
-"""Fresh-session reuse audits for every persisted artifact (r9 verdict
-item 7).
+"""Fresh-session reuse audits for every persisted artifact.
 
-The bug class fired twice already: a reuse path that silently never
-fires (ANN index `_INDEX_READY` sentinel in r9, centroid persistence in
-r8) makes every new session silently rebuild an artifact the previous
-session already paid for — correctness stays green, the bench and the
-driver's per-round session eat the rebuild. These tests simulate the
-second session the cheapest honest way: clear the in-process caches,
-then make every build/write primitive RAISE — the reuse path must
-succeed purely from what is on disk.
+The durable demo fixtures (the ``ensure_*_demo`` builders, the
+bucketed tables and the ANN index) are ``catalog.artifact``s: each is
+built once in a private stage directory and published with one
+directory rename, so a directory that exists is complete. A reuse
+path that silently never fires makes every new session rebuild what
+the previous one already paid for — correctness stays green, the
+bench and the driver's per-round session eat the rebuild. These tests
+simulate the second session the cheapest honest way: clear the one
+in-process memo (``catalog._ARTIFACTS``), then make every build/write
+primitive RAISE — the reuse path must succeed purely from what is on
+disk. A build that raises midway must leave nothing behind that a
+later call could adopt.
 """
 
 from __future__ import annotations
@@ -36,25 +39,25 @@ def test_manifest_demo_fixtures_fresh_session_reuse(spark, monkeypatch):
     poisoned, each ensure_* must still return its path. A reuse check
     that can never be true (the ANN `_SUCCESS` bug class) fails here
     immediately."""
+    from yc_yq_airflow_etl_spark import catalog
     from yc_yq_airflow_etl_spark.plans import analytics as an
     from yc_yq_airflow_etl_spark.sources.manifest import ManifestTable
 
     ensures = [
-        ("_MANIFEST_DEMO_CACHE", an.ensure_manifest_demo),
-        ("_MANIFEST_STATS_DEMO_CACHE", an.ensure_manifest_stats_demo),
-        ("_MANIFEST_BUCKET_DEMO_CACHE", an.ensure_manifest_bucket_demo),
-        ("_MANIFEST_SPECEVO_DEMO_CACHE", an.ensure_manifest_specevo_demo),
-        ("_MERGE_BASE_CACHE", an.ensure_merge_base_demo),
-        ("_CDF_DEMO_CACHE", an.ensure_cdf_demo),
-        ("_SCHEMA_EVO_DEMO_CACHE", an.ensure_schema_evolution_demo),
+        an.ensure_manifest_demo,
+        an.ensure_manifest_stats_demo,
+        an.ensure_manifest_bucket_demo,
+        an.ensure_manifest_specevo_demo,
+        an.ensure_merge_base_demo,
+        an.ensure_cdf_demo,
+        an.ensure_schema_evolution_demo,
     ]
     first = {}
-    for _, fn in ensures:
+    for fn in ensures:
         first[fn.__name__] = fn(spark, SF_DIR)  # build (or find) once
 
     # "fresh session": no in-process memo survives...
-    for cache_name, _ in ensures:
-        monkeypatch.setattr(an, cache_name, {})
+    monkeypatch.setattr(catalog, "_ARTIFACTS", {})
     # ...and no build can run — reuse must come entirely from disk
     monkeypatch.setattr(
         ManifestTable, "_write_files",
@@ -66,8 +69,64 @@ def test_manifest_demo_fixtures_fresh_session_reuse(spark, monkeypatch):
         _fail("demo fixture re-committed despite a complete on-disk "
               "build — the reuse check never fires"),
     )
-    for _, fn in ensures:
+    for fn in ensures:
         assert fn(spark, SF_DIR) == first[fn.__name__]
+
+
+
+def test_manifest_demo_crash_mid_build_is_never_adopted(
+    spark, monkeypatch, tmp_path
+):
+    """A build that dies between two commits publishes nothing: the
+    retry builds the table from scratch. A fixture built in place
+    instead kept v0-v1 of the crashed build, appended a whole second
+    build on top (v0-v4), and the time-travel query read its v2 as
+    the v0 snapshot. Here the retry's table has exactly 3 versions,
+    the query equals its DuckDB oracle, no stage is left, and a fresh
+    session adopts the table without a commit."""
+    import glob
+    import tempfile
+
+    duckdb = pytest.importorskip("duckdb")
+
+    from yc_yq_airflow_etl_spark import catalog
+    from yc_yq_airflow_etl_spark.plans import analytics as an
+    from yc_yq_airflow_etl_spark.sources.manifest import ManifestTable
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(catalog, "_ARTIFACTS", {})
+    append, calls = ManifestTable.append, []
+
+    def crash_on_second_append(self, *a, **k):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("crash mid-build")
+        return append(self, *a, **k)
+
+    monkeypatch.setattr(ManifestTable, "append", crash_on_second_append)
+    with pytest.raises(RuntimeError, match="crash mid-build"):
+        an.ensure_manifest_demo(spark, SF_DIR)
+    path = an.ensure_manifest_demo(spark, SF_DIR)
+
+    history = ManifestTable(path).history(spark)
+    assert sorted(h["version"] for h in history) == [0, 1, 2]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW lineitem AS SELECT * FROM "
+        f"read_parquet('{SF_DIR}/lineitem.parquet')"
+    )
+    want = sorted(con.execute(an.MANIFEST_TIME_TRAVEL_ORACLE).fetchall())
+    con.close()
+    got = an.manifest_time_travel_counts(spark, SF_DIR).collect()
+    assert sorted(tuple(r) for r in got) == want
+    assert glob.glob(str(tmp_path / "spark_graft_artifacts" / "*.stage-*")) == []
+
+    monkeypatch.setattr(catalog, "_ARTIFACTS", {})
+    monkeypatch.setattr(
+        ManifestTable, "_publish",
+        _fail("a fresh session re-committed the published demo table"),
+    )
+    assert an.ensure_manifest_demo(spark, SF_DIR) == path
 
 
 def test_file_demo_fixtures_fresh_session_reuse(spark, monkeypatch):
@@ -77,6 +136,7 @@ def test_file_demo_fixtures_fresh_session_reuse(spark, monkeypatch):
     ensure_* calls must resolve from disk."""
     from pyspark.sql.readwriter import DataFrameWriter
 
+    from yc_yq_airflow_etl_spark import catalog
     from yc_yq_airflow_etl_spark.plans import analytics as an
 
     first = {
@@ -84,10 +144,7 @@ def test_file_demo_fixtures_fresh_session_reuse(spark, monkeypatch):
         "bucketed": an.ensure_bucketed_demo(spark, SF_DIR),
         "formats": an.ensure_formats_demo(spark, SF_DIR),
     }
-    for cache_name in (
-        "_ZORDER_DEMO_CACHE", "_BUCKETED_DEMO_CACHE", "_FORMATS_DEMO_CACHE"
-    ):
-        monkeypatch.setattr(an, cache_name, {})
+    monkeypatch.setattr(catalog, "_ARTIFACTS", {})
     for meth in ("parquet", "orc", "json", "csv", "saveAsTable", "save"):
         monkeypatch.setattr(
             DataFrameWriter, meth,

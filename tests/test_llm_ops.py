@@ -719,7 +719,9 @@ def test_ann_index_fresh_session_reuses_persisted_centroids(
     idx1, cents1 = lq._ensure_ann_index(spark, sf_dir)
     assert idx1.count() > 0 and cents1
 
-    monkeypatch.setattr(lq, "_ANN_CENTROID_CACHE", {})
+    from yc_yq_airflow_etl_spark import catalog
+
+    monkeypatch.setattr(catalog, "_ARTIFACTS", {})
 
     def _no_train(*a, **kw):
         raise AssertionError(

@@ -828,92 +828,91 @@ def test_sketches_degenerate_inputs(spark):
 
 
 def test_bucketed_demo_adopts_complete_dir_instead_of_clobbering(
-    spark, testdata
+    spark, testdata, monkeypatch, tmp_path
 ):
-    """r16 concurrency find (observed live: a full-value-compare
-    process red-rowed bucketed_join_revenue while a parallel suite
-    process rebuilt the shared fixture): ensure_bucketed_demo used to
-    rmtree any warehouse dir its own in-memory catalog didn't know —
-    deleting a GOOD directory while another engine process was
-    mid-read. A dir carrying the writer's _SUCCESS marker is now
-    ADOPTED via CREATE TABLE ... CLUSTERED BY ... LOCATION: no file
-    touched, bucket spec recovered from the saveAsTable file naming,
-    zero-exchange join property intact. An incomplete dir (crashed
-    build — no _SUCCESS) is still cleared and rebuilt."""
+    """Engine processes share the bucketed fixture's directory (a
+    full-value-compare run next to a parallel suite, observed live):
+    one that cleared or rebuilt it while another read it handed the
+    reader a wrong answer. The two tables are one ``catalog.artifact``:
+
+    - a stage left by a crashed build is never adopted: the next call
+      builds its own stage and publishes that;
+    - a process whose catalog does not know the tables ADOPTS the
+      published directory via CREATE TABLE ... CLUSTERED BY ...
+      LOCATION: no file touched, bucket spec recovered from the
+      saveAsTable file naming, zero-exchange join property intact."""
     import os
-    import shutil
-    from urllib.parse import urlparse
+    import tempfile
 
-    from yc_yq_airflow_etl_spark.plans.analytics import (
-        _adopt_or_build_bucketed,
-    )
+    from pyspark.sql.readwriter import DataFrameWriter
 
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    for tbl in ("b_adopt_src", "b_adopt_dst", "b_adopt_crash"):
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        shutil.rmtree(os.path.join(wh, tbl), ignore_errors=True)
+    from yc_yq_airflow_etl_spark import catalog
+    from yc_yq_airflow_etl_spark.plans.analytics import ensure_bucketed_demo
 
-    src = testdata["orders"].select("o_orderkey", "o_orderstatus")
-    write_bucketed(src, "b_adopt_src", "o_orderkey", 8, sort_by="o_orderkey")
+    sf_dir = "/root/testdata/sf0.001"
+    tag = catalog.data_tag(sf_dir, "lineitem", "orders")
+    names = (f"bdemo_lineitem_{tag}", f"bdemo_orders_{tag}")
+    root = tmp_path / "spark_graft_artifacts"
+    published = root / f"bucketed_demo-{tag}"
 
-    # simulate "another process already built it": complete dir on
-    # disk, nothing in this catalog
-    shutil.copytree(
-        os.path.join(wh, "b_adopt_src"), os.path.join(wh, "b_adopt_dst")
-    )
-    before = {
-        f: os.path.getmtime(os.path.join(wh, "b_adopt_dst", f))
-        for f in os.listdir(os.path.join(wh, "b_adopt_dst"))
-    }
-    _adopt_or_build_bucketed(
-        spark,
-        "b_adopt_dst",
-        lambda: (_ for _ in ()).throw(AssertionError("must not rebuild")),
-        bucket_by="o_orderkey",
-        sort_by="o_orderkey",
-    )
-    after = {
-        f: os.path.getmtime(os.path.join(wh, "b_adopt_dst", f))
-        for f in os.listdir(os.path.join(wh, "b_adopt_dst"))
-    }
-    assert after == before, "adoption must not touch a single file"
-    assert spark.table("b_adopt_dst").count() == src.count()
-    # the adopted table is REALLY bucketed: SMJ join against the
-    # originally-written twin plans with zero Exchange
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    def fresh_process():
+        monkeypatch.setattr(catalog, "_ARTIFACTS", {})
+        for t in names:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+    def files():
+        return {
+            os.path.join(d, f): os.path.getmtime(os.path.join(d, f))
+            for d, _, fs in os.walk(published)
+            for f in fs
+        }
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     try:
-        j = (
-            spark.table("b_adopt_dst")
-            .hint("merge")
-            .join(
-                spark.table("b_adopt_src").select(
-                    F.col("o_orderkey"),
-                    F.col("o_orderstatus").alias("o2"),
+        fresh_process()
+        # a crashed build's torn stage sits next to the final path
+        torn = root / f"bucketed_demo-{tag}.stage-1-crashed" / "lineitem"
+        torn.mkdir(parents=True)
+        (torn / "part-junk.parquet").write_text("torn")
+        assert ensure_bucketed_demo(spark, sf_dir) == names
+        assert (torn / "part-junk.parquet").read_text() == "torn"
+        assert spark.table(names[0]).count() == testdata["lineitem"].count()
+        assert spark.table(names[1]).count() == testdata["orders"].count()
+
+        # another process built it: complete dir on disk, nothing in
+        # this catalog, and no write may run
+        fresh_process()
+        before = files()
+        for meth in ("parquet", "save", "saveAsTable"):
+            monkeypatch.setattr(
+                DataFrameWriter, meth,
+                lambda *a, **k: (_ for _ in ()).throw(
+                    AssertionError("must not rebuild")
                 ),
-                "o_orderkey",
             )
-        )
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan[:2000]
+        assert ensure_bucketed_demo(spark, sf_dir) == names
+        assert files() == before, "adoption must not touch a single file"
+        assert spark.table(names[1]).count() == testdata["orders"].count()
+        # the adopted tables are REALLY bucketed: SMJ join plans with
+        # zero Exchange
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            j = (
+                spark.table(names[0])
+                .hint("merge")
+                .join(
+                    spark.table(names[1]),
+                    F.col("l_orderkey") == F.col("o_orderkey"),
+                )
+            )
+            plan = j._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange" not in plan, plan[:2000]
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10m")
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10m")
-
-    # an INCOMPLETE dir (no _SUCCESS) is cleared and rebuilt
-    os.makedirs(os.path.join(wh, "b_adopt_crash"))
-    with open(os.path.join(wh, "b_adopt_crash", "part-junk.parquet"), "w") as fh:
-        fh.write("torn")
-    _adopt_or_build_bucketed(
-        spark,
-        "b_adopt_crash",
-        lambda: src,
-        bucket_by="o_orderkey",
-        sort_by="o_orderkey",
-    )
-    assert spark.table("b_adopt_crash").count() == src.count()
-
-    for tbl in ("b_adopt_src", "b_adopt_dst", "b_adopt_crash"):
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        shutil.rmtree(os.path.join(wh, tbl), ignore_errors=True)
+        # later callers register the tables from the shared directory
+        for t in names:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_salting_and_chunking_param_guards(spark, testdata):

@@ -17,6 +17,11 @@ cluster it is a JDBC descriptor with partitioned-read options.
 
 from __future__ import annotations
 
+import hashlib
+import os
+import shutil
+import tempfile
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -154,7 +159,6 @@ def _events_ts_unit(path: str) -> tuple[str, bool]:
     ns epochs are ~1e18, µs ~1e15 (three orders of magnitude apart —
     unambiguous for any date after 1973)."""
     import glob
-    import os
 
     import pyarrow.parquet as pq
 
@@ -248,19 +252,68 @@ def load_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return out
 
 
-def data_tag(sf_dir: str, table: str) -> str:
-    """Cache tag for demo artifacts derived from a testdata table —
-    tied to the dataset GENERATION, not just its path: the source
+def data_tag(sf_dir: str, *tables: str) -> str:
+    """Cache tag for demo artifacts derived from testdata tables —
+    tied to the dataset GENERATION, not just its path: each source
     parquet's mtime is hashed in, so artifacts parked in the (round-
     surviving) temp dir are rebuilt when the fixture generator
     refreshes the data under the same path instead of silently serving
     stale rows against a fresh oracle."""
-    import hashlib
-    import os
-
     key = os.path.abspath(sf_dir)
-    try:
-        mt = int(os.path.getmtime(os.path.join(key, f"{table}.parquet")))
-    except OSError:
-        mt = 0
-    return hashlib.md5(f"{key}:{mt}".encode()).hexdigest()[:12]
+    parts = [key]
+    for table in tables:
+        try:
+            mt = int(os.path.getmtime(os.path.join(key, f"{table}.parquet")))
+        except OSError:
+            mt = 0
+        parts.append(str(mt))
+    return hashlib.md5(":".join(parts).encode()).hexdigest()[:12]
+
+
+_ARTIFACTS: dict[tuple[str, str], str] = {}
+
+
+def artifact(
+    name: str, sf_dir: str, tables: tuple[str, ...], build: Callable[[str], None]
+) -> str:
+    """Directory of the durable fixture ``name`` derived from
+    ``sf_dir``'s ``tables``, built at most once per dataset generation
+    and memoized per process.
+
+    The directory is ``<tempdir>/spark_graft_artifacts/<name>-<tag>``
+    (``tag`` = :func:`data_tag` of ``tables``), and it exists only
+    complete: ``build(stage)`` writes the fixture into a fresh private
+    stage directory beside it, and one ``os.rename`` publishes the
+    stage. The rename is the commit, so no marker file or completion
+    rule exists and a reader never sees a half-built fixture.
+
+    - A published directory is adopted as is.
+    - A process that loses the rename to a concurrent builder drops
+      its stage and adopts the winner's directory (same tag, same
+      content).
+    - If ``build`` raises, its stage is removed, nothing is memoized
+      and the error propagates: the next call builds from scratch.
+      A stage left by a killed process is never adopted (nor swept).
+    """
+    key = (name, os.path.abspath(sf_dir))
+    path = _ARTIFACTS.get(key)
+    if path is not None:
+        return path
+    root = os.path.join(tempfile.gettempdir(), "spark_graft_artifacts")
+    path = os.path.join(root, f"{name}-{data_tag(sf_dir, *tables)}")
+    if not os.path.isdir(path):
+        os.makedirs(root, exist_ok=True)
+        stage = tempfile.mkdtemp(
+            prefix=f"{os.path.basename(path)}.stage-{os.getpid()}-", dir=root
+        )
+        try:
+            build(stage)
+            try:
+                os.rename(stage, path)
+            except OSError:  # a non-empty directory is already there
+                if not os.path.isdir(path):
+                    raise
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+    _ARTIFACTS[key] = path
+    return path

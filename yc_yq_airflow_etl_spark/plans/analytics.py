@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalar import round6
-from ..catalog import data_tag, load_testdata
+from ..catalog import artifact, data_tag, load_testdata
 from ..operators.checkpoints import materialize
 from ..schemas import EVENT_PROPS
 from ..session import local_frame
@@ -2253,12 +2253,9 @@ GROUP BY 1 ORDER BY user_id
 """
 
 
-_ZORDER_DEMO_CACHE: dict[str, tuple[str, str]] = {}
-
-
 def ensure_zorder_demo(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Materialize (once per dataset, tempdir-keyed like the ANN
-    index) two physical layouts of the SAME lineitem rows:
+    """Materialize (once per dataset, one ``catalog.artifact``) two
+    physical layouts of the SAME lineitem rows:
 
     - ``clustered/``: Z-ordered on (l_quantity, l_extendedprice) via
       sources/zorder.write_zordered — every file covers a small
@@ -2271,26 +2268,18 @@ def ensure_zorder_demo(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     Returns (clustered_path, shuffled_path). The registered query
     reads only the clustered copy; the shuffled twin exists for the
     skipping-evidence test (tests/test_scale_ops.py) and the bench."""
-    import hashlib
     import os
-    import tempfile
 
     from ..sources.zorder import write_zordered
 
-    key = os.path.abspath(sf_dir)
-    cached = _ZORDER_DEMO_CACHE.get(key)
-    if cached is not None:
-        return cached
-    tag = data_tag(sf_dir, "lineitem")
-    base = os.path.join(tempfile.gettempdir(), f"zorder_demo_{tag}")
-    cdir = os.path.join(base, "clustered")
-    sdir = os.path.join(base, "shuffled")
-    if not (
-        os.path.exists(os.path.join(cdir, "_SUCCESS"))
-        and os.path.exists(os.path.join(sdir, "_SUCCESS"))
-    ):
+    def build(stage: str) -> None:
         li = load_testdata(spark, sf_dir)["lineitem"]
-        write_zordered(li, cdir, ["l_quantity", "l_extendedprice"], num_files=8)
+        write_zordered(
+            li,
+            os.path.join(stage, "clustered"),
+            ["l_quantity", "l_extendedprice"],
+            num_files=8,
+        )
         (
             li.withColumn(
                 "_r",
@@ -2306,10 +2295,11 @@ def ensure_zorder_demo(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .sortWithinPartitions("_r")
             .drop("_r")
             .write.mode("overwrite")
-            .parquet(sdir)
+            .parquet(os.path.join(stage, "shuffled"))
         )
-    _ZORDER_DEMO_CACHE[key] = (cdir, sdir)
-    return cdir, sdir
+
+    base = artifact("zorder_demo", sf_dir, ("lineitem",), build)
+    return os.path.join(base, "clustered"), os.path.join(base, "shuffled")
 
 
 def zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3257,28 +3247,15 @@ FROM customer ORDER BY c_custkey
 """
 
 
-_MANIFEST_DEMO_CACHE: dict[str, str] = {}
-
-
 def ensure_manifest_demo(spark: SparkSession, sf_dir: str) -> str:
     """Materialize (once per dataset) a three-snapshot ManifestTable
     from lineitem year slices: v0 = overwrite(ship year < 1997),
     v1 = append(1997), v2 = append(1998). Gives the registered query
     below a deterministic time-travel surface."""
-    import hashlib
-    import os
-    import tempfile
-
     from ..sources.manifest import ManifestTable
 
-    key = os.path.abspath(sf_dir)
-    cached = _MANIFEST_DEMO_CACHE.get(key)
-    if cached is not None:
-        return cached
-    tag = data_tag(sf_dir, "lineitem")
-    path = os.path.join(tempfile.gettempdir(), f"manifest_demo_{tag}")
-    mt = ManifestTable(path)
-    if mt.current_version(spark) != 2:
+    def build(stage: str) -> None:
+        mt = ManifestTable(stage)
         li = load_testdata(spark, sf_dir)["lineitem"].select(
             "l_orderkey", "l_linenumber", "l_quantity", "l_shipdate"
         )
@@ -3286,11 +3263,8 @@ def ensure_manifest_demo(spark: SparkSession, sf_dir: str) -> str:
         mt.overwrite(li.filter(yr < 1997))
         mt.append(li.filter(yr == 1997))
         mt.append(li.filter(yr == 1998))
-    _MANIFEST_DEMO_CACHE[key] = path
-    return path
 
-
-_MANIFEST_STATS_DEMO_CACHE: dict[str, str] = {}
+    return artifact("manifest_demo", sf_dir, ("lineitem",), build)
 
 
 def ensure_manifest_stats_demo(spark: SparkSession, sf_dir: str) -> str:
@@ -3299,43 +3273,10 @@ def ensure_manifest_stats_demo(spark: SparkSession, sf_dir: str) -> str:
     each, with per-file [min, max] of l_orderkey recorded in the
     manifest (stat_cols) — the deterministic surface for the
     manifest-level data-skipping query below."""
-    import hashlib
-    import os
-    import tempfile
-
     from ..sources.manifest import ManifestTable
 
-    key = os.path.abspath(sf_dir)
-    cached = _MANIFEST_STATS_DEMO_CACHE.get(key)
-    if cached is not None:
-        return cached
-    tag = data_tag(sf_dir, "lineitem")
-    path = os.path.join(tempfile.gettempdir(), f"manifest_stats_demo_{tag}")
-    mt = ManifestTable(path, stat_cols=("l_orderkey",))
-
-    def _demo_complete() -> bool:
-        # completion sentinel: the LIVE snapshot holds the 4 quartile
-        # files with l_orderkey ranges recorded AND the merge-on-read
-        # delete's deletion vectors attached. Checking content (not a
-        # literal version number) means a crashed partial build — or a
-        # table built by an older fixture without the DV step — is
-        # rebuilt exactly once and a healthy table is never rebuilt.
-        v = mt.current_version(spark)
-        if v is None:
-            return False
-        try:
-            m = mt._manifest(spark, v)
-        except Exception:
-            return False
-        files = m.get("files", [])
-        stats = m.get("stats", {})
-        return (
-            len(files) == 4
-            and all(stats.get(f, {}).get("l_orderkey") for f in files)
-            and bool(m.get("dvs"))
-        )
-
-    if not _demo_complete():
+    def build(stage: str) -> None:
+        mt = ManifestTable(stage, stat_cols=("l_orderkey",))
         li = load_testdata(spark, sf_dir)["lineitem"].select(
             "l_orderkey", "l_quantity"
         )
@@ -3351,8 +3292,8 @@ def ensure_manifest_stats_demo(spark: SparkSession, sf_dir: str) -> str:
         # files stay BY NAME — the pruned-scan query pins both the
         # unchanged layout and the subtracted rows against the oracle
         mt.delete_where(spark, "l_quantity > 45", mode="merge-on-read")
-    _MANIFEST_STATS_DEMO_CACHE[key] = path
-    return path
+
+    return artifact("manifest_stats_demo", sf_dir, ("lineitem",), build)
 
 
 def manifest_stats_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3475,43 +3416,16 @@ ORDER BY version
 """
 
 
-_MANIFEST_BUCKET_DEMO_CACHE: dict[str, str] = {}
-
-
 def ensure_manifest_bucket_demo(spark: SparkSession, sf_dir: str) -> str:
     """Materialize (once per dataset generation) a BUCKET-CLUSTERED
     ManifestTable: orders committed as 8 files, one per
     xxhash64(o_custkey) % 8 bucket, with each file's bucket set
     recorded in the manifest — the layout under the bucket-pruned
     scan query below."""
-    import os
-    import tempfile
-
     from ..sources.manifest import ManifestTable
 
-    key = os.path.abspath(sf_dir)
-    cached = _MANIFEST_BUCKET_DEMO_CACHE.get(key)
-    if cached is not None:
-        return cached
-    tag = data_tag(sf_dir, "orders")
-    path = os.path.join(tempfile.gettempdir(), f"manifest_bucket_demo_{tag}")
-    mt = ManifestTable(path, bucket_cols=(("o_custkey", 8),))
-
-    def _complete() -> bool:
-        v = mt.current_version(spark)
-        if v is None:
-            return False
-        try:
-            m = mt._manifest(spark, v)
-        except Exception:
-            return False
-        files = m.get("files", [])
-        stats = m.get("stats", {})
-        return len(files) == 8 and all(
-            stats.get(f, {}).get("bucket:o_custkey") is not None for f in files
-        )
-
-    if not _complete():
+    def build(stage: str) -> None:
+        mt = ManifestTable(stage, bucket_cols=(("o_custkey", 8),))
         o = load_testdata(spark, sf_dir)["orders"].select(
             "o_orderkey", "o_custkey", "o_totalprice"
         )
@@ -3519,8 +3433,8 @@ def ensure_manifest_bucket_demo(spark: SparkSession, sf_dir: str) -> str:
         for i in range(8):
             part = o.filter(bexpr == i).coalesce(1)
             (mt.overwrite if i == 0 else mt.append)(part)
-    _MANIFEST_BUCKET_DEMO_CACHE[key] = path
-    return path
+
+    return artifact("manifest_bucket_demo", sf_dir, ("orders",), build)
 
 
 def manifest_bucket_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3576,9 +3490,6 @@ WHERE o_custkey = greatest(m // 3, 1)
 """
 
 
-_MANIFEST_SPECEVO_DEMO_CACHE: dict[str, str] = {}
-
-
 def ensure_manifest_specevo_demo(spark: SparkSession, sf_dir: str) -> str:
     """Materialize (once per dataset generation) a ManifestTable whose
     PARTITION/BUCKET SPEC EVOLVED mid-history: the even-orderkey half
@@ -3587,36 +3498,11 @@ def ensure_manifest_specevo_demo(spark: SparkSession, sf_dir: str) -> str:
     files by an instance configured with ``bucket_cols`` — Iceberg's
     spec-evolution situation: one snapshot, files written under two
     different specs."""
-    import os
-    import tempfile
-
     from ..sources.manifest import ManifestTable
 
-    key = os.path.abspath(sf_dir)
-    cached = _MANIFEST_SPECEVO_DEMO_CACHE.get(key)
-    if cached is not None:
-        return cached
-    tag = data_tag(sf_dir, "orders")
-    path = os.path.join(tempfile.gettempdir(), f"manifest_specevo_demo_{tag}")
-    legacy = ManifestTable(path)
-    evolved = ManifestTable(path, bucket_cols=(("o_custkey", 8),))
-
-    def _complete() -> bool:
-        v = evolved.current_version(spark)
-        if v is None:
-            return False
-        try:
-            m = evolved._manifest(spark, v)
-        except Exception:
-            return False
-        files = m.get("files", [])
-        stats = m.get("stats", {})
-        tracked = [
-            f for f in files if stats.get(f, {}).get("bucket:o_custkey") is not None
-        ]
-        return len(files) == 10 and len(tracked) == 8
-
-    if not _complete():
+    def build(stage: str) -> None:
+        legacy = ManifestTable(stage)
+        evolved = ManifestTable(stage, bucket_cols=(("o_custkey", 8),))
         o = load_testdata(spark, sf_dir)["orders"].select(
             "o_orderkey", "o_custkey", "o_totalprice"
         )
@@ -3625,8 +3511,8 @@ def ensure_manifest_specevo_demo(spark: SparkSession, sf_dir: str) -> str:
         bexpr = F.pmod(F.xxhash64(F.col("o_custkey").cast("bigint")), F.lit(8))
         for i in range(8):
             evolved.append(odd.filter(bexpr == i).coalesce(1))
-    _MANIFEST_SPECEVO_DEMO_CACHE[key] = path
-    return path
+
+    return artifact("manifest_specevo_demo", sf_dir, ("orders",), build)
 
 
 def manifest_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3752,9 +3638,6 @@ ORDER BY attempt
 """
 
 
-_CDF_DEMO_CACHE: dict[str, str] = {}
-
-
 def ensure_cdf_demo(spark: SparkSession, sf_dir: str) -> str:
     """Materialize (once per dataset) the CDF demo's MERGED table: the
     quartile base cloned and upserted with the merge query's exact
@@ -3763,33 +3646,18 @@ def ensure_cdf_demo(spark: SparkSession, sf_dir: str) -> str:
     already times) stays off this query's clock; the timed part is
     the table_changes READ itself. Versions: base at v3, merge at v4.
     """
-    import os
     import shutil
-    import tempfile
 
     from ..sources.manifest import ManifestTable
 
-    key = os.path.abspath(sf_dir)
-    cached = _CDF_DEMO_CACHE.get(key)
-    if cached is not None:
-        return cached
-    # deterministic tagged path + validity check (same pattern as
-    # ensure_merge_base_demo): a FRESH process — the external driver's
-    # correctness/timing session included — finds the built fixture on
-    # disk instead of paying the clone+merge on the query's clock or
-    # leaking a new tempdir per process
-    tag = data_tag(sf_dir, "orders")
-    work = os.path.join(tempfile.gettempdir(), f"manifest_cdf_demo_{tag}", "t")
-    mt = ManifestTable(work, stat_cols=("o_orderkey",))
-    if mt.current_version(spark) != 4:  # base v0-3 + exactly one merge
-        shutil.rmtree(os.path.dirname(work), ignore_errors=True)
+    def build(stage: str) -> None:
         o = load_testdata(spark, sf_dir)["orders"].select(
             "o_orderkey", "o_totalprice"
         )
         m = int(o.agg(F.max("o_orderkey")).first()[0])
-        base_path = ensure_merge_base_demo(spark, sf_dir)
-        os.makedirs(os.path.dirname(work), exist_ok=True)
-        shutil.copytree(base_path, work)
+        shutil.copytree(
+            ensure_merge_base_demo(spark, sf_dir), stage, dirs_exist_ok=True
+        )
         ok = F.col("o_orderkey")
         lo, hi = m // 10, m // 5
         updates = (
@@ -3803,9 +3671,9 @@ def ensure_cdf_demo(spark: SparkSession, sf_dir: str) -> str:
                 )
             )
         )
-        mt.merge(updates, "o_orderkey")
-    _CDF_DEMO_CACHE[key] = work
-    return work
+        ManifestTable(stage, stat_cols=("o_orderkey",)).merge(updates, "o_orderkey")
+
+    return artifact("cdf_demo", sf_dir, ("orders",), build)
 
 
 def manifest_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3993,32 +3861,16 @@ ORDER BY version
 """
 
 
-_SCHEMA_EVO_DEMO_CACHE: dict[str, str] = {}
-
-
 def ensure_schema_evolution_demo(spark: SparkSession, sf_dir: str) -> str:
     """Materialize (once per dataset) a two-snapshot ADD-COLUMN
     evolution surface: v0 commits the low half of customer WITHOUT
     ``c_mktsegment``; v1 appends the high half WITH it. Reads never
     mutate the table, so the build is cacheable like the other demo
     fixtures."""
-    import os
-    import shutil
-    import tempfile
-
     from ..sources.manifest import ManifestTable
 
-    key = os.path.abspath(sf_dir)
-    cached = _SCHEMA_EVO_DEMO_CACHE.get(key)
-    if cached is not None:
-        return cached
-    tag = data_tag(sf_dir, "customer")
-    path = os.path.join(tempfile.gettempdir(), f"manifest_schemaevo_{tag}")
-    mt = ManifestTable(path)
-    v = mt.current_version(spark)
-    if v != 1:
-        if v is not None:
-            shutil.rmtree(path, ignore_errors=True)
+    def build(stage: str) -> None:
+        mt = ManifestTable(stage)
         c = load_testdata(spark, sf_dir)["customer"]
         k = int(c.agg(F.max("c_custkey")).first()[0]) // 2
         ck = F.col("c_custkey")
@@ -4026,8 +3878,8 @@ def ensure_schema_evolution_demo(spark: SparkSession, sf_dir: str) -> str:
         mt.append(
             c.filter(ck > k).select("c_custkey", "c_acctbal", "c_mktsegment")
         )
-    _SCHEMA_EVO_DEMO_CACHE[key] = path
-    return path
+
+    return artifact("schema_evolution_demo", sf_dir, ("customer",), build)
 
 
 def manifest_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4150,9 +4002,6 @@ SELECT 3 AS n_deleted, 1 AS orphan_removed, 1 AS live_files_kept,
 """
 
 
-_MERGE_BASE_CACHE: dict[str, str] = {}
-
-
 def ensure_merge_base_demo(spark: SparkSession, sf_dir: str) -> str:
     """Materialize (once per dataset) the merge demo's IMMUTABLE base:
     orders committed as four orderkey-quartile files with recorded key
@@ -4161,31 +4010,10 @@ def ensure_merge_base_demo(spark: SparkSession, sf_dir: str) -> str:
     is never merged into directly; the clone is a metadata-scale file
     copy (4 files), not 4 Spark write jobs, which keeps the fixture
     cost out of the timed query."""
-    import os
-    import shutil
-    import tempfile
-
     from ..sources.manifest import ManifestTable
 
-    key = os.path.abspath(sf_dir)
-    cached = _MERGE_BASE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    tag = data_tag(sf_dir, "orders")
-    path = os.path.join(tempfile.gettempdir(), f"manifest_merge_base_{tag}")
-    mt = ManifestTable(path, stat_cols=("o_orderkey",))
-    v = mt.current_version(spark)
-    if v == 3:
-        # a cached base built before per-file row counts existed would
-        # silently keep the merge on the legacy recount fallback —
-        # rebuild it so the bench measures the metadata-only path
-        stats = mt._manifest(spark, 3).get("stats", {})
-        if not all("rows:" in s for s in stats.values()):
-            v = None
-            shutil.rmtree(path, ignore_errors=True)
-    if v != 3:
-        if v is not None:  # partial/stale build: start clean
-            shutil.rmtree(path, ignore_errors=True)
+    def build(stage: str) -> None:
+        mt = ManifestTable(stage, stat_cols=("o_orderkey",))
         o = load_testdata(spark, sf_dir)["orders"].select(
             "o_orderkey", "o_totalprice"
         )
@@ -4202,8 +4030,8 @@ def ensure_merge_base_demo(spark: SparkSession, sf_dir: str) -> str:
         mt.append(o.filter((ok > b1) & (ok <= b2)).coalesce(1))
         mt.append(o.filter((ok > b2) & (ok <= b3)).coalesce(1))
         mt.append(o.filter(ok > b3).coalesce(1))
-    _MERGE_BASE_CACHE[key] = path
-    return path
+
+    return artifact("merge_base_demo", sf_dir, ("orders",), build)
 
 
 def manifest_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5415,97 +5243,48 @@ FROM est ORDER BY true_cnt DESC, user_id
 """
 
 
-_BUCKETED_DEMO_CACHE: dict[str, tuple[str, str]] = {}
-
-
 def ensure_bucketed_demo(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Materialize (once per dataset+warehouse) lineitem and orders as
+    """Materialize (once per dataset) lineitem and orders as
     SAME-bucketed catalog tables on the join key — the pay-the-shuffle-
     once-at-write-time layout for repeated fact ⋈ fact joins
-    (sources/bucketing.py). Returns the two table names."""
-    import hashlib
+    (sources/bucketing.py). Returns the two table names.
+
+    Both tables are built into one ``catalog.artifact`` and registered
+    only from the published directory, by ``CREATE TABLE … CLUSTERED
+    BY … LOCATION``: Spark recovers each file's bucket id from the
+    saveAsTable naming scheme, so a process that adopts another's
+    build touches no file, and the plan audit's zero-exchange check
+    would go red if adoption ever degraded a table to unbucketed."""
     import os
 
     from ..sources.bucketing import write_bucketed
 
-    key = os.path.abspath(sf_dir)
-    cached = _BUCKETED_DEMO_CACHE.get(key)
-    if cached is not None:
-        return cached
-    tag = data_tag(sf_dir, "lineitem")
-    lt, ot = f"bdemo_lineitem_{tag}", f"bdemo_orders_{tag}"
-    t = load_testdata(spark, sf_dir)
+    cols = {
+        "lineitem": ("l_orderkey", "l_extendedprice", "l_discount"),
+        "orders": ("o_orderkey", "o_orderstatus"),
+    }
 
-    if not spark.catalog.tableExists(lt):
-        _adopt_or_build_bucketed(
-            spark,
-            lt,
-            lambda: t["lineitem"].select(
-                "l_orderkey", "l_extendedprice", "l_discount"
-            ),
-            bucket_by="l_orderkey",
-            sort_by="l_orderkey",
-        )
-    if not spark.catalog.tableExists(ot):
-        _adopt_or_build_bucketed(
-            spark,
-            ot,
-            lambda: t["orders"].select("o_orderkey", "o_orderstatus"),
-            bucket_by="o_orderkey",
-            sort_by="o_orderkey",
-        )
-    _BUCKETED_DEMO_CACHE[key] = (lt, ot)
-    return lt, ot
+    def build(stage: str) -> None:
+        t = load_testdata(spark, sf_dir)
+        for name, (key, *rest) in cols.items():
+            write_bucketed(
+                t[name].select(key, *rest), f"bdemo_{name}_stage", key, 8,
+                sort_by=key, path=os.path.join(stage, name),
+            )
+            spark.sql(f"DROP TABLE bdemo_{name}_stage")
 
-
-def _adopt_or_build_bucketed(
-    spark: SparkSession, table: str, df_fn, bucket_by: str, sort_by: str
-) -> None:
-    """Register-or-rebuild one bucketed demo table — ADOPTING a
-    complete on-disk build instead of clobbering it (r16).
-
-    The warehouse dir outlives the in-memory catalog across
-    processes, and the old logic rmtree'd any dir its own catalog
-    didn't know and rebuilt — so a second engine process (the
-    full-value-compare run next to a parallel suite, observed live
-    this round) deleted a GOOD directory while the first process was
-    mid-read of it: a silent wrong-answer window for every
-    bucketed-table query. A dir carrying the parquet writer's
-    ``_SUCCESS`` marker is a complete deterministic build (same
-    generation tag ⇒ byte-identical content), so it is now adopted
-    via ``CREATE TABLE … CLUSTERED BY … LOCATION`` — Spark recovers
-    each file's bucket id from the saveAsTable naming scheme, and the
-    zero-exchange property is still pinned by the plan audit, which
-    would go red if adoption ever degraded the table to unbucketed.
-    Only an INCOMPLETE dir (no ``_SUCCESS``: a crashed build) is
-    cleared and rebuilt. Two processes racing the very first build of
-    a generation can still interleave saveAsTable staging — the
-    residual single-first-builder caveat, documented here; every
-    later process adopts."""
-    import os
-    import shutil
-    from urllib.parse import urlparse
-
-    from ..sources.bucketing import write_bucketed
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    loc = os.path.join(wh, table)
-    if os.path.exists(os.path.join(loc, "_SUCCESS")):
-        schema = spark.read.parquet(loc).schema
-        cols = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in schema.fields
-        )
-        spark.sql(
-            f"CREATE TABLE {table} ({cols}) USING parquet "
-            f"CLUSTERED BY ({bucket_by}) SORTED BY ({sort_by}) "
-            f"INTO 8 BUCKETS LOCATION '{loc}'"
-        )
-        return
-    if os.path.exists(loc):
-        shutil.rmtree(loc)
-    write_bucketed(
-        df_fn(), table, bucket_by=bucket_by, num_buckets=8, sort_by=sort_by
-    )
+    path = artifact("bucketed_demo", sf_dir, tuple(cols), build)
+    tag = data_tag(sf_dir, *cols)
+    for name, (key, *_) in cols.items():
+        table, loc = f"bdemo_{name}_{tag}", os.path.join(path, name)
+        if not spark.catalog.tableExists(table):
+            spark.sql(
+                f"CREATE TABLE {table} "
+                f"({spark.read.parquet(loc).schema.toDDL()}) USING parquet "
+                f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO 8 BUCKETS "
+                f"LOCATION '{loc}'"
+            )
+    return f"bdemo_lineitem_{tag}", f"bdemo_orders_{tag}"
 
 
 def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5552,31 +5331,19 @@ GROUP BY 1 ORDER BY o_orderstatus
 """
 
 
-_FORMATS_DEMO_CACHE: dict[str, str] = {}
-
-
 def ensure_formats_demo(spark: SparkSession, sf_dir: str) -> str:
     """Materialize (once per dataset) CSV and JSON copies of the
     nation table, exercising sources/formats.py's write path."""
-    import hashlib
     import os
-    import tempfile
 
     from ..sources.formats import write_table
 
-    key = os.path.abspath(sf_dir)
-    cached = _FORMATS_DEMO_CACHE.get(key)
-    if cached is not None:
-        return cached
-    tag = data_tag(sf_dir, "nation")
-    base = os.path.join(tempfile.gettempdir(), f"formats_demo_{tag}")
-    nation = load_testdata(spark, sf_dir)["nation"]
-    for fmt in ("csv", "json"):
-        d = os.path.join(base, fmt)
-        if not os.path.exists(os.path.join(d, "_SUCCESS")):
-            write_table(nation.coalesce(1), d, fmt)
-    _FORMATS_DEMO_CACHE[key] = base
-    return base
+    def build(stage: str) -> None:
+        nation = load_testdata(spark, sf_dir)["nation"]
+        for fmt in ("csv", "json"):
+            write_table(nation.coalesce(1), os.path.join(stage, fmt), fmt)
+
+    return artifact("formats_demo", sf_dir, ("nation",), build)
 
 
 def multi_format_union(spark: SparkSession, sf_dir: str) -> DataFrame:

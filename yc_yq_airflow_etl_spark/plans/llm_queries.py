@@ -15,7 +15,7 @@ import contextvars
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import data_tag, load_testdata
+from ..catalog import artifact, data_tag, load_testdata
 from ..functions.scalar import round6
 from ..functions.text import (
     LANG_ORDER,
@@ -443,76 +443,38 @@ ORDER BY cosine DESC, vec_id ASC LIMIT 10
 )
 
 
-_ANN_CENTROID_CACHE: dict[str, list[list[int]]] = {}
-
-
 def _ensure_ann_index(spark: SparkSession, sf_dir: str):
     """Build (once per dataset) and read back the materialized ANN
     index over ``embeddings``: integer micro-unit k-means on a
     deterministic md5-sampled quarter of the table, cluster id as a
     Hive partition column, hyperplane sketch as a stored int column.
-    Returns (index DataFrame, centroids). The index location is keyed
-    by source dir — the testdata is immutable, so every query run
-    after the first reuses the files. The trained centroids persist
-    NEXT TO the index (tiny JSON — they are exact integer vectors):
-    a fresh session with an existing index loads them instead of
-    re-running the k-means jobs (the training pass measured ~7 s per
-    session at sf0.1, dwarfing every probe it serves). Coherence is
-    by determinism — same immutable source ⇒ bit-identical centroids
-    — so a stale-file race can only rewrite equal bytes."""
-    import hashlib
+    Returns (index DataFrame, centroids). The index and its trained
+    centroids (tiny JSON — they are exact integer vectors) are one
+    ``catalog.artifact``: a fresh session finds both on disk and
+    loads the centroids instead of re-running the k-means jobs (the
+    training pass measured ~7 s per session at sf0.1, dwarfing every
+    probe it serves)."""
     import json
     import os
-    import tempfile
 
-    from ..operators.similarity import (
-        md5_bucket,
-        train_ivf_centroids,
-        write_ann_index,
-    )
+    def build(stage: str) -> None:
+        from ..operators.similarity import (
+            md5_bucket,
+            train_ivf_centroids,
+            write_ann_index,
+        )
 
-    t = load_testdata(spark, sf_dir)
-    emb = t["embeddings"]
-    key = os.path.abspath(sf_dir)
-    tag = data_tag(sf_dir, "embeddings")
-    idx = os.path.join(tempfile.gettempdir(), f"ann_index_{tag}")
-    cents_path = idx + "_centroids.json"
-    cents = _ANN_CENTROID_CACHE.get(key)
-    if cents is None and os.path.exists(cents_path):
-        with open(cents_path) as fh:
-            cents = [[int(x) for x in c] for c in json.load(fh)]
-        _ANN_CENTROID_CACHE[key] = cents
-    if cents is None:
+        emb = load_testdata(spark, sf_dir)["embeddings"]
         sample = emb.filter(md5_bucket(F.col("vec_id"), 4) == 0)
         cents = train_ivf_centroids(sample, k_clusters=8, iters=2)
-        _ANN_CENTROID_CACHE[key] = cents
-    # our own commit sentinel, NOT Spark's _SUCCESS: the session runs
-    # partitionOverwriteMode=dynamic, and a dynamic partitioned
-    # overwrite never writes a root _SUCCESS — the old check was
-    # always false, so every query paid a full index rewrite (caught
-    # by test_ann_index_fresh_session_reuses_persisted_centroids).
-    # Local tempdir fixture, so os-level atomics suffice (production
-    # object-store indexes go through the manifest layer instead).
-    ready = os.path.join(idx, "_INDEX_READY")
-    if not os.path.exists(ready):
-        write_ann_index(emb, idx, cents)
-        tmp = f"{ready}.{os.getpid()}.tmp"
-        with open(tmp, "w") as fh:
-            fh.write("ok")
-        os.replace(tmp, ready)
-    if not os.path.exists(cents_path):
-        # per-process tmp name: concurrent sessions (bench + selfcheck
-        # sharing the tempdir) must not write through one tmp path —
-        # a shared name lets writer A rename B's half-written file
-        # into place (torn JSON for a third reader) and makes B's
-        # os.replace raise. Unique tmp + atomic replace is the
-        # standard publish; last writer wins with identical bytes
-        # (training is deterministic over the immutable source).
-        tmp = f"{cents_path}.{os.getpid()}.tmp"
-        with open(tmp, "w") as fh:
+        write_ann_index(emb, os.path.join(stage, "index"), cents)
+        with open(os.path.join(stage, "centroids.json"), "w") as fh:
             json.dump([[int(x) for x in c] for c in cents], fh)
-        os.replace(tmp, cents_path)
-    return spark.read.parquet(idx), cents
+
+    path = artifact("ann_index", sf_dir, ("embeddings",), build)
+    with open(os.path.join(path, "centroids.json")) as fh:
+        cents = json.load(fh)
+    return spark.read.parquet(os.path.join(path, "index")), cents
 
 
 def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -24,10 +24,16 @@ def write_bucketed(
     num_buckets: int = 16,
     sort_by: str | None = None,
     mode: str = "overwrite",
+    path: str | None = None,
 ) -> None:
+    """Write ``df`` as catalog table ``table`` bucketed by
+    ``bucket_by``: under the warehouse dir, or at ``path`` (an
+    external table, whose files a DROP TABLE keeps)."""
     writer = df.write.mode(mode).bucketBy(num_buckets, bucket_by)
     if sort_by:
         writer = writer.sortBy(sort_by)
+    if path:
+        writer = writer.option("path", path)
     writer.format("parquet").saveAsTable(table)
 
 
